@@ -120,671 +120,17 @@ def _q_episode_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-def _q_pagerank(spark, sf_dir):
-    from graphiti_spark.operators.centrality import pagerank
-
-    out = _graph(spark, sf_dir)
-    return pagerank(out.nodes, out.edges)
-
-
-def _q_triangle_count(spark, sf_dir):
-    from graphiti_spark.operators.centrality import triangle_count
-
-    out = _graph(spark, sf_dir)
-    return triangle_count(out.nodes, out.edges)
-
-
-def _q_clustering_coefficient(spark, sf_dir):
-    from graphiti_spark.operators.centrality import clustering_coefficient
-
-    out = _graph(spark, sf_dir)
-    return clustering_coefficient(out.nodes, out.edges)
-
-
-def _q_kcore(spark, sf_dir):
-    """k-core membership over the canonical entity graph (iterative
-    peeling, fixed unroll — centrality.kcore)."""
-    from graphiti_spark.operators.centrality import kcore
-
-    out = _graph(spark, sf_dir)
-    return kcore(out.nodes, out.edges)
-
-
-def _q_interleave_profile(spark, sf_dir):
-    """Per-episode modality structure of the interleaved span table
-    (runs, token counts, contract booleans — interleave.interleave_
-    profile; pure array algebra, no explode/shuffle)."""
-    from graphiti_spark.operators.interleave import interleave_profile
-
-    return interleave_profile(synthesize_episodes(spark, sf_dir))
-
-
-def _q_pack_interleaved(spark, sf_dir):
-    """Interleaved-aware sequence packing: text tokens + fixed media
-    charge per span, episodes atomic, one stream Exchange
-    (interleave.pack_interleaved)."""
-    from graphiti_spark.operators.interleave import pack_interleaved
-
-    return pack_interleaved(synthesize_episodes(spark, sf_dir))
-
-
-def _q_interleave_summary(spark, sf_dir):
-    """Per-tenant rollup of the interleaved-span profile (media
-    fraction, text-run maxima, contract violations —
-    interleave.interleave_summary)."""
-    from graphiti_spark.operators.interleave import interleave_summary
-
-    return interleave_summary(synthesize_episodes(spark, sf_dir))
-
-
-def _q_token_kmv(spark, sf_dir):
-    """Per-source distinct-vocabulary estimate via a K-Minimum-Values
-    sketch (docops.token_cardinality). k=16 at this scale so the
-    ESTIMATE branch (not just the exact small-group path) is what the
-    oracle verifies bit-for-bit."""
-    from graphiti_spark.operators.docops import token_cardinality
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return token_cardinality(docs, k=16)
-
-
-PPR_SEEDS = [("g0", "Globex"), ("g0", "J. Smith"), ("g1", "Globex")]
-
-# GNN-export split cutoffs / diff instants (fact years span 2015-2024;
-# shared literals so engine and oracle draw the same boundaries)
-SPLIT_TRAIN_END = "2019-01-01 00:00:00"
-SPLIT_VALID_END = "2022-01-01 00:00:00"
-# eval cutoff for link_pred_eval: early enough that post-cutoff pairs
-# include genuinely NEW pairs (later cutoffs leave an empty test set —
-# the fixture re-asserts most pairs across years)
-EVAL_TRAIN_END = "2016-01-01 00:00:00"
-DIFF_T1 = "2017-06-01 00:00:00"
-DIFF_T2 = "2022-06-01 00:00:00"
-
-
-def _q_gnn_nodes(spark, sf_dir):
-    """Contiguous per-group node ids over the canonical entity set —
-    the id space a GNN trainer embeds (gnn.node_index)."""
-    from graphiti_spark.operators.gnn import node_index
-
-    out = _graph(spark, sf_dir)
-    return node_index(out.nodes)
-
-
-def _q_gnn_edges(spark, sf_dir):
-    """COO edge index in contiguous ids + dense relation vocabulary
-    (gnn.edge_index)."""
-    from graphiti_spark.operators.gnn import edge_index
-
-    out = _graph(spark, sf_dir)
-    return edge_index(out.nodes, out.edges)
-
-
-def _q_gnn_negatives(spark, sf_dir):
-    """Deterministic md5-ranked filtered negative samples for
-    link-prediction training (gnn.negative_edges)."""
-    from graphiti_spark.operators.gnn import negative_edges
-
-    out = _graph(spark, sf_dir)
-    return negative_edges(out.nodes, out.edges, n_neg=3)
-
-
-def _q_random_walks(spark, sf_dir):
-    """Deterministic DeepWalk corpus: md5-derived uniform walks over
-    the undirected canonical graph (gnn.random_walks)."""
-    from graphiti_spark.operators.gnn import random_walks
-
-    out = _graph(spark, sf_dir)
-    return random_walks(out.edges, walk_len=4, n_walks=2)
-
-
-def _q_biased_walks(spark, sf_dir):
-    """node2vec second-order biased walks (integer weights, md5
-    cumulative pick — gnn.biased_walks). max_deg=3 binds on the
-    fixture graph (max degree 5), so the hub-cap path — md5-sampled
-    candidate subset per over-cap source — is exercised and
-    value-oracled end to end, not just the exact path."""
-    from graphiti_spark.operators.gnn import biased_walks
-
-    out = _graph(spark, sf_dir)
-    return biased_walks(out.edges, walk_len=3, n_walks=1, max_deg=3)
-
-
-def _q_skipgram_pairs(spark, sf_dir):
-    """Skip-gram co-occurrence counts from the walk corpus — the
-    node-embedding training pairs (gnn.skipgram_pairs)."""
-    from graphiti_spark.operators.gnn import random_walks, skipgram_pairs
-
-    out = _graph(spark, sf_dir)
-    return skipgram_pairs(random_walks(out.edges, walk_len=4, n_walks=2), window=2)
-
-
-def _q_sampled_neighborhood(spark, sf_dir):
-    """GraphSAGE fanout-sampled 2-hop neighborhoods of the PPR seed
-    entities (gnn.sampled_neighborhood; md5-ranked draws)."""
-    from graphiti_spark.operators.gnn import sampled_neighborhood
-
-    out = _graph(spark, sf_dir)
-    seeds = spark.createDataFrame(PPR_SEEDS, "group_id string, name string")
-    return sampled_neighborhood(out.edges, seeds, fanouts=(3, 2))
-
-
-def _q_link_pred_eval(spark, sf_dir):
-    """Filtered MRR / Hits@10 of the RA link-prediction proposer
-    against the post-cutoff future edges: train graph = assertions
-    before SPLIT_TRAIN_END, candidates = link_prediction_ra top-50 per
-    group on the train graph, test = new undirected pairs asserted
-    after the cutoff (gnn.ranking_metrics)."""
-    from graphiti_spark.operators.centrality import link_prediction_ra
-    from graphiti_spark.operators.gnn import ranking_metrics
-
-    out = _graph(spark, sf_dir)
-    te = F.lit(EVAL_TRAIN_END).cast("timestamp")
-    train = out.edges.where(F.col("valid_at").isNull() | (F.col("valid_at") < te))
-    tr_und = train.select(
-        "group_id",
-        F.least("subj_name", "obj_name").alias("src"),
-        F.greatest("subj_name", "obj_name").alias("dst"),
-    ).distinct()
-    test = (
-        out.edges.where(F.col("valid_at") >= te)
-        .select(
-            "group_id",
-            F.least("subj_name", "obj_name").alias("src"),
-            F.greatest("subj_name", "obj_name").alias("dst"),
-        )
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .join(tr_und, ["group_id", "src", "dst"], "left_anti")
-    )
-    cand = link_prediction_ra(out.nodes, train, k=50).select(
-        "group_id", F.col("a").alias("src"), F.col("b").alias("dst"),
-        F.col("ra_micro").alias("score"),
-    )
-    return ranking_metrics(cand, test, k=10)
-
-
-def _q_temporal_split(spark, sf_dir):
-    """Event-time train/valid/test split of the temporal assertions
-    with inductive unseen-endpoint flags (gnn.temporal_edge_split)."""
-    from graphiti_spark.operators.gnn import temporal_edge_split
-
-    out = _graph(spark, sf_dir)
-    return temporal_edge_split(out.edges, SPLIT_TRAIN_END, SPLIT_VALID_END)
-
-
-def _q_entity_timeline(spark, sf_dir):
-    """Per-entity chronological fact ledger — every assertion on both
-    endpoints' timelines with a dense seq (temporal.entity_timeline)."""
-    from graphiti_spark.operators.temporal import entity_timeline
-
-    out = _graph(spark, sf_dir)
-    return entity_timeline(out.edges)
-
-
-def _q_fact_diff(spark, sf_dir):
-    """Event-time delta of the KG between two as-of instants
-    (temporal.fact_diff)."""
-    from graphiti_spark.operators.temporal import fact_diff
-
-    out = _graph(spark, sf_dir)
-    return fact_diff(out.edges, DIFF_T1, DIFF_T2)
-
-
-# domain blocklist shared by engine and oracle (longest-suffix tie
-# exercised: news.site3.example.org matches two entries)
-BLOCKED_DOMAINS = [
-    "site1.example.com",
-    "site3.example.org",
-    "news.site3.example.org",
-]
-
-
-def _with_urls(docs: DataFrame) -> DataFrame:
-    """Deterministic synthetic URL per document (documents.parquet has
-    no URL column): triples {3k, 3k+1, 3k+2} share every component
-    derived from e = doc_id DIV 3, differing only in subdomain
-    (''/'www.'/'news.') and query decoration (utm_* / fbclid / none) —
-    so 3k and 3k+1 MUST collapse under canonicalization and 3k+2 must
-    not. Scheme/host case, default ports, fragments, and trailing
-    slashes are all exercised. The oracle rebuilds the same strings in
-    SQL."""
-    d = F.col("doc_id")
-    e3 = F.expr("doc_id DIV 3")  # shared triple key
-    sub = F.element_at(
-        F.array(F.lit(""), F.lit("www."), F.lit("news.")), (d % 3).cast("int") + 1
-    )
-    scheme = F.when(e3 % 5 == 0, F.lit("HTTPS")).otherwise(F.lit("https"))
-    label0 = F.concat(F.lit("site"), (e3 % 20).cast("string"))
-    label = F.when(e3 % 7 == 0, F.upper(label0)).otherwise(label0)
-    tld = F.when(e3 % 2 == 0, F.lit("com")).otherwise(F.lit("org"))
-    port = F.element_at(
-        F.array(F.lit(":443"), F.lit(":8080"), F.lit(""), F.lit("")),
-        (e3 % 4).cast("int") + 1,
-    )
-    path = F.concat(
-        F.lit("/p/"),
-        (e3 % 40).cast("string"),
-        F.when(d % 2 == 0, F.lit("/")).otherwise(F.lit("")),
-    )
-    qid = (e3 % 9).cast("string")
-    query = F.element_at(
-        F.array(
-            F.concat(F.lit("?utm_source=feed&id="), qid),
-            F.concat(F.lit("?id="), qid, F.lit("&fbclid=xyz")),
-            F.lit(""),
-        ),
-        (d % 3).cast("int") + 1,
-    )
-    frag = F.when(d % 6 == 0, F.lit("#sec2")).otherwise(F.lit(""))
-    url = F.concat(
-        scheme, F.lit("://"), sub, label, F.lit(".example."), tld, port, path,
-        query, frag,
-    )
-    return docs.withColumn("url", url)
-
-
-def _q_url_canonical(spark, sf_dir):
-    """URL canonicalization: scheme/host case, www., default ports,
-    tracking params, fragments, trailing slashes (urls.canonical_urls
-    — map-only column algebra)."""
-    from graphiti_spark.operators.urls import canonical_urls
-
-    return canonical_urls(_with_urls(_docs(spark, sf_dir))).select(
-        "doc_id", "url", "host", "canonical_url"
-    )
-
-
-def _q_url_dedup(spark, sf_dir):
-    """Keep-first URL-level dedup over the canonical form (urls.url_dedup
-    — one partial-aggregated groupBy)."""
-    from graphiti_spark.operators.urls import url_dedup
-
-    return url_dedup(_with_urls(_docs(spark, sf_dir)))
-
-
-def _q_domain_blocklist(spark, sf_dir):
-    """Suffix-set domain blocklist with longest-match reporting
-    (urls.domain_blocklist — broadcast semi-join on host suffixes)."""
-    from graphiti_spark.operators.urls import domain_blocklist
-
-    return domain_blocklist(_with_urls(_docs(spark, sf_dir)), BLOCKED_DOMAINS)
-
-
-def _q_graph_stats(spark, sf_dir):
-    """Per-group structural summary (sizes, reciprocity, hub degree,
-    micro-unit mean degree) — the per-tenant KG health sheet."""
-    from graphiti_spark.operators.centrality import graph_stats
-
-    out = _graph(spark, sf_dir)
-    return graph_stats(out.nodes, out.edges)
-
-
-def _q_degree_histogram(spark, sf_dir):
-    """Per-tenant undirected-degree distribution incl. isolated nodes
-    (centrality.degree_histogram)."""
-    from graphiti_spark.operators.centrality import degree_histogram
-
-    out = _graph(spark, sf_dir)
-    return degree_histogram(out.nodes, out.edges)
-
-
-def _q_fact_churn(spark, sf_dir):
-    """Monthly started/invalidated/expired lifecycle counts over the
-    bi-temporal edge ledger."""
-    from graphiti_spark.operators.temporal import fact_churn
-
-    out = _graph(spark, sf_dir)
-    return fact_churn(out.edges)
-
-
-def _q_link_prediction(spark, sf_dir):
-    """Resource-allocation link prediction: top-20 unconnected entity
-    pairs per group most likely to be missing facts (integer-exact)."""
-    from graphiti_spark.operators.centrality import link_prediction_ra
-
-    out = _graph(spark, sf_dir)
-    return link_prediction_ra(out.nodes, out.edges, k=20)
-
-
-def _q_personalized_pagerank(spark, sf_dir):
-    """Random walk with restart from query entities (the principled
-    form of the reference's node-distance rerank) — integer-exact,
-    unrolled in the oracle like pagerank."""
-    from graphiti_spark.operators.centrality import personalized_pagerank
-
-    out = _graph(spark, sf_dir)
-    return personalized_pagerank(out.nodes, out.edges, PPR_SEEDS)
-
 # ---------------------------------------------------------------------------
-# docops / search / maintenance queries
+# search / maintenance queries
 # ---------------------------------------------------------------------------
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
-def _q_contamination_overlap(spark, sf_dir):
-    from graphiti_spark.operators.docops import contamination_overlap
-
-    d = _docs(spark, sf_dir)
-    return contamination_overlap(
-        d.where(F.col("doc_id") % 10 != 7),
-        d.where(F.col("doc_id") % 10 == 7),
-        n=4,
-    )
-
-
-def _q_dsir_weights(spark, sf_dir):
-    from graphiti_spark.operators.docops import dsir_weights
-
-    d = _docs(spark, sf_dir)
-    return dsir_weights(
-        d.where(F.col("doc_id") % 10 != 7),
-        d.where(F.col("doc_id") % 10 == 7),
-        n_buckets=1024,
-    )
-
-
-def _q_corpus_profile(spark, sf_dir):
-    from graphiti_spark.operators.docops import corpus_profile
-
-    return corpus_profile(_docs(spark, sf_dir))
-
-
-def _q_token_stats(spark, sf_dir):
-    from graphiti_spark.operators.docops import token_stats
-
-    return token_stats(_docs(spark, sf_dir))
-
-
-def _q_quality(spark, sf_dir):
-    from graphiti_spark.operators.docops import quality_score
-
-    return quality_score(_docs(spark, sf_dir))
-
-
-def _q_language_id(spark, sf_dir):
-    from graphiti_spark.operators.docops import language_id
-
-    return language_id(_docs(spark, sf_dir))
-
-
-
-def _q_tfidf_topk(spark, sf_dir):
-    """Per-doc top-k TF-IDF keyword extraction (smooth idf)."""
-    from graphiti_spark.operators.docops import tfidf_topk_terms
-
-    return tfidf_topk_terms(_docs(spark, sf_dir))
-
-
-def _q_repetition_stats(spark, sf_dir):
-    from graphiti_spark.operators.docops import repetition_stats
-
-    return repetition_stats(_docs(spark, sf_dir))
-
-
-def _q_boilerplate_ngrams(spark, sf_dir):
-    from graphiti_spark.operators.docops import boilerplate_ngrams
-
-    return boilerplate_ngrams(_docs(spark, sf_dir))
-
-
-def _q_decontaminate(spark, sf_dir):
-    from graphiti_spark.operators.docops import decontaminate
-
-    d = _docs(spark, sf_dir)
-    return decontaminate(
-        d.where(F.col("doc_id") % 10 != 7),
-        d.where(F.col("doc_id") % 10 == 7),
-        n=4,
-    )
-
-
-def _q_split_summary(spark, sf_dir):
-    from graphiti_spark.operators.docops import split_summary
-
-    return split_summary(_docs(spark, sf_dir))
-
-
-def _q_curate(spark, sf_dir):
-    """End-to-end curation facade: language filter -> quality filter ->
-    exact dedup -> near-dup dedup, one declarative plan, reason-coded
-    decisions (docops.curate)."""
-    from graphiti_spark.operators.docops import curate
-
-    return curate(_perturbed_docs(spark, sf_dir))
-
-
-def _q_chunk_documents(spark, sf_dir):
-    """Overlapping token chunking (training/embedding corpus prep)."""
-    from graphiti_spark.operators.docops import chunk_documents
-
-    return chunk_documents(_docs(spark, sf_dir), chunk_tokens=32, overlap=8)
-
-
-def _q_leakage_safe_split(spark, sf_dir):
-    """hash_split with a leakage guard: near-dup components share one
-    split key, so clusters never straddle train/test."""
-    from graphiti_spark.operators.docops import leakage_safe_split
-
-    return leakage_safe_split(_perturbed_docs(spark, sf_dir), threshold=0.5)
-
-
-def _q_pack_documents(spark, sf_dir):
-    from graphiti_spark.operators.docops import pack_documents
-
-    return pack_documents(_docs(spark, sf_dir))
-
-
-def _q_pii_scrub(spark, sf_dir):
-    from graphiti_spark.operators.docops import pii_scrub
-    from graphiti_spark.oracle_ops import PII_TAILS
-
-    d = _docs(spark, sf_dir)
-    inject = F.when(F.col("doc_id") % 7 == 0, F.lit(PII_TAILS[0]))
-    for i, t in enumerate(PII_TAILS[1:], start=1):
-        inject = inject.when(F.col("doc_id") % 7 == i, F.lit(t))
-    inject = inject.otherwise(F.lit(""))
-    return pii_scrub(d.select("doc_id", F.concat("text", inject).alias("text")))
-
-
-def _q_mixture_sample(spark, sf_dir):
-    from graphiti_spark.operators.docops import mixture_sample
-    from graphiti_spark.oracle_ops import MIXTURE_WEIGHTS
-
-    return mixture_sample(_docs(spark, sf_dir), MIXTURE_WEIGHTS)
-
-
-
-def _q_sessionize(spark, sf_dir):
-    from graphiti_spark.operators.events import sessionize
-
-    return sessionize(spark.read.parquet(f"{sf_dir}/events.parquet"))
-
-
-def _q_funnel(spark, sf_dir):
-    from graphiti_spark.operators.events import funnel
-
-    return funnel(spark.read.parquet(f"{sf_dir}/events.parquet"))
-
-def _q_cohort_retention(spark, sf_dir):
-    """Cohort retention matrix: users by first-event month x activity
-    month (events.cohort_retention)."""
-    from graphiti_spark.operators.events import cohort_retention
-
-    return cohort_retention(spark.read.parquet(f"{sf_dir}/events.parquet"))
-
-
-def _q_rolling_active(spark, sf_dir):
-    """Exact daily + trailing-7-day distinct active users
-    (events.rolling_active_users)."""
-    from graphiti_spark.operators.events import rolling_active_users
-
-    return rolling_active_users(spark.read.parquet(f"{sf_dir}/events.parquet"))
-
-
-def _q_stratified_sample(spark, sf_dir):
-    """Exact-count deterministic stratified sample per language
-    (docops.stratified_sample — WindowGroupLimit top-n per stratum)."""
-    from graphiti_spark.operators.docops import stratified_sample
-
-    return stratified_sample(_docs(spark, sf_dir), n_per_stratum=40)
-
-
-def _q_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher Appendix-A quality rules (docops.gopher_rules) over the
-    documents table — integer micro-unit metrics + per-rule keep.
-    min_required_stops=1: the fixture corpus is keyword soup (at most
-    'the'/'a' from the required list), so the default 2 would make
-    keep vacuously false; 1 makes the verdict split on real content."""
-    from graphiti_spark.operators.docops import gopher_rules
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return gopher_rules(docs, min_required_stops=1)
-
-
-
-def _q_c4_filters(spark, sf_dir):
-    """C4 heuristic line/doc filters with reason codes
-    (docops.c4_filters — zero-shuffle array algebra)."""
-    from graphiti_spark.operators.docops import c4_filters
-
-    return c4_filters(_docs(spark, sf_dir))
-
-
-def _q_exact_duplicates(spark, sf_dir):
-    from graphiti_spark.operators.docops import exact_duplicates
-
-    return exact_duplicates(_docs(spark, sf_dir))
-
-
-def _perturbed_docs(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    twin = d.where(F.col("doc_id") % 5 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" extra tail tokens")).alias("text"),
-    )
-    return d.select("doc_id", "text").unionByName(twin)
-
-
-def _q_near_duplicates(spark, sf_dir):
-    from graphiti_spark.operators.docops import near_duplicates
-
-    return near_duplicates(_perturbed_docs(spark, sf_dir), threshold=0.5)
-
-
-def _q_dedup_keep_list(spark, sf_dir):
-    from graphiti_spark.operators.docops import dedup_keep_list
-
-    return dedup_keep_list(_perturbed_docs(spark, sf_dir), threshold=0.5)
-
-
-def _q_dedup_keep_best(spark, sf_dir):
-    """Quality-aware near-dup keep rule: longest doc per cluster (the
-    RefinedWeb representative choice) — docops.dedup_keep_best. On the
-    planted corpus the perturbed twin is longer, so the decision
-    provably differs from dedup_keep_list's min-id rule."""
-    from graphiti_spark.operators.docops import dedup_keep_best
-
-    return dedup_keep_best(_perturbed_docs(spark, sf_dir), threshold=0.5)
-
-
-def _q_containment(spark, sf_dir):
-    """Directional n-gram containment join (quote-inclusion detector —
-    docops.containment_pairs): one-sided prefix filtering, exact
-    verify; checked against a brute-force all-pairs DuckDB oracle."""
-    from graphiti_spark.operators.docops import containment_pairs
-
-    return containment_pairs(_perturbed_docs(spark, sf_dir), threshold=0.8)
-
-
-def _q_ngram_jaccard(spark, sf_dir):
-    """Exact n-gram-Jaccard similarity join (prefix filtering — recall
-    is exact by the PPJoin prefix lemma, vs near_duplicates' MinHash
-    blocking). Same perturbed corpus and brute-force all-pairs oracle
-    as near_duplicates: two independent blocking strategies, one
-    ground truth."""
-    from graphiti_spark.operators.docops import ngram_jaccard_pairs
-
-    return ngram_jaccard_pairs(_perturbed_docs(spark, sf_dir), threshold=0.5)
-
-
-def _q_line_dedup(spark, sf_dir):
-    """CCNet-style corpus-wide exact line dedup: every (8-token) line
-    keeps only its first occurrence across the corpus; per-doc survival
-    stats + rebuilt clean text."""
-    from graphiti_spark.operators.docops import line_dedup
-
-    return line_dedup(_docs(spark, sf_dir))
-
-
-def _q_duplicate_spans(spark, sf_dir):
-    """Exact duplicated-substring spans (Lee et al. 2022 style): k-gram
-    md5 anchors with >1 corpus occurrence, merged per doc into maximal
-    spans."""
-    from graphiti_spark.operators.docops import duplicate_spans
-
-    return duplicate_spans(_docs(spark, sf_dir))
-
-
-def _q_source_cap(spark, sf_dir):
-    """Per-source (domain) document cap: deterministic md5-ranked
-    top-cap per source via a salted two-phase rank."""
-    from graphiti_spark.operators.docops import source_cap
-
-    return source_cap(_docs(spark, sf_dir))
-
-
-def _q_incremental_dedup(spark, sf_dir):
-    """O(batch) incremental corpus dedup against a persisted LSH band
-    index (operators/dedup_index.DedupIndex): batch 1 = the originals
-    (builds the index), batch 2 = the twins (deduped against batch 1's
-    KEEPERS only — the standard incremental contract). Returns both
-    batches' (doc_id, dup_of, is_kept, batch) decisions; the DuckDB
-    oracle replays both batches with min-label components unrolled as
-    chained CTEs."""
-    import shutil
-    import tempfile
-
-    from graphiti_spark.io.tables import TableIO
-    from graphiti_spark.operators.dedup_index import DedupIndex
-
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    twins = d.where(F.col("doc_id") % 5 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" extra tail tokens")).alias("text"),
-    )
-    root = tempfile.mkdtemp(prefix="drv_dedup_idx_")
-    try:
-        idx = DedupIndex(TableIO(spark, root), threshold=0.5)
-        d1 = idx.merge(d).withColumn("batch", F.lit(1))
-        d2 = idx.merge(twins).withColumn("batch", F.lit(2))
-        # merge() eager-localCheckpoints its decisions, so the returned
-        # frames no longer read the on-disk index and the scratch dir
-        # can be removed before the caller collects
-        return d1.unionByName(d2)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def _q_simhash(spark, sf_dir):
-    from graphiti_spark.operators.docops import simhash
-
-    return simhash(_docs(spark, sf_dir))
-
-
-def _q_fingerprint(spark, sf_dir):
-    from graphiti_spark.operators.docops import fingerprint
-
-    return fingerprint(_docs(spark, sf_dir))
-
-
 def _q_bm25_docs(spark, sf_dir):
-    from graphiti_spark.operators.docops import tokenize  # noqa: F401
     from graphiti_spark.operators.search import bm25_score, build_postings
-    from graphiti_spark.oracle_ops import BM25_QUERY
+    from graphiti_spark.oracle import BM25_QUERY
 
     d = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("string").alias("doc_id"), "text"
@@ -793,75 +139,12 @@ def _q_bm25_docs(spark, sf_dir):
     return scored.select("id", F.round("score", 6).alias("score"))
 
 
-def _q_embedding_near_dup(spark, sf_dir):
-    """Embedding-cosine near-dup pairs over embeddings ∪ planted
-    collinear copies (×1.07, id+100000 for every 50th vector) — the
-    Spark side runs multi-table hyperplane blocking + exact verify;
-    the oracle is an INDEPENDENT exact all-pairs computation (collinear
-    pairs collide in every table deterministically, everything else is
-    far below threshold in this corpus)."""
-    from graphiti_spark.operators.docops import embedding_near_duplicates
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    planted = emb.where(F.col("vec_id") % 50 == 0).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform("embedding", lambda x: x * F.lit(1.07)).alias("embedding"),
-    )
-    allv = emb.unionByName(planted)
-    return embedding_near_duplicates(allv, threshold=0.9).select(
-        "id_a", "id_b", "score"
-    )
-
-
-def _q_semantic_dedup(spark, sf_dir):
-    """SemDeDup-style keep decision: connected components over the
-    embedding near-dup pair graph of _q_embedding_near_dup's planted
-    corpus, keep = min vec_id per component."""
-    from graphiti_spark.operators.docops import semantic_dedup_keep_list
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    planted = emb.where(F.col("vec_id") % 50 == 0).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform("embedding", lambda x: x * F.lit(1.07)).alias("embedding"),
-    )
-    return semantic_dedup_keep_list(emb.unionByName(planted), threshold=0.9)
-
-
-def _q_lm_perplexity(spark, sf_dir):
-    """CCNet-style bigram-LM perplexity scoring + head/middle/tail
-    terciles, self-trained on the documents corpus
-    (operators/docops.lm_perplexity)."""
-    from graphiti_spark.operators.docops import lm_perplexity
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    return lm_perplexity(docs)
-
-
-def _q_kmeans(spark, sf_dir):
-    """Deterministic integer k-means over int8-quantized embeddings —
-    the SemDeDup/cluster-balanced-sampling clustering stage
-    (operators/docops.kmeans_clusters); bit-identical Lloyd's
-    trajectory in both engines."""
-    from graphiti_spark.operators.docops import kmeans_clusters
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    return kmeans_clusters(emb, k=8, iters=4)
-
-
 def _q_bm25_many(spark, sf_dir):
     """Batched BM25: one postings pass scores all queries
     (operators/search.bm25_score_many) — the multi-query read-path
     shape the reference's per-query loop cannot express."""
     from graphiti_spark.operators.search import bm25_score_many, build_postings
-    from graphiti_spark.oracle_ops import BM25_MANY_QUERIES
+    from graphiti_spark.oracle import BM25_MANY_QUERIES
 
     d = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("string").alias("doc_id"), "text"
@@ -879,7 +162,7 @@ def _q_relevant_nodes(spark, sf_dir):
     first 4 docs with short literal fulltext strings (the reference
     feeds the node NAME as the fulltext query)."""
     from graphiti_spark.operators.resolve import get_relevant_nodes
-    from graphiti_spark.oracle_ops import RELEVANT_NODE_QUERIES
+    from graphiti_spark.oracle import RELEVANT_NODE_QUERIES
 
     docs = _docs(spark, sf_dir)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -902,51 +185,6 @@ def _q_relevant_nodes(spark, sf_dir):
         .join(qtext, "query_id")
     )
     return get_relevant_nodes(corpus, queries, min_score=0.25, limit=10)
-
-
-def _q_cosine_topk(spark, sf_dir):
-    from graphiti_spark.operators.docops import brute_force_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries_df = emb.where(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    return brute_force_topk(emb, queries_df, k=10).withColumn(
-        "rank", F.col("rank").cast("int")
-    )
-
-
-def _q_hamming_topk(spark, sf_dir):
-    """Exact Hamming top-k over 1-bit sign-quantized embeddings (32x
-    compression; integer xor/popcount — docops.hamming_topk)."""
-    from graphiti_spark.operators.docops import hamming_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return hamming_topk(emb, emb.where(F.col("vec_id") < 4), k=10)
-
-
-def _q_quantized_topk(spark, sf_dir):
-    from graphiti_spark.operators.docops import quantized_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries_df = emb.where(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    return quantized_topk(emb, queries_df, k=10)
-
-
-def _q_pq_topk(spark, sf_dir):
-    """Product-quantization ADC cosine top-k (docops.pq_topk): m=4
-    subspace codebooks fitted by the deterministic integer k-means,
-    codes + lookup-table scoring — the full trajectory (codebooks,
-    codes, scores) reproduced bit-for-bit by the DuckDB oracle."""
-    from graphiti_spark.operators.docops import pq_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries_df = emb.where(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    return pq_topk(emb, queries_df, m=4, k_codes=8, iters=2, k=10)
 
 
 def _q_rrf_docs(spark, sf_dir):
@@ -1032,38 +270,6 @@ def _q_remove_episode_counts(spark, sf_dir):
     return spark.createDataFrame(
         [row], "n_mentions long, n_nodes long, n_edges long"
     )
-
-
-def _q_media_catalog(spark, sf_dir):
-    from graphiti_spark.operators.multimodal import media_catalog
-
-    eps = synthesize_episodes(spark, sf_dir)
-    return media_catalog(eps).select(
-        "doc_id", "media_ref", "media_type", "content_len", "offset"
-    )
-
-
-def _asof_probes(spark):
-    from graphiti_spark.oracle_ops import ASOF_PROBES
-
-    return spark.createDataFrame(
-        [(g, a, b, t) for g, a, b, t in ASOF_PROBES],
-        "group_id string, name_a string, name_b string, t string",
-    ).withColumn("t", F.col("t").cast("timestamp"))
-
-
-def _q_as_of_join(spark, sf_dir):
-    from graphiti_spark.operators.asof import as_of_join
-
-    out = _graph(spark, sf_dir)
-    return as_of_join(out.edges, _asof_probes(spark))
-
-
-def _q_interval_join(spark, sf_dir):
-    from graphiti_spark.operators.asof import interval_join
-
-    out = _graph(spark, sf_dir)
-    return interval_join(out.edges, _asof_probes(spark))
 
 
 def _q_duplicate_pairs(spark, sf_dir):
@@ -1152,106 +358,11 @@ def _q_near_dup_facts(spark, sf_dir):
     )
 
 
-# --- non-SQL-expressible ops: driver records a rows-only check --------------
-
 def _q_communities(spark, sf_dir):
     from graphiti_spark.operators.community import detect_communities
 
     out = _graph(spark, sf_dir)
     return detect_communities(out.edges, out.nodes)
-
-
-def _q_ann_lsh(spark, sf_dir):
-    """LSH ANN with md5-derived ±1 planes (docops.md5_planes): the
-    plane generation is reproducible in plain SQL, so the whole
-    approximate path — bucketing, candidate join, exact verify — gets
-    a full DuckDB value oracle (oracle_ops.q_ann_lsh) instead of the
-    rows-only check it carried through round 3."""
-    from graphiti_spark.operators.docops import lsh_bucketed_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries_df = emb.where(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    return lsh_bucketed_topk(
-        emb, queries_df, k=10, n_planes=8, n_tables=4, plane_fn="md5"
-    )
-
-
-def _q_ann_ivf(spark, sf_dir):
-    """IVF ANN, the approximate setting (n_probe < n_centroids), with
-    the md5-sample quantizer (docops.md5_sample_centroids): centroid
-    selection is reproducible in plain SQL, so the whole approximate
-    path — assignment, probe selection, bucket-join candidates, exact
-    verify — gets a full DuckDB value oracle (oracle_ops.q_ann_ivf)
-    instead of the rows-only check it carried through round 3. The
-    k-means quantizer stays the library default; its recall ≥ 0.9 is
-    pinned by tests/test_properties.py."""
-    from graphiti_spark.operators.docops import ivf_topk, md5_sample_centroids
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries_df = emb.where(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    cents = md5_sample_centroids(emb, n_centroids=16)
-    return ivf_topk(
-        emb, queries_df, k=10, n_centroids=16, n_probe=4, centroids=cents
-    ).withColumn("rank", F.col("rank").cast("int"))
-
-
-def _q_ann_ivf_exhaustive(spark, sf_dir):
-    """IVF with every bucket probed (n_probe = n_centroids): the
-    partition-by-centroid + probe + exact-score machinery must then
-    reproduce brute-force cosine top-k EXACTLY, whatever the quantizer
-    did — so the full IVF pipeline gets an independent DuckDB oracle
-    (the exact top-k SQL), leaving only the probe-selection heuristic
-    to the recall pytest."""
-    from graphiti_spark.operators.docops import ivf_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries_df = emb.where(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    return ivf_topk(
-        emb, queries_df, k=10, n_centroids=16, n_probe=16
-    ).withColumn("rank", F.col("rank").cast("int"))
-
-
-def _q_media_frames(spark, sf_dir):
-    """Frame sampling over the media catalog (operators/multimodal
-    sample_frames, force=True so the all-img synthetic corpus exercises
-    the multi-frame path): content projected as its hex digest so the
-    binary column is oracle-comparable."""
-    from graphiti_spark.operators.multimodal import media_catalog, sample_frames
-
-    eps = synthesize_episodes(spark, sf_dir)
-    frames = sample_frames(media_catalog(eps), force=True)
-    return frames.select(
-        "media_ref",
-        "frame_idx",
-        "ts_ms",
-        F.lower(F.hex("content")).alias("content_sha"),
-    )
-
-
-def _q_media_features(spark, sf_dir):
-    """One row per (media span, histogram bin): the codec's integer
-    pre-normalization histogram is an exact cross-engine surface (the
-    float feature vector itself is not canonicalizable / hashable)."""
-    from graphiti_spark.operators.multimodal import decode_features, media_catalog
-
-    eps = synthesize_episodes(spark, sf_dir)
-    feats = decode_features(media_catalog(eps))
-    return feats.select(
-        "media_ref",
-        "media_type",
-        F.posexplode("hist").alias("idx", "v"),
-    ).select(
-        "media_ref",
-        "media_type",
-        F.col("idx").cast("int").alias("idx"),
-        F.col("v").cast("long").alias("v"),
-    )
 
 
 def _q_triple_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1284,8 +395,7 @@ def _q_graph_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministically damaged (md5-dropped edges 1-in-5, dropped
     nodes 1-in-11, drifted summaries 1-in-3), so the oracle replays
     the whole harness — damage, token overlap, thresholds — exactly."""
-    from graphiti_spark.operators.docops import _md5_u32
-    from graphiti_spark.operators.evaluate import compare_graphs
+    from graphiti_spark.operators.evaluate import _md5_u32, compare_graphs
 
     out = _graph(spark, sf_dir)
     be = out.triples_raw.select(
@@ -1351,87 +461,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "invalidation_counts": _q_invalidation_counts,
         "mentions": _q_mentions,
         "episode_edges": _q_episode_edges,
-        "pagerank": _q_pagerank,
-        "personalized_pagerank": _q_personalized_pagerank,
-        "link_prediction": _q_link_prediction,
-        "graph_stats": _q_graph_stats,
-        "degree_histogram": _q_degree_histogram,
-        "fact_churn": _q_fact_churn,
-        "fact_diff": _q_fact_diff,
-        "entity_timeline": _q_entity_timeline,
-        # GNN training-data export
-        "gnn_nodes": _q_gnn_nodes,
-        "gnn_edges": _q_gnn_edges,
-        "gnn_negatives": _q_gnn_negatives,
-        "temporal_split": _q_temporal_split,
-        "link_pred_eval": _q_link_pred_eval,
-        "sampled_neighborhood": _q_sampled_neighborhood,
-        "random_walks": _q_random_walks,
-        "biased_walks": _q_biased_walks,
-        "skipgram_pairs": _q_skipgram_pairs,
-        "semantic_dedup": _q_semantic_dedup,
-        "lm_perplexity": _q_lm_perplexity,
-        "kmeans": _q_kmeans,
-        "triangle_count": _q_triangle_count,
-        "clustering_coefficient": _q_clustering_coefficient,
-        "kcore": _q_kcore,
-        # interleaved-span structure + sketches
-        "interleave_profile": _q_interleave_profile,
-        "pack_interleaved": _q_pack_interleaved,
-        "interleave_summary": _q_interleave_summary,
-        "token_kmv": _q_token_kmv,
-        # text analysis
-        "token_stats": _q_token_stats,
-        "corpus_profile": _q_corpus_profile,
-        "contamination_overlap": _q_contamination_overlap,
-        "dsir_weights": _q_dsir_weights,
-        "quality": _q_quality,
-        "language_id": _q_language_id,
-        "tfidf_topk": _q_tfidf_topk,
-        "repetition_stats": _q_repetition_stats,
-        "boilerplate_ngrams": _q_boilerplate_ngrams,
-        # URL provenance
-        "url_canonical": _q_url_canonical,
-        "url_dedup": _q_url_dedup,
-        "domain_blocklist": _q_domain_blocklist,
-        # corpus curation
-        "decontaminate": _q_decontaminate,
-        "split_summary": _q_split_summary,
-        "curate": _q_curate,
-        "c4_filters": _q_c4_filters,
-        "gopher_rules": _q_gopher_rules,
-        "stratified_sample": _q_stratified_sample,
-        "chunk_documents": _q_chunk_documents,
-        "leakage_safe_split": _q_leakage_safe_split,
-        "pack_documents": _q_pack_documents,
-        "pii_scrub": _q_pii_scrub,
-        "mixture_sample": _q_mixture_sample,
-        "sessionize": _q_sessionize,
-        "funnel": _q_funnel,
-        "cohort_retention": _q_cohort_retention,
-        "rolling_active": _q_rolling_active,
-        # dedup
-        "exact_duplicates": _q_exact_duplicates,
-        "near_duplicates": _q_near_duplicates,
-        "ngram_jaccard": _q_ngram_jaccard,
-        "line_dedup": _q_line_dedup,
-        "duplicate_spans": _q_duplicate_spans,
-        "source_cap": _q_source_cap,
-        "incremental_dedup": _q_incremental_dedup,
-        "dedup_keep_list": _q_dedup_keep_list,
-        "dedup_keep_best": _q_dedup_keep_best,
-        "containment": _q_containment,
-        "simhash": _q_simhash,
-        "fingerprint": _q_fingerprint,
-        "embedding_near_dup": _q_embedding_near_dup,
-        # search / similarity
+        # search
         "bm25_docs": _q_bm25_docs,
         "bm25_many": _q_bm25_many,
         "relevant_nodes": _q_relevant_nodes,
-        "cosine_topk": _q_cosine_topk,
-        "quantized_topk": _q_quantized_topk,
-        "hamming_topk": _q_hamming_topk,
-        "pq_topk": _q_pq_topk,
         "rrf_docs": _q_rrf_docs,
         "bfs_globex": _q_bfs_globex,
         # maintenance
@@ -1439,34 +472,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "context_window": _q_context_window,
         "pagination": _q_pagination,
         "remove_episode_counts": _q_remove_episode_counts,
-        "media_catalog": _q_media_catalog,
         "facts_as_of": _q_facts_as_of,
         "episode_subgraph": _q_episode_subgraph,
         "duplicate_pairs": _q_duplicate_pairs,
-        "as_of_join": _q_as_of_join,
-        "interval_join": _q_interval_join,
         "near_dup_facts": _q_near_dup_facts,
         "communities": _q_communities,
-        # ANN: exhaustive probing == brute force, so the IVF machinery
-        # is fully oracled; the approximate settings are rows-only
-        "ann_ivf_exhaustive": _q_ann_ivf_exhaustive,
-        # non-SQL-expressible (rows-only check)
-        "ann_lsh": _q_ann_lsh,
-        "ann_ivf": _q_ann_ivf,
-        "media_features": _q_media_features,
-        "media_frames": _q_media_frames,
     }
 
 
 def oracle_sql() -> dict[str, str]:
-    from graphiti_spark import oracle_ops as oo
-
     return {
         "spans": oracle.q_spans(),
         "triples_raw": oracle.q_triples_raw(),
         "triple_prf": oracle.q_triple_prf(),
-        "graph_eval": oo.q_graph_eval(),
-        "graph_eval_score": oo.q_graph_eval_score(),
+        "graph_eval": oracle.q_graph_eval(),
+        "graph_eval_score": oracle.q_graph_eval_score(),
         "mentions_by_name": oracle.q_mentions_raw(),
         "uuid_map": oracle.q_uuid_map(),
         "nodes": oracle.q_nodes(),
@@ -1474,112 +494,21 @@ def oracle_sql() -> dict[str, str]:
         "invalidation_counts": oracle.q_edge_invalidation_counts(),
         "mentions": oracle.q_mentions_table(),
         "episode_edges": oracle.q_episode_edges(),
-        "token_stats": oo.q_token_stats(),
-        "corpus_profile": oo.q_corpus_profile(),
-        "contamination_overlap": oo.q_contamination_overlap(),
-        "dsir_weights": oo.q_dsir_weights(),
-        "quality": oo.q_quality(),
-        "language_id": oo.q_language_id(),
-        "pagerank": oo.q_pagerank(),
-        "personalized_pagerank": oo.q_personalized_pagerank(PPR_SEEDS),
-        "link_prediction": oo.q_link_prediction_ra(k=20),
-        "graph_stats": oo.q_graph_stats(),
-        "degree_histogram": oo.q_degree_histogram(),
-        "fact_churn": oo.q_fact_churn(),
-        "fact_diff": oo.q_fact_diff(DIFF_T1, DIFF_T2),
-        "entity_timeline": oo.q_entity_timeline(),
-        "gnn_nodes": oo.q_gnn_nodes(),
-        "gnn_edges": oo.q_gnn_edges(),
-        "gnn_negatives": oo.q_gnn_negatives(n_neg=3),
-        "temporal_split": oo.q_temporal_split(SPLIT_TRAIN_END, SPLIT_VALID_END),
-        "link_pred_eval": oo.q_link_pred_eval(EVAL_TRAIN_END, k_cand=50, k=10),
-        "sampled_neighborhood": oo.q_sampled_neighborhood(PPR_SEEDS, fanouts=(3, 2)),
-        "random_walks": oo.q_random_walks(walk_len=4, n_walks=2),
-        "biased_walks": oo.q_biased_walks(walk_len=3, n_walks=1, max_deg=3),
-        "skipgram_pairs": oo.q_skipgram_pairs(walk_len=4, n_walks=2, window=2),
-        "semantic_dedup": oo.q_semantic_dedup_keep_list(),
-        "lm_perplexity": oo.q_lm_perplexity(),
-        "kmeans": oo.q_kmeans_clusters(k=8, iters=4),
-        "triangle_count": oo.q_triangle_count(),
-        "clustering_coefficient": oo.q_clustering_coefficient(),
-        "kcore": oo.q_kcore(),
-        "interleave_profile": oo.q_interleave_profile(),
-        "pack_interleaved": oo.q_pack_interleaved(),
-        "interleave_summary": oo.q_interleave_summary(),
-        "token_kmv": oo.q_token_cardinality(k=16),
-        "tfidf_topk": oo.q_tfidf_topk(),
-        "repetition_stats": oo.q_repetition_stats(),
-        "boilerplate_ngrams": oo.q_boilerplate_ngrams(),
-        "url_canonical": oo.q_url_canonical(),
-        "url_dedup": oo.q_url_dedup(),
-        "domain_blocklist": oo.q_domain_blocklist(BLOCKED_DOMAINS),
-        "decontaminate": oo.q_decontaminate(),
-        "split_summary": oo.q_split_summary(),
-        "curate": oo.q_curate(),
-        "c4_filters": oo.q_c4_filters(),
-        "gopher_rules": oo.q_gopher_rules(min_stops=1),
-        "stratified_sample": oo.q_stratified_sample(),
-        "chunk_documents": oo.q_chunk_documents(),
-        "leakage_safe_split": oo.q_leakage_safe_split(),
-        "pack_documents": oo.q_pack_documents(),
-        "pii_scrub": oo.q_pii_scrub(),
-        "mixture_sample": oo.q_mixture_sample(),
-        "sessionize": oo.q_sessionize(),
-        "funnel": oo.q_funnel(),
-        "cohort_retention": oo.q_cohort_retention(),
-        "rolling_active": oo.q_rolling_active(),
-        "exact_duplicates": oo.q_exact_duplicates(),
-        "near_duplicates": oo.q_near_duplicates(),
-        # prefix filtering is EXACT, so the output contract equals the
-        # brute-force all-pairs ground truth — the same oracle verifies
-        # a completely different blocking strategy
-        "ngram_jaccard": oo.q_near_duplicates(),
-        "line_dedup": oo.q_line_dedup(),
-        "duplicate_spans": oo.q_duplicate_spans(),
-        "source_cap": oo.q_source_cap(),
-        "incremental_dedup": oo.q_incremental_dedup(),
-        "dedup_keep_list": oo.q_dedup_keep_list(),
-        "dedup_keep_best": oo.q_dedup_keep_best(),
-        "containment": oo.q_containment_pairs(),
-        "simhash": oo.q_simhash(),
-        "fingerprint": oo.q_fingerprint(),
-        "embedding_near_dup": oo.q_embedding_near_dup(),
-        "bm25_docs": oo.q_bm25_docs(),
-        "bm25_many": oo.q_bm25_many(),
+        "bm25_docs": oracle.q_bm25_docs(),
+        "bm25_many": oracle.q_bm25_many(),
         # J2 hybrid candidate gen: vector + fulltext lanes, full value oracle
-        "relevant_nodes": oo.q_relevant_nodes(min_score=0.25, limit=10),
-        "cosine_topk": oo.q_cosine_topk(),
-        # int8 symmetric quantization: scales cancel in cosine, so the
-        # lossy-compression path is exactly value-hashable cross-engine
-        "quantized_topk": oo.q_quantized_topk(),
-        "hamming_topk": oo.q_hamming_topk(),
-        "pq_topk": oo.q_pq_topk(m=4, k_codes=8, iters=2, k=10),
-        "rrf_docs": oo.q_rrf_docs(),
-        "bfs_globex": oo.q_bfs_globex(),
-        "point_in_time": oo.q_point_in_time("2024-01-01 08:00:00"),
-        "context_window": oo.q_context_window(),
-        "pagination": oo.q_pagination(),
-        "remove_episode_counts": oo.q_remove_episode_counts(),
-        "media_catalog": oo.q_media_catalog(),
-        "facts_as_of": oo.q_facts_as_of(),
-        "episode_subgraph": oo.q_episode_subgraph(),
-        "duplicate_pairs": oo.q_duplicate_pairs(),
-        "as_of_join": oo.q_as_of_join(),
-        "interval_join": oo.q_interval_join(),
-        "near_dup_facts": oo.q_near_dup_facts(),
+        "relevant_nodes": oracle.q_relevant_nodes(min_score=0.25, limit=10),
+        "rrf_docs": oracle.q_rrf_docs(),
+        "bfs_globex": oracle.q_bfs_globex(),
+        "point_in_time": oracle.q_point_in_time("2024-01-01 08:00:00"),
+        "context_window": oracle.q_context_window(),
+        "pagination": oracle.q_pagination(),
+        "remove_episode_counts": oracle.q_remove_episode_counts(),
+        "facts_as_of": oracle.q_facts_as_of(),
+        "episode_subgraph": oracle.q_episode_subgraph(),
+        "duplicate_pairs": oracle.q_duplicate_pairs(),
+        "near_dup_facts": oracle.q_near_dup_facts(),
         # iterative LPA, oracle = the loop unrolled to its cap (rounds
         # past convergence are no-ops, so this is exact, not approximate)
         "communities": oracle.q_communities(),
-        "media_features": oo.q_media_features(),
-        "media_frames": oo.q_media_frames(),
-        # every bucket probed ⇒ IVF output ≡ exact cosine top-k, so the
-        # exhaustive variant shares the brute-force oracle
-        "ann_ivf_exhaustive": oo.q_cosine_topk(),
-        # md5-derived planes make the full approximate LSH path
-        # SQL-reproducible end to end (round-4; was rows-only)
-        "ann_lsh": oo.q_ann_lsh(k=10, n_planes=8, n_tables=4),
-        # md5-sample quantizer does the same for the approximate IVF
-        # path (round-4; was rows-only) — the k-means quantizer stays
-        # the library default, pinned by the recall pytest
-        "ann_ivf": oo.q_ann_ivf(k=10, n_centroids=16, n_probe=4),
     }

@@ -20,7 +20,7 @@ document distribution, not any hot entity.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from graphiti_spark import corpus as C
@@ -161,6 +161,18 @@ def triple_prf(
 # pluggable judge, deterministic by default, LLM-backed via the
 # llm_transport adapter.
 # ---------------------------------------------------------------------------
+
+
+def _md5_u32(s: Column) -> Column:
+    """Little-endian uint32 of md5 digest bytes 8..12 — chosen because
+    DuckDB's md5_number_lower(x) % 2^32 computes the identical value
+    (oracle parity). Drives the graph_eval fixture's deterministic
+    candidate damage."""
+    v = F.lit(0).cast("long")
+    for k in range(4):
+        byte = F.conv(F.substring(F.md5(s), 17 + 2 * k, 2), 16, 10).cast("long")
+        v = v + byte * (256 ** k)
+    return v
 
 
 def compare_graphs(

@@ -128,142 +128,3 @@ def resolve_bitemporal(edges: DataFrame, batch_time: str = corpus.BATCH_TIME) ->
         .drop("pair", "pred_class", "next_valid_at")
     )
     return out
-
-
-def fact_churn(edges: DataFrame) -> DataFrame:
-    """(group_id, month, n_started, n_invalidated, n_expired) — monthly
-    fact-lifecycle timeline over the bi-temporal edge ledger: how many
-    facts became valid, were invalidated (valid-time end), and were
-    expired (transaction-time tombstone) in each calendar month. The
-    churn curve is the standard freshness/volatility dashboard for a
-    temporal KG (a spike in n_invalidated flags a contradiction storm
-    or a bad ingest batch).
-
-    Month keys are 'yyyy-MM' strings from UTC-normalized timestamps
-    (T5) — engine-exact, no timezone arithmetic. Scale shape: one
-    explode of each edge into ≤3 (month, kind) lifecycle events
-    followed by a single partial-aggregated groupBy — months × groups
-    is a tiny key space, so the shuffle is a rounding error.
-    """
-    def ev(col: str, kind: str) -> DataFrame:
-        return (
-            edges.where(F.col(col).isNotNull())
-            .select(
-                "group_id",
-                F.date_format(F.col(col), "yyyy-MM").alias("month"),
-                F.lit(kind).alias("kind"),
-            )
-        )
-
-    events = (
-        ev("valid_at", "started")
-        .unionByName(ev("invalid_at", "invalidated"))
-        .unionByName(ev("expired_at", "expired"))
-    )
-    return events.groupBy("group_id", "month").agg(
-        F.sum(F.when(F.col("kind") == "started", 1).otherwise(0))
-        .cast("long")
-        .alias("n_started"),
-        F.sum(F.when(F.col("kind") == "invalidated", 1).otherwise(0))
-        .cast("long")
-        .alias("n_invalidated"),
-        F.sum(F.when(F.col("kind") == "expired", 1).otherwise(0))
-        .cast("long")
-        .alias("n_expired"),
-    )
-
-
-def fact_diff(edges: DataFrame, t1: str, t2: str) -> DataFrame:
-    """(group_id, subj_name, predicate, obj_name, valid_at, status) —
-    the event-time DELTA between two as-of instants: which temporal
-    assertions became visible ('added') or ceased to be visible
-    ('removed') between t1 and t2. This is the KG analogue of a CDC
-    diff — "what changed in the graph last quarter" as one query —
-    and composes the same slice predicate as point-in-time retrieval
-    (T6), so the two snapshots are never materialized.
-
-    A fact is visible at t iff valid_at <= t < coalesce(invalid_at,
-    inf); keys are the distinct 5-tuples (group, subj, pred, obj,
-    valid_at) — a re-asserted fact with a new valid_at is a new
-    assertion, matching the ledger's grain.
-
-    Scale shape: two filters over one scan of the ledger + one
-    full-outer hash join on the assertion key; no windows, no state.
-    Output rows are only the CHANGED assertions, so a quiet graph
-    diffs to near-zero rows regardless of ledger size.
-    """
-    def visible(t: str) -> DataFrame:
-        ts = F.lit(t).cast("timestamp")
-        return (
-            edges.where(
-                (F.col("valid_at").isNotNull())
-                & (F.col("valid_at") <= ts)
-                & (F.col("invalid_at").isNull() | (F.col("invalid_at") > ts))
-            )
-            .select("group_id", "subj_name", "predicate", "obj_name", "valid_at")
-            .distinct()
-        )
-
-    key = ["group_id", "subj_name", "predicate", "obj_name", "valid_at"]
-    a = visible(t1).withColumn("in_a", F.lit(True))
-    b = visible(t2).withColumn("in_b", F.lit(True))
-    return (
-        a.join(b, key, "full_outer")
-        .where(F.col("in_a").isNull() | F.col("in_b").isNull())
-        .select(
-            *key,
-            F.when(F.col("in_a").isNull(), F.lit("added"))
-            .otherwise(F.lit("removed"))
-            .alias("status"),
-        )
-    )
-
-
-def entity_timeline(edges: DataFrame) -> DataFrame:
-    """(group_id, name, seq, role, predicate, other, fact, valid_at,
-    invalid_at) — the per-entity chronological fact ledger: every
-    temporal assertion appears on BOTH endpoints' timelines (role =
-    'subject'|'object', ``other`` = the far endpoint), ordered by
-    (valid_at, fact identity) with a dense per-entity ``seq``. This is
-    the "everything we learned about X, in order" view a KG consumer
-    reads after point-in-time retrieval narrows WHEN — the reference
-    serves it per-entity via get_entity_edges (graphiti_core
-    EntityEdge queries); here it is one set-returning frame.
-
-    Scale shape: one union of two projections of the ledger (no
-    explode), then a single rank window partitioned by (group, name) —
-    per-entity fact counts are bounded by the entity's real-world
-    activity, and a hot entity's window is one partition's sort, not
-    a corpus sort.
-    """
-    def side(role: str, me: str, other: str) -> DataFrame:
-        return edges.select(
-            "group_id",
-            F.col(me).alias("name"),
-            F.lit(role).alias("role"),
-            "predicate",
-            F.col(other).alias("other"),
-            "fact",
-            "valid_at",
-            "invalid_at",
-        )
-
-    both = side("subject", "subj_name", "obj_name").unionByName(
-        side("object", "obj_name", "subj_name")
-    )
-    # total order: (valid_at, predicate, other, role) alone can tie if
-    # the same pair re-asserts at one instant with differing fact text
-    # or invalid_at — fact + invalid_at close the key so seq is
-    # deterministic cross-engine
-    w = Window.partitionBy("group_id", "name").orderBy(
-        F.col("valid_at").asc_nulls_last(),
-        "predicate",
-        "other",
-        "role",
-        "fact",
-        F.col("invalid_at").asc_nulls_last(),
-    )
-    return both.withColumn("seq", F.row_number().over(w).cast("long")).select(
-        "group_id", "name", "seq", "role", "predicate", "other", "fact",
-        "valid_at", "invalid_at",
-    )

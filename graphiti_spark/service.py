@@ -259,8 +259,11 @@ def create_app(graph, worker: IngestWorker | None = None):
     @app.post("/messages")
     def add_messages():
         body = request.get_json(force=True)
+        if not isinstance(body, dict) or not isinstance(body.get("group_id"), str):
+            return jsonify({"message": "group_id must be a string",
+                            "success": False}), 400
         group_id = body["group_id"]
-        messages = body["messages"]
+        messages = body.get("messages")
         if not isinstance(messages, list):
             return jsonify({"message": "messages must be a list",
                             "success": False}), 400

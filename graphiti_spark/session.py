@@ -17,6 +17,19 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def default_driver_memory() -> str:
+    """Half of the machine's RAM in whole GB (at least 1g), leaving the
+    other half to the Python workers and the OS; ``4g`` when
+    ``/proc/meminfo`` is unreadable."""
+    try:
+        with open("/proc/meminfo") as f:
+            meminfo = f.read()
+    except OSError:
+        return "4g"
+    kb = int(meminfo.split("MemTotal:", 1)[1].split()[0])
+    return f"{max(1, kb // 2 // 1024**2)}g"
+
+
 def get_spark(
     app_name: str = "graphiti_spark",
     cpus: int | None = None,
@@ -28,7 +41,8 @@ def get_spark(
     ``cpus`` controls local parallelism (``local[cpus]``); defaults to
     ``$SPARK_GRAFT_CPUS`` or ``*``. Shuffle partitions default to the
     same number — on a real cluster you size this to cores×executors,
-    and AQE coalesces small post-shuffle partitions either way.
+    and AQE coalesces small post-shuffle partitions either way. The
+    driver heap is ``$SPARK_GRAFT_DRIVER_MEM`` or half of the RAM.
     """
     if cpus is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -49,7 +63,10 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
     )

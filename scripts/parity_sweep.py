@@ -71,21 +71,17 @@ def main():
             s_cols = sdf.columns
             s_rows = [tuple(r) for r in sdf.collect()]
             rec["spark_rows"] = len(s_rows)
-            if name not in sqls:
-                rec["status"] = "rows_only"
-                rec["ok"] = len(s_rows) >= 0
-            else:
-                cur = con.execute(sqls[name])
-                d_cols = [d[0] for d in cur.description]
-                d_rows = cur.fetchall()
-                rec["oracle_rows"] = len(d_rows)
-                rec["rows_match"] = len(s_rows) == len(d_rows)
-                rec["schema_match"] = sorted(s_cols) == sorted(d_cols)
-                rec["hash_match"] = (
-                    rec["rows_match"] and rec["schema_match"]
-                    and _hash(s_cols, s_rows) == _hash(d_cols, d_rows)
-                )
-                rec["ok"] = bool(rec["hash_match"])
+            cur = con.execute(sqls[name])
+            d_cols = [d[0] for d in cur.description]
+            d_rows = cur.fetchall()
+            rec["oracle_rows"] = len(d_rows)
+            rec["rows_match"] = len(s_rows) == len(d_rows)
+            rec["schema_match"] = sorted(s_cols) == sorted(d_cols)
+            rec["hash_match"] = (
+                rec["rows_match"] and rec["schema_match"]
+                and _hash(s_cols, s_rows) == _hash(d_cols, d_rows)
+            )
+            rec["ok"] = bool(rec["hash_match"])
         except Exception as exc:  # noqa: BLE001
             rec["ok"] = False
             rec["err"] = f"{type(exc).__name__}: {exc}"[:300]

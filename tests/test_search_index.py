@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from graphiti_spark.io.tables import TableIO
 from graphiti_spark.operators.search import SearchIndex, fulltext_search
-from graphiti_spark.oracle_ops import BM25_QUERY
+from graphiti_spark.oracle import BM25_QUERY
 from graphiti_spark.plans.explain import physical_plan
 from tests.conftest import SF_SMOKE
 

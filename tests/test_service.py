@@ -217,6 +217,26 @@ def test_ingest_job_error_is_recorded_not_raised(served):
     assert client.get("/healthcheck").status_code == 200
 
 
+def test_malformed_messages_body_is_400_and_queues_nothing():
+    # the rejected bodies never reach the graph, so none is needed
+    app = create_app(graph=None)
+    app.config.update(TESTING=True)
+    client = app.test_client()
+    worker = app.extensions["ingest_worker"]
+    for body in (
+        {"messages": _messages(0, 1)},           # no group_id
+        {"group_id": 7, "messages": []},         # group_id not a string
+        {"group_id": "g0"},                      # no messages
+        {"group_id": "g0", "messages": "hi"},    # messages not a list
+        ["g0"],                                  # not an object
+    ):
+        r = client.post("/messages", json=body)
+        assert r.status_code == 400, body
+        assert r.get_json()["success"] is False
+    assert worker.queue.unfinished_tasks == 0 and worker.processed == 0
+    worker.stop()
+
+
 def test_episodes_frame_idempotent_doc_ids(spark):
     msgs = [{"role": "a", "role_type": "user", "content": "hello world",
              "timestamp": "2024-01-01T00:00:00Z"}]

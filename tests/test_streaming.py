@@ -97,280 +97,3 @@ def test_stateful_context_window_matches_batch(spark, tmp_path_factory):
         for r in with_previous_episode_context(eps).collect()
     }
     assert got == expect
-
-
-def test_windowed_rates_match_batch(spark, tmp_path_factory):
-    """Watermarked event-time windowed agg (streaming/rates.py): with
-    all data on time, the update-mode stream's final per-window counts
-    equal the batch aggregation over the same episodes."""
-    from graphiti_spark.streaming.rates import episode_rate_agg, stream_ingest_rates
-
-    eps = synthesize_episodes(spark, SF_SMOKE).select(
-        "doc_id", "group_id", "valid_at", "spans"
-    )
-    in_dir = str(tmp_path_factory.mktemp("rates_in"))
-    eps.where(F.col("doc_id") < "doc-000250").coalesce(1).write.mode(
-        "append"
-    ).parquet(in_dir)
-    eps.where(F.col("doc_id") >= "doc-000250").coalesce(1).write.mode(
-        "append"
-    ).parquet(in_dir)
-
-    ckpt = str(tmp_path_factory.mktemp("rates_ckpt"))
-    q = stream_ingest_rates(spark, in_dir, ckpt, sink_table="rates_a")
-    q.awaitTermination(300)
-
-    got = spark.sql("SELECT * FROM rates_a").collect()
-    # update mode re-emits a window on refinement: keep the last (=max,
-    # counts grow monotonically with on-time data) emission per key
-    final: dict = {}
-    for r in got:
-        k = (r.window_start, r.group_id)
-        if k not in final or r.n_episodes >= final[k].n_episodes:
-            final[k] = r
-    expected = {
-        (r.window_start, r.group_id): r for r in episode_rate_agg(eps).collect()
-    }
-    assert set(final) == set(expected)
-    for k, r in final.items():
-        assert (r.n_episodes, r.n_text_spans) == (
-            expected[k].n_episodes,
-            expected[k].n_text_spans,
-        ), k
-
-
-def test_windowed_rates_drop_too_late_rows(spark, tmp_path_factory):
-    """A row older than (max event time − watermark delay) arriving in
-    a later micro-batch must be DROPPED from the aggregation — bounded
-    state is the point of the watermark."""
-    import datetime as dt
-    import os
-    import time as _time
-
-    from graphiti_spark.schemas import EPISODES_SCHEMA
-    from graphiti_spark.streaming.rates import stream_ingest_rates
-
-    def ep(doc_id, when):
-        return {
-            "doc_id": doc_id,
-            "group_id": "g0",
-            "name": doc_id,
-            "source": "message",
-            "source_description": None,
-            "spans": [{"kind": "text", "text": "A: b works for c.",
-                       "media_ref": "", "offset": 0}],
-            "created_at": when,
-            "valid_at": when,
-        }
-
-    on_time = [ep(f"doc-{i}", dt.datetime(2024, 6, 1 + i)) for i in range(3)]
-    late = [ep("doc-late", dt.datetime(2015, 1, 1))]  # years late
-
-    in_dir = str(tmp_path_factory.mktemp("late_in"))
-    f1 = os.path.join(in_dir, "b0")
-    f2 = os.path.join(in_dir, "b1")
-    spark.createDataFrame(on_time, EPISODES_SCHEMA).coalesce(1).write.parquet(f1)
-    spark.createDataFrame(late, EPISODES_SCHEMA).coalesce(1).write.parquet(f2)
-    flat = str(tmp_path_factory.mktemp("late_flat"))
-    now = _time.time()
-    for i, d in enumerate((f1, f2)):
-        for f in sorted(os.listdir(d)):
-            if f.endswith(".parquet"):
-                dst = os.path.join(flat, f"{i:02d}.parquet")
-                os.rename(os.path.join(d, f), dst)
-                os.utime(dst, (now + 30 * i, now + 30 * i))  # arrival order
-
-    ckpt = str(tmp_path_factory.mktemp("late_ckpt"))
-    q = stream_ingest_rates(
-        spark, flat, ckpt, sink_table="rates_late",
-        window_duration="30 days", watermark_delay="30 days",
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination(300)
-
-    rows = spark.sql("SELECT * FROM rates_late").collect()
-    # after batch 1 the watermark is ~2024-05-04; the 2015 row in batch
-    # 2 is far older and must not create (or join) any window
-    assert sum(r.n_episodes for r in rows) >= 3
-    assert not [r for r in rows if r.window_start.year == 2015], rows
-
-
-def test_stream_dedup_matches_sequential_merges(spark, tmp_path_factory):
-    """streaming/dedup.py: a document stream drained in micro-batches
-    must produce the same decisions as calling DedupIndex.merge
-    sequentially — and cross-batch dups must point at stored keepers."""
-    import tempfile
-
-    from graphiti_spark.io.tables import TableIO
-    from graphiti_spark.operators.dedup_index import DedupIndex
-    from graphiti_spark.streaming.dedup import stream_dedup
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-
-    def t(i):
-        return f"{base} doc{i} unique{i} marker{i} extra{i} token{i} pad{i}"
-
-    rows1 = [(i, t(i)) for i in range(12)]
-    # arrival 2: near-twins of 0..3 + one unique
-    rows2 = [(100 + i, t(i).rsplit(" ", 1)[0] + " padX") for i in range(4)]
-    rows2 += [(50, "entirely different words nothing shared with the rest")]
-
-    in_dir = str(tmp_path_factory.mktemp("dedup_in"))
-    spark.createDataFrame(rows1, "doc_id long, text string").coalesce(1).write.mode(
-        "append"
-    ).parquet(in_dir)
-    spark.createDataFrame(rows2, "doc_id long, text string").coalesce(1).write.mode(
-        "append"
-    ).parquet(in_dir)
-
-    idx_dir = str(tmp_path_factory.mktemp("dedup_idx"))
-    ckpt = str(tmp_path_factory.mktemp("dedup_ckpt"))
-    q = stream_dedup(
-        spark, in_dir, idx_dir, ckpt, available_now=True, max_files_per_trigger=1
-    )
-    q.awaitTermination(300)
-
-    got = {
-        r.doc_id: r.dup_of
-        for r in spark.read.parquet(f"{idx_dir}/decisions").collect()
-    }
-
-    # sequential reference: same batches through merge() directly
-    ref = DedupIndex(TableIO(spark, tempfile.mkdtemp(prefix="dedup_ref_")))
-    want = {}
-    for rows in (rows1, rows2):
-        b = spark.createDataFrame(rows, "doc_id long, text string")
-        want.update({r.doc_id: r.dup_of for r in ref.merge(b).collect()})
-
-    assert got == want
-    # cross-batch twins resolved against stored keepers
-    assert all(got[str(100 + i)] == str(i) for i in range(4))
-    assert got["50"] is None
-
-
-def test_stream_dedup_reemitted_doc_keeps_one_decision_row(
-    spark, tmp_path_factory
-):
-    """Regression: a doc_id re-emitted in a LATER batch (crawlers do)
-    must update its single decisions row, not accumulate a second —
-    the merge keys on doc_id with hash-of-doc_id partition scoping."""
-    from graphiti_spark.streaming.dedup import stream_dedup
-
-    rows1 = [(1, "alpha beta gamma delta epsilon zeta eta theta")]
-    rows2 = [
-        (1, "alpha beta gamma delta epsilon zeta eta theta"),  # re-emit
-        (2, "entirely different words nothing shared here at all"),
-    ]
-    in_dir = str(tmp_path_factory.mktemp("dedup_in2"))
-    spark.createDataFrame(rows1, "doc_id long, text string").coalesce(
-        1
-    ).write.mode("append").parquet(in_dir)
-    spark.createDataFrame(rows2, "doc_id long, text string").coalesce(
-        1
-    ).write.mode("append").parquet(in_dir)
-
-    idx_dir = str(tmp_path_factory.mktemp("dedup_idx2"))
-    ckpt = str(tmp_path_factory.mktemp("dedup_ckpt2"))
-    q = stream_dedup(
-        spark, in_dir, idx_dir, ckpt, available_now=True,
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination(300)
-
-    rows = spark.read.parquet(f"{idx_dir}/decisions").collect()
-    per_doc = {}
-    for r in rows:
-        per_doc.setdefault(r.doc_id, []).append(r)
-    assert all(len(v) == 1 for v in per_doc.values()), per_doc
-    assert per_doc["1"][0].is_kept          # re-emit collides with own copy
-    assert per_doc["2"][0].is_kept
-
-
-def test_interleave_profile_streams_map_only(spark, tmp_path_factory):
-    """interleave_profile is pure per-row array algebra, so it runs
-    UNCHANGED as a Structured Streaming transformation (no state, no
-    watermark) — the corpus-profiling stage of a streaming ingest.
-    Streamed output must equal the batch profile row-for-row."""
-    from graphiti_spark.operators.interleave import interleave_profile
-
-    eps = synthesize_episodes(spark, SF_SMOKE).cache()
-    in_dir = str(tmp_path_factory.mktemp("prof_in"))
-    eps.coalesce(2).write.mode("append").parquet(in_dir)
-
-    out_dir = str(tmp_path_factory.mktemp("prof_out"))
-    ckpt = str(tmp_path_factory.mktemp("prof_ckpt"))
-    stream = spark.readStream.schema(eps.schema).parquet(in_dir)
-    q = (
-        interleave_profile(stream)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    batch = {r.doc_id: tuple(r) for r in interleave_profile(eps).collect()}
-    streamed = {
-        r.doc_id: tuple(r) for r in spark.read.parquet(out_dir).collect()
-    }
-    assert streamed == batch
-
-
-def test_streaming_sessionization_matches_batch(spark, tmp_path_factory):
-    """Native session_window over a real stream produces the SAME
-    sessions (aligned on (user_id, session_start)) as the batch
-    lag/run-sum sessionize for on-time data — the gap rule, aggregate
-    arithmetic, and boundaries all agree."""
-    from graphiti_spark.operators.events import sessionize
-    from graphiti_spark.streaming.sessions import session_agg
-
-    events = spark.read.parquet(f"{SF_SMOKE}/events.parquet").cache()
-    batch = {
-        (r.user_id, r.session_start): (
-            r.session_end, r.n_events, r.n_errors, r.value_cents, r.max_k
-        )
-        for r in sessionize(events).collect()
-    }
-    # batch-mode session_agg (withWatermark no-op) must agree first
-    inline = {
-        (r.user_id, r.session_start): (
-            r.session_end, r.n_events, r.n_errors, r.value_cents, r.max_k
-        )
-        for r in session_agg(events).collect()
-    }
-    assert inline == batch
-
-    # now the real streaming path: two arrivals, complete-mode sink
-    in_dir = str(tmp_path_factory.mktemp("sess_in"))
-    events.where(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(in_dir)
-    events.where(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(in_dir)
-    # one file per trigger => the session-window STATE MERGE across
-    # micro-batches is genuinely exercised (without this, availableNow
-    # consumes both files in a single batch and the test degenerates
-    # to the batch-mode comparison above)
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    q = (
-        session_agg(stream)
-        .writeStream.format("memory")
-        .queryName("sess_stream")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    streamed = {
-        (r.user_id, r.session_start): (
-            r.session_end, r.n_events, r.n_errors, r.value_cents, r.max_k
-        )
-        for r in spark.sql("SELECT * FROM sess_stream").collect()
-    }
-    assert streamed == batch

@@ -10,7 +10,6 @@ from __future__ import annotations
 import datetime
 
 import pytest
-from pyspark.sql import functions as F
 
 from graphiti_spark.operators.temporal import (
     pair_key,
@@ -217,31 +216,3 @@ def test_predicate_class_map():
     assert m["LIKES"] == m["DISLIKES"] == "DISLIKES|LIKES"
     assert m["WORKS_FOR"] == m["LEFT_JOB"] == "LEFT_JOB|WORKS_FOR"
     assert m["ACQUIRED"] == "ACQUIRED"
-
-
-def test_fact_churn_month_buckets(spark):
-    from pyspark.sql import functions as F
-
-    from graphiti_spark.operators.temporal import fact_churn
-
-    edges = spark.createDataFrame(
-        [
-            ("g0", "2024-01-05 00:00:00", "2024-02-01 00:00:00", "2024-02-01 00:00:00"),
-            ("g0", "2024-01-20 00:00:00", None, None),
-            ("g0", "2024-02-10 00:00:00", None, None),
-        ],
-        "group_id string, valid_at string, invalid_at string, expired_at string",
-    ).select(
-        "group_id",
-        F.col("valid_at").cast("timestamp").alias("valid_at"),
-        F.col("invalid_at").cast("timestamp").alias("invalid_at"),
-        F.col("expired_at").cast("timestamp").alias("expired_at"),
-    )
-    out = {
-        r.month: (r.n_started, r.n_invalidated, r.n_expired)
-        for r in fact_churn(edges).collect()
-    }
-    # two facts started in Jan (none ended there); one started in Feb
-    # and one was invalidated+expired there — NULL lifecycle fields
-    # must not produce rows
-    assert out == {"2024-01": (2, 0, 0), "2024-02": (1, 1, 1)}
