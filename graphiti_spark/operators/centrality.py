@@ -5,11 +5,11 @@ The reference ranks nodes only by mention counts / node distance
 global structural importance signal — PageRank over the canonical
 directed edge set — usable as a reranker lane or an analytics export.
 
-Determinism across engines (the driver compares against a DuckDB
-oracle): ranks are kept in integer micro-units (``scale`` = 1e9) and
+Determinism across engines (a DuckDB re-implementation must agree
+bit for bit): ranks are kept in integer micro-units (``scale`` = 1e9) and
 every division is an explicit floor division (Spark ``DIV``, DuckDB
 ``//``) — no float summation-order ambiguity, so the 10-iteration
-unrolled SQL (oracle_ops.q_pagerank) reproduces bit-identical longs.
+unrolled SQL reproduces bit-identical longs.
 Per iteration (damping d = 17/20):
 
     r_0(v)     = scale // n_g

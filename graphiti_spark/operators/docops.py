@@ -23,6 +23,7 @@ from pyspark.sql.window import Window
 
 from ..functions.minhash import lsh_candidate_pairs
 from ..functions.similarity import dot, l2_norm
+from .evaluate import _md5_u32
 from .search import tokenize
 
 # ---------------------------------------------------------------------------
@@ -445,17 +446,6 @@ def simhash(documents: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     return documents.select("doc_id", sig.cast("long").alias("simhash"))
 
 
-def _md5_u32(s: Column) -> Column:
-    """Little-endian uint32 of md5 digest bytes 8..12 — chosen because
-    DuckDB's md5_number_lower(x) % 2^32 computes the identical value
-    (oracle parity)."""
-    v = F.lit(0).cast("long")
-    for k in range(4):
-        byte = F.conv(F.substring(F.md5(s), 17 + 2 * k, 2), 16, 10).cast("long")
-        v = v + byte * (256 ** k)
-    return v
-
-
 def fingerprint(documents: DataFrame, n: int = 3, mod: int = 8) -> DataFrame:
     """Mod-p sampled n-gram fingerprint (winnowing-lite): keep shingle
     hashes ≡ 0 (mod `mod`); emit count + min sampled hash as the doc
@@ -550,10 +540,9 @@ def _hyperplane_tables(vc: Column, planes) -> Column:
 def md5_planes(seed: int, n_tables: int, n_planes: int, dim: int):
     """±1 (Rademacher) hyperplanes derived from md5(f"{seed}-{t}-{j}-{d}")
     — bit-for-bit reproducible in ANY engine with an md5 function,
-    which is what makes the LSH ANN driver query independently
-    verifiable: the DuckDB oracle (oracle_ops.q_ann_lsh) regenerates
-    the identical planes in SQL and replays bucketing + candidate join
-    + exact scoring end to end. Sign-projection LSH needs only a
+    which is what makes the LSH ANN path independently verifiable: a
+    SQL oracle can regenerate the identical planes and replay bucketing
+    + candidate join + exact scoring end to end. Sign-projection LSH needs only a
     zero-mean sign-symmetric entry distribution, so Rademacher planes
     follow the same collision-probability curve as Gaussian ones; the
     plane matrix still rides the pandas-UDF closure (one matmul per
@@ -733,8 +722,7 @@ def md5_sample_centroids(
     quantizer (k-means merely rebalances it), and md5 of the decimal id
     string is reproducible in any engine — the same move
     :func:`md5_planes` makes for hyperplane LSH — so the approximate
-    IVF path becomes fully value-oracled in DuckDB
-    (``oracle_ops.q_ann_ivf``). ``train_ivf_centroids`` below stays the
+    IVF path can be fully value-oracled in another engine. ``train_ivf_centroids`` below stays the
     default library quantizer (better bucket balance); this one exists
     for cross-engine verification and as the zero-training fallback.
     Bounded driver pull: TakeOrdered of n_centroids rows, no full sort."""
@@ -2762,8 +2750,7 @@ def gopher_rules(
     whole-document verdicts with per-rule evidence columns.
 
     Every metric is an integer micro-unit via ``DIV`` (never a
-    float), so the DuckDB oracle (oracle_ops.q_gopher_rules) is
-    bit-exact. Whitespace words, like the paper (not the fulltext
+    float), so a DuckDB re-implementation is bit-exact. Whitespace words, like the paper (not the fulltext
     tokenizer — '#' and '...' must stay attached for the symbol
     counts).
 

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .docops import _md5_u32
+from .evaluate import _md5_u32
 from .search import tokenize
 
 

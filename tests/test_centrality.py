@@ -1,6 +1,5 @@
-"""Graph-centrality operators (operators/centrality.py). PageRank is
-hash-checked against its unrolled DuckDB oracle by test_oracle_parity;
-here triangle_count gets crafted-graph semantics checks."""
+"""Graph-centrality operators (operators/centrality.py), checked for
+semantics on crafted graphs."""
 
 from __future__ import annotations
 

@@ -1,11 +1,10 @@
 """Corpus-curation operators: decontamination, deterministic splits,
 sequence packing, PII scrubbing (operators/docops.py tail section).
 
-The oracle-parity suite already hash-checks these against DuckDB on the
-fixture corpus; here we pin the *semantic invariants* on hand-crafted
-inputs — the properties a 100 TB pipeline relies on (determinism under
-repartitioning, prefix-sum packing with no gaps, exact-overlap
-detection, redaction completeness)."""
+These tests pin the *semantic invariants* on hand-crafted inputs — the
+properties a 100 TB pipeline relies on (determinism under repartitioning,
+prefix-sum packing with no gaps, exact-overlap detection, redaction
+completeness)."""
 
 from __future__ import annotations
 

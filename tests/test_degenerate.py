@@ -75,9 +75,41 @@ def test_no_duplicates_corpus(spark):
 
 
 def test_curation_ops_degenerate_inputs(spark):
-    """The evaluation op must degrade gracefully on empty frames — no
-    crashes, no phantom groups."""
+    """The round-4 selection/eval ops must degrade gracefully on empty
+    frames and empty reference sets — no crashes, no dropped rows."""
+    from graphiti_spark.operators.docops import (
+        contamination_overlap,
+        corpus_profile,
+        dsir_weights,
+    )
     from graphiti_spark.operators.evaluate import triple_prf
+
+    docs_schema = (
+        "doc_id long, text string, lang string, source string, n_chars long"
+    )
+    empty = spark.createDataFrame([], docs_schema)
+    some = spark.createDataFrame(
+        [(1, "alpha beta gamma delta", "en", "s0", 22),
+         (2, "", "en", "s1", 0)],
+        docs_schema,
+    )
+
+    # corpus_profile: empty corpus → empty sheet; singleton source works
+    assert corpus_profile(empty).count() == 0
+    prof = {r.source: r for r in corpus_profile(some).collect()}
+    assert prof["s0"].n_docs == 1 and prof["s0"].p50_chars == 22
+
+    # contamination_overlap: empty eval set → everything clean, rows kept
+    out = {r.doc_id: r for r in contamination_overlap(some, empty).collect()}
+    assert set(out) == {1, 2}
+    assert all(r.bucket == "clean" and r.n_hit == 0 for r in out.values())
+
+    # dsir_weights: empty target corpus → defined scores (pure smoothing),
+    # every raw doc still surfaces
+    out = {r.doc_id: r for r in dsir_weights(some, empty, n_buckets=16).collect()}
+    assert set(out) == {1, 2}
+    assert out[2].n_tokens == 0 and out[2].dsir_micro is None
+    assert out[1].dsir_micro is not None
 
     # triple_prf: both sides empty → empty metric frame (no groups)
     t = spark.createDataFrame([], "group_id string, doc_id string, subj string")

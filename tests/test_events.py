@@ -1,5 +1,5 @@
 """Sessionization semantics (operators/events.py) on crafted event
-streams; the fixture-scale parity is covered by test_oracle_parity."""
+streams."""
 
 from __future__ import annotations
 

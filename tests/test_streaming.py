@@ -97,3 +97,34 @@ def test_stateful_context_window_matches_batch(spark, tmp_path_factory):
         for r in with_previous_episode_context(eps).collect()
     }
     assert got == expect
+
+
+def test_interleave_profile_streams_map_only(spark, tmp_path_factory):
+    """interleave_profile is pure per-row array algebra, so it runs
+    UNCHANGED as a Structured Streaming transformation (no state, no
+    watermark) — the corpus-profiling stage of a streaming ingest.
+    Streamed output must equal the batch profile row-for-row."""
+    from graphiti_spark.operators.interleave import interleave_profile
+
+    eps = synthesize_episodes(spark, SF_SMOKE).cache()
+    in_dir = str(tmp_path_factory.mktemp("prof_in"))
+    eps.coalesce(2).write.mode("append").parquet(in_dir)
+
+    out_dir = str(tmp_path_factory.mktemp("prof_out"))
+    ckpt = str(tmp_path_factory.mktemp("prof_ckpt"))
+    stream = spark.readStream.schema(eps.schema).parquet(in_dir)
+    q = (
+        interleave_profile(stream)
+        .writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+
+    batch = {r.doc_id: tuple(r) for r in interleave_profile(eps).collect()}
+    streamed = {
+        r.doc_id: tuple(r) for r in spark.read.parquet(out_dir).collect()
+    }
+    assert streamed == batch
