@@ -81,7 +81,7 @@ class GraphitiSpark:
 
     # -- write path ---------------------------------------------------------
 
-    def add_episodes(self, episodes: DataFrame, **kwargs) -> TableIO:
+    def add_episodes(self, episodes: DataFrame) -> TableIO:
         """add_episode / add_episode_bulk: run the extraction →
         resolution → bi-temporal pipeline incrementally into the graph
         tables (plus the invalidation stage the reference's bulk mode
@@ -91,10 +91,7 @@ class GraphitiSpark:
             episodes,
             self.io.root,
             batch_time=self.batch_time,
-            incremental=True,
-            skip_completed=False,
             search_indexes=self.search_indexes,
-            **kwargs,
         )
 
     def add_triplet(
@@ -245,11 +242,13 @@ class GraphitiSpark:
                 "created_at", F.lit(self.batch_time).cast("timestamp")
             )
         )
+        # the stored node_stats columns, so these node rows carry the
+        # same columns as the ones materialize_graph writes
         stats = (
             self.io.read("node_stats")
             if self.io.exists("node_stats")
             else self.spark.createDataFrame(
-                [], "entity_uuid string, n_episodes long"
+                [], "entity_uuid string, n_episodes long, spart int"
             )
         )
         new_nodes = enrich_nodes_with_stats(
@@ -262,45 +261,31 @@ class GraphitiSpark:
             # caller-provided summary wins over the stat sentence (the
             # server's save_entity_node passes one through)
             new_nodes = new_nodes.withColumn("summary", F.lit(summary))
-        node_pcol = None
-        if self.io.exists("nodes"):
-            cols = self.nodes.columns
-            if "npart" in cols:
-                new_nodes = new_nodes.withColumn(
-                    "npart", upart_col(F.col("uuid"))
-                )
-                node_pcol = "npart"
-            new_nodes = new_nodes.select(*cols)
+        # always the partitioned layout, always registered in the
+        # uuid_map and band index: the next add_episodes then resolves
+        # against these nodes instead of overwriting them
         self.io.merge_upsert(
-            "nodes", new_nodes, key_cols=["uuid"], partition_col=node_pcol
+            "nodes",
+            new_nodes.withColumn("npart", upart_col(F.col("uuid"))),
+            key_cols=["uuid"],
+            partition_col="npart",
         )
-        if self.io.exists("uuid_map"):
-            map_cols = self.io.read("uuid_map").columns
-            map_rows = base.select(
-                "group_id", "name", "uuid",
+        self.io.merge_upsert(
+            "uuid_map",
+            base.select(
+                "group_id", "uuid", "name",
                 F.col("uuid").alias("canonical_uuid"),
                 F.col("name").alias("canonical_name"),
-            )
-            map_pcol = None
-            if "upart" in map_cols:
-                map_rows = map_rows.withColumn(
-                    "upart", upart_col(F.col("uuid"))
-                )
-                map_pcol = "upart"
-            self.io.merge_upsert(
-                "uuid_map",
-                map_rows.select(*map_cols),
-                key_cols=["uuid"],
-                partition_col=map_pcol,
-            )
-        if self.io.exists("entity_bands"):
-            # keep the LSH band index complete so the restricted
-            # incremental resolver can find these manual nodes
-            self.io.append(
-                "entity_bands",
-                entity_band_rows(base.select("group_id", "uuid", "name")),
-                partition_by=["kpart"],
-            )
+                upart_col(F.col("uuid")).alias("upart"),
+            ),
+            key_cols=["uuid"],
+            partition_col="upart",
+        )
+        self.io.append(
+            "entity_bands",
+            entity_band_rows(base.select("group_id", "uuid", "name")),
+            partition_by=["kpart"],
+        )
         if self.search_indexes:
             from .operators.search import SearchIndex
 
@@ -320,6 +305,8 @@ class GraphitiSpark:
         resurrect the orphans through resolution. The persisted
         fulltext indexes follow via tombstones."""
         from pyspark.sql import functions as F
+
+        from .operators.incremental import upart_col
 
         affected = (
             self.mentions.where(F.col("doc_id") == doc_id)
@@ -354,37 +341,23 @@ class GraphitiSpark:
         )
 
         # nodes: point delete of the orphans, scoped to their npart hash
-        # buckets when the table carries the partitioned layout
-        stored_nodes = self.nodes
+        # buckets
         orphan_ids = orphan.withColumnRenamed("entity_uuid", "uuid")
-        if "npart" in stored_nodes.columns:
-            from .operators.incremental import upart_col
-
-            nparts = [
-                r[0]
-                for r in orphan_ids.select(
-                    upart_col(F.col("uuid")).alias("p")
-                ).distinct().collect()
-            ]
-            if nparts:
-                content = stored_nodes.where(F.col("npart").isin(nparts)).join(
-                    F.broadcast(orphan_ids), "uuid", "left_anti"
-                )
-                self.io.overwrite_partitions(
-                    "nodes", content, "npart", parts=nparts
-                )
-        else:
-            self.io.write(
-                "nodes",
-                stored_nodes.join(F.broadcast(orphan_ids), "uuid", "left_anti"),
+        nparts = [
+            r[0]
+            for r in orphan_ids.select(
+                upart_col(F.col("uuid")).alias("p")
+            ).distinct().collect()
+        ]
+        if nparts:
+            content = self.nodes.where(F.col("npart").isin(nparts)).join(
+                F.broadcast(orphan_ids), "uuid", "left_anti"
             )
+            self.io.overwrite_partitions("nodes", content, "npart", parts=nparts)
 
         # episodes + mentions: only the doc's hash bucket is rewritten
         for table, pcol in (("episodes", "part"), ("mentions", "mpart")):
             stored = self.table(table)
-            if pcol not in stored.columns:
-                self.io.write(table, stored.where(F.col("doc_id") != doc_id))
-                continue
             parts = [
                 r[0]
                 for r in stored.where(F.col("doc_id") == doc_id)
@@ -400,34 +373,18 @@ class GraphitiSpark:
             self.io.overwrite_partitions(table, content, pcol, parts=parts)
 
         # edges: only the pair buckets of cited edges are rewritten
-        stored_edges = self.edges
-        if "epart" in stored_edges.columns:
-            eparts = [
-                r[0] for r in cited.select("epart").distinct().collect()
-            ]
-            if eparts:
-                in_parts = stored_edges.where(F.col("epart").isin(eparts))
-                content = (
-                    in_parts.join(
-                        F.broadcast(dead_edges.withColumnRenamed("id", "uuid")),
-                        "uuid",
-                        "left_anti",
-                    )
-                    .withColumn(
-                        "episodes",
-                        F.array_remove(F.col("episodes"), doc_id),
-                    )
+        eparts = [r[0] for r in cited.select("epart").distinct().collect()]
+        if eparts:
+            content = (
+                self.edges.where(F.col("epart").isin(eparts))
+                .join(
+                    F.broadcast(dead_edges.withColumnRenamed("id", "uuid")),
+                    "uuid",
+                    "left_anti",
                 )
-                self.io.overwrite_partitions(
-                    "edges", content, "epart", parts=eparts
-                )
-        else:
-            from .operators.maintenance import remove_episode as _rm
-
-            out = _rm(
-                doc_id, self.episodes, stored_edges, self.mentions, self.nodes
+                .withColumn("episodes", F.array_remove(F.col("episodes"), doc_id))
             )
-            self.io.write("edges", out["edges"])
+            self.io.overwrite_partitions("edges", content, "epart", parts=eparts)
 
         # episode_edges forward index: the doc's bucket loses its rows
         # (dead edges cite ONLY this doc, so no other bucket changes)
@@ -464,23 +421,13 @@ class GraphitiSpark:
                 )
                 .localCheckpoint(eager=True)
             )
-            if "upart" in um.columns:
-                uparts = [
-                    r[0] for r in doomed.select("upart").distinct().collect()
-                ]
-                if uparts:
-                    content = um.where(F.col("upart").isin(uparts)).join(
-                        F.broadcast(doomed.select("uuid")), "uuid", "left_anti"
-                    )
-                    self.io.overwrite_partitions(
-                        "uuid_map", content, "upart", parts=uparts
-                    )
-            else:
-                self.io.write(
-                    "uuid_map",
-                    um.join(
-                        F.broadcast(doomed.select("uuid")), "uuid", "left_anti"
-                    ),
+            uparts = [r[0] for r in doomed.select("upart").distinct().collect()]
+            if uparts:
+                content = um.where(F.col("upart").isin(uparts)).join(
+                    F.broadcast(doomed.select("uuid")), "uuid", "left_anti"
+                )
+                self.io.overwrite_partitions(
+                    "uuid_map", content, "upart", parts=uparts
                 )
             if self.io.exists("entity_bands"):
                 eb = self.table("entity_bands")
@@ -501,29 +448,21 @@ class GraphitiSpark:
                 .groupBy("entity_uuid")
                 .agg(F.countDistinct("doc_id").alias("n_episodes"))
             )
-            stored_stats = self.io.read("node_stats")
-            if "spart" in stored_stats.columns:
-                from .operators.incremental import upart_col
-
-                fresh = fresh.withColumn("spart", upart_col(F.col("entity_uuid")))
-                keys = affected.withColumn(
-                    "spart", upart_col(F.col("entity_uuid"))
-                ).localCheckpoint(eager=True)
-                sparts = [r[0] for r in keys.select("spart").distinct().collect()]
-                if sparts:
-                    kept = stored_stats.where(F.col("spart").isin(sparts)).join(
-                        F.broadcast(keys.select("entity_uuid")),
-                        "entity_uuid",
-                        "left_anti",
-                    )
-                    self.io.overwrite_partitions(
-                        "node_stats", kept.unionByName(fresh), "spart", parts=sparts
-                    )
-            else:
-                kept = stored_stats.join(
-                    F.broadcast(affected), "entity_uuid", "left_anti"
+            fresh = fresh.withColumn("spart", upart_col(F.col("entity_uuid")))
+            keys = affected.withColumn(
+                "spart", upart_col(F.col("entity_uuid"))
+            ).localCheckpoint(eager=True)
+            sparts = [r[0] for r in keys.select("spart").distinct().collect()]
+            if sparts:
+                kept = (
+                    self.io.read("node_stats")
+                    .where(F.col("spart").isin(sparts))
+                    .join(F.broadcast(keys.select("entity_uuid")), "entity_uuid",
+                          "left_anti")
                 )
-                self.io.write("node_stats", kept.unionByName(fresh))
+                self.io.overwrite_partitions(
+                    "node_stats", kept.unionByName(fresh), "spart", parts=sparts
+                )
         if self.search_indexes:
             from .operators.search import SearchIndex
 

@@ -13,8 +13,8 @@ Also the home of the north-rule bookkeeping:
 - ``lineage`` table: one row per (stage, partition key, row_count,
   content_hash) — resuming a stage anti-joins its input against
   completed lineage, making every stage restart idempotent.
-- ``metrics`` table: per-stage row counts (the reference logs these ad
-  hoc, graphiti_core/graphiti.py:651).
+- ``metrics`` table: per-stage row counts, one file per run (the
+  reference logs these ad hoc, graphiti_core/graphiti.py:651).
 """
 
 from __future__ import annotations
@@ -312,64 +312,31 @@ class TableIO:
             df = df.where(F.col(non_null).isNotNull())
         return df.count()
 
-    def record_metric(self, stage: str, metric: str, value: float) -> None:
-        """Append one metric row; ``seq`` is a monotone write counter so
-        readers can order rows across batches. Appends a new file — no
-        read or rewrite of prior rows (each call adds one file, so the
-        existing file count is a free monotone sequence).
+    def record_metrics(self, rows: list[tuple[str, str, float]]) -> None:
+        """Append one run's (stage, metric, value) rows as ONE parquet
+        file. Every row carries the same ``seq``, the number of files
+        already in the table: each call adds exactly one file, so the
+        file count is a free monotone run counter that orders rows
+        across batches without reading any prior row.
 
-        Legacy tables written before the seq column existed are
-        backfilled in place on first touch (per-file pyarrow rewrite,
-        seq = the file's position in mtime order — exactly the value
-        the counter would have assigned); without this, mixed
-        3-col/4-col files make schema inference drop seq or fail,
-        depending on which file Spark samples."""
-        p = self.path("metrics")
-        files = (
-            sorted(
-                (f for f in os.listdir(p) if f.endswith(".parquet")),
-                key=lambda f: (os.stat(os.path.join(p, f)).st_mtime_ns, f),
-            )
-            if os.path.isdir(p)
-            else []
-        )
+        pyarrow writes the 4-column parquet Spark reads back; a Spark
+        write-job (createDataFrame + committer + dir listing) would cost
+        seconds per call at micro-batch cadence."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        for i, f in enumerate(files):
-            fp = os.path.join(p, f)
-            # footer-only schema probe; rewrite only legacy files
-            if "seq" in pq.read_schema(fp).names:
-                continue
-            t = pq.read_table(fp)
-            t = t.append_column("seq", pa.array([i] * t.num_rows, pa.int64()))
-            # drop the embedded Spark-schema JSON
-            # (org.apache.spark.sql.parquet.row.metadata): it still
-            # lists 3 columns and Spark trusts it over the footer
-            t = t.replace_schema_metadata(None)
-            pq.write_table(t, fp)
-            # the Hadoop checksum sidecar no longer matches the
-            # rewritten bytes — drop it or reads fail with ChecksumError
-            crc = os.path.join(p, f".{f}.crc")
-            if os.path.exists(crc):
-                os.remove(crc)
-        seq = len(files)
-        # one metric row does not need a Spark job: each append was a
-        # full write-job (createDataFrame + committer + dir listing,
-        # seconds each) and materialize_graph records ~17 metrics per
-        # micro-batch — the metrics were costing more than the merges.
-        # pyarrow writes the same 4-column parquet Spark reads back.
+        p = self.path("metrics")
         os.makedirs(p, exist_ok=True)
+        seq = sum(1 for f in os.listdir(p) if f.startswith("part-"))
+        stages, metrics, values = zip(*rows)
         t = pa.table(
             {
-                "stage": pa.array([stage], pa.string()),
-                "metric": pa.array([metric], pa.string()),
-                "value": pa.array([float(value)], pa.float64()),
-                "seq": pa.array([seq], pa.int64()),
+                "stage": pa.array(stages, pa.string()),
+                "metric": pa.array(metrics, pa.string()),
+                "value": pa.array([float(v) for v in values], pa.float64()),
+                "seq": pa.array([seq] * len(rows), pa.int64()),
             }
         )
         tmp = os.path.join(p, f".tmp-{_uuid.uuid4().hex}.parquet")
         pq.write_table(t, tmp)
-        os.rename(
-            tmp, os.path.join(p, f"part-metric-{_uuid.uuid4().hex}.parquet")
-        )
+        os.rename(tmp, os.path.join(p, f"part-metrics-{_uuid.uuid4().hex}.parquet"))

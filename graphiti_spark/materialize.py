@@ -1,17 +1,26 @@
 """Materialized pipeline runs: tables + lineage + metrics + resume.
 
-North-rule requirements implemented here:
-- every stage output lands in a partitioned table (parquet stand-in for
-  Iceberg; see io.tables.TableIO) — `episodes`, `triples_raw`, `nodes`,
-  `edges`, `mentions`, `uuid_map`, `node_stats`;
+A graph root has one on-disk layout and one merge path:
+- every stage output lands in a hash-partitioned table (parquet
+  stand-in for Iceberg; see io.tables.TableIO) — `episodes`,
+  `triples_raw`, `nodes`, `edges`, `mentions`, `uuid_map`,
+  `node_stats`, `episode_edges`, plus the `entity_bands` LSH index;
 - per-partition lineage rows (stage, partition, row_count,
-  content_hash) written after each stage;
-- per-stage metrics (row counts — the triple-count metrics);
-- idempotent resume: `materialize_graph` with `resume=True` anti-joins
-  the episode partitions against the extract stage's lineage and only
-  processes what is missing, then merges (keyed upserts) into the
-  downstream tables. Re-running after a crash (or running twice) gives
-  byte-identical tables.
+  content_hash) written after the merges;
+- one metrics write per `materialize_graph` call: row counts and the
+  O(batch) work counters, all sharing that call's `seq`;
+- idempotent resume: with `resume=True` the episode partitions already
+  in the extract stage's lineage are skipped, and the rest merge (keyed
+  upserts) into the stored tables. Re-running after a crash (or running
+  twice) gives byte-identical tables.
+
+The resolution strategy is derived from the root, never chosen by the
+caller. Once `entity_bands` exists (it is written last, so it marks a
+committed entity space) a batch resolves against only its LSH-collided
+neighborhood (operators/incremental.py). Without it — a fresh root, or
+a first build that died before its last write — the batch and every
+stored `uuid_map` name resolve in one global pass. Either way,
+micro-batches equal one global build of their union.
 
 Incremental batches are O(batch), not O(table):
 - `episodes`/`triples_raw` merge partition-scoped on the doc-hash
@@ -22,17 +31,16 @@ Incremental batches are O(batch), not O(table):
   so an incremental merge only re-groups/re-rectifies the buckets that
   hold (a) pairs present in the incoming batch and (b) stored rows
   whose endpoints appear in the CHANGED uuid-map entries (cluster
-  merges). Every other bucket's files stay on disk untouched, and the
-  result is byte-identical to a full-table re-merge (the window never
-  crosses a pair, and rectify is idempotent on unchanged pairs).
+  merges). Every other bucket's files stay on disk untouched (the
+  window never crosses a pair, and rectify is idempotent on unchanged
+  pairs).
 - `mentions` likewise on the doc-hash bucket `mpart` (a remap never
   moves a mention across docs).
-- `node_stats` (per-entity distinct-episode counts feeding node
-  summaries) is maintained incrementally: only entities mentioned in
-  the batch or touched by a cluster merge are re-aggregated (semi-join
-  on the merged mentions table); all other rows carry over.
+- `uuid_map`/`nodes`/`node_stats` merge on the entity-hash buckets
+  (`upart`/`npart`/`spart`): only entities mentioned in the batch or
+  touched by a cluster merge are rewritten; all other rows carry over.
 
-Partition key: `part = pmod(xxhash64(doc_id), n_buckets)` — the north
+Partition key: `part = pmod(xxhash64(doc_id), N_BUCKETS)` — the north
 rule's doc_id-hash partitioning. Entity/edge tables key on
 content-derived uuids, so upserts are naturally idempotent.
 """
@@ -57,26 +65,22 @@ EDGE_COLS = [
 ]
 
 
-def with_part(df: DataFrame, col: str = "doc_id", n_buckets: int = N_BUCKETS) -> DataFrame:
+def with_part(df: DataFrame) -> DataFrame:
     return df.withColumn(
-        "part", F.pmod(F.xxhash64(F.col(col)), F.lit(n_buckets)).cast("int")
+        "part", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(N_BUCKETS)).cast("int")
     )
 
 
-def edge_part(
-    group_id=None, src=None, dst=None, n_parts: int = EDGE_PARTS
-):
+def edge_part():
     """Hash bucket of the unordered endpoint pair — the edge table's
     physical partition. All rows of one (group, pair) land in one
     bucket, so per-pair regroup + bi-temporal rectify never cross a
     partition boundary."""
-    group_id = F.col("group_id") if group_id is None else group_id
-    src = F.col("source_node_uuid") if src is None else src
-    dst = F.col("target_node_uuid") if dst is None else dst
+    src, dst = F.col("source_node_uuid"), F.col("target_node_uuid")
     pair = F.concat_ws("~", F.least(src, dst), F.greatest(src, dst))
-    return F.pmod(F.xxhash64(F.concat_ws("|", group_id, pair)), F.lit(n_parts)).cast(
-        "int"
-    )
+    return F.pmod(
+        F.xxhash64(F.concat_ws("|", F.col("group_id"), pair)), F.lit(EDGE_PARTS)
+    ).cast("int")
 
 
 def _regroup_edges(df: DataFrame) -> DataFrame:
@@ -133,19 +137,12 @@ def _apply_edge_remap(edges: DataFrame, remap: DataFrame) -> DataFrame:
     return out.where(F.col("source_node_uuid") != F.col("target_node_uuid"))
 
 
-def _rebuild_episode_edges(io: TableIO, edges: DataFrame, n_buckets: int) -> None:
-    """Full rebuild of the forward-pointer index (first write / legacy
-    full-rewrite path)."""
-    ee = with_part(
-        edges.select(F.explode("episodes").alias("doc_id"), "uuid"),
-        n_buckets=n_buckets,
-    )
-    io.write("episode_edges", ee, partition_by=["part"])
+def _episode_edge_rows(edges: DataFrame) -> DataFrame:
+    """(doc_id, uuid, part) forward pointers of ``edges``' provenance."""
+    return with_part(edges.select(F.explode("episodes").alias("doc_id"), "uuid"))
 
 
-def _sync_episode_edges(
-    io: TableIO, replaced: DataFrame, rect: DataFrame, n_buckets: int
-) -> None:
+def _sync_episode_edges(io: TableIO, replaced: DataFrame, rect: DataFrame) -> None:
     """Incrementally maintain ``episode_edges`` (doc_id, edge_uuid) —
     the forward pointers the reference stores as
     ``episode.entity_edges`` (graphiti.py:513). A table (doc-hash
@@ -158,14 +155,8 @@ def _sync_episode_edges(
     ``rect``: their replacement rows. Only the doc-hash buckets holding
     either side's provenance are rewritten — O(affected), not O(table).
     """
-    removed = with_part(
-        replaced.select(F.explode("episodes").alias("doc_id"), "uuid"),
-        n_buckets=n_buckets,
-    )
-    added = with_part(
-        rect.select(F.explode("episodes").alias("doc_id"), "uuid"),
-        n_buckets=n_buckets,
-    )
+    removed = _episode_edge_rows(replaced)
+    added = _episode_edge_rows(rect)
     if not io.exists("episode_edges"):
         io.write("episode_edges", added.dropDuplicates(["doc_id", "uuid"]),
                  partition_by=["part"])
@@ -188,12 +179,7 @@ def _sync_episode_edges(
 
 
 def merge_edges(
-    io: TableIO,
-    updates: DataFrame,
-    remap: DataFrame | None = None,
-    n_parts: int = EDGE_PARTS,
-    full_rewrite: bool = False,
-    n_doc_buckets: int = N_BUCKETS,
+    io: TableIO, updates: DataFrame, remap: DataFrame | None = None
 ) -> dict:
     """Edge MERGE with provenance union + bi-temporal rectification,
     scoped to the affected pair-hash partitions.
@@ -203,36 +189,21 @@ def merge_edges(
     the tightest validity interval; T1/T2/T3 re-run ONLY over the
     (group, pair, pred_class) groups present in the incoming batch or
     touched by ``remap`` (changed old→canonical mappings) — the rectify
-    window is per-pair, so this is exactly equivalent to the full-table
-    pass (``full_rewrite=True`` keeps that legacy path for A/B tests).
-    All operations are monotone (min / array-union / least), so replays
-    converge — idempotent resume.
+    window is per-pair, so this is exactly equivalent to a full-table
+    pass. All operations are monotone (min / array-union / least), so
+    replays converge — idempotent resume.
 
-    Returns {"n_rows_rewritten", "n_parts_rewritten"}.
+    Returns {"n_rows_rewritten", "n_parts_rewritten", "replaced",
+    "written"} (-1 parts = first write of the table).
     """
     updates = updates.select(*EDGE_COLS)
     if not io.exists("edges"):
-        out = updates.withColumn("epart", edge_part(n_parts=n_parts))
-        io.write("edges", out, partition_by=["epart"])
-        _rebuild_episode_edges(io, io.read("edges"), n_doc_buckets)
-        n = io.fast_count("edges")
+        io.write("edges", updates.withColumn("epart", edge_part()),
+                 partition_by=["epart"])
+        io.write("episode_edges", _episode_edge_rows(io.read("edges")),
+                 partition_by=["part"])
         return {
-            "n_rows_rewritten": n, "n_parts_rewritten": -1,
-            "replaced": None, "written": io.read("edges"),
-        }
-
-    if full_rewrite:
-        stored = io.read("edges").select(*EDGE_COLS)
-        if remap is not None:
-            stored = _apply_edge_remap(stored, remap)
-        merged = _regroup_edges(stored.unionByName(updates))
-        rect = resolve_bitemporal(merged).select(*EDGE_COLS)
-        out = rect.withColumn("epart", edge_part(n_parts=n_parts))
-        io.write("edges", out, partition_by=["epart"])
-        _rebuild_episode_edges(io, io.read("edges"), n_doc_buckets)
-        n = io.fast_count("edges")
-        return {
-            "n_rows_rewritten": n, "n_parts_rewritten": -1,
+            "n_rows_rewritten": io.fast_count("edges"), "n_parts_rewritten": -1,
             "replaced": None, "written": io.read("edges"),
         }
 
@@ -258,7 +229,7 @@ def merge_edges(
         delta = remapped.unionByName(updates)
 
     # affected buckets: where delta rows land + where touched rows leave
-    part_src = delta.select(edge_part(n_parts=n_parts).alias("epart"))
+    part_src = delta.select(edge_part().alias("epart"))
     if touched is not None:
         part_src = part_src.unionByName(touched.select("epart"))
     parts = sorted({r.epart for r in part_src.dropDuplicates().collect()})
@@ -278,11 +249,11 @@ def merge_edges(
     rect = (
         resolve_bitemporal(merged)
         .select(*EDGE_COLS)
-        .withColumn("epart", edge_part(n_parts=n_parts))
+        .withColumn("epart", edge_part())
         .localCheckpoint(eager=True)
     )
     io.overwrite_partitions("edges", rect, "epart", parts=parts)
-    _sync_episode_edges(io, replaced, rect, n_doc_buckets)
+    _sync_episode_edges(io, replaced, rect)
     n = io.fast_count("edges", parts=("epart", parts))
     return {
         "n_rows_rewritten": n, "n_parts_rewritten": len(parts),
@@ -290,17 +261,8 @@ def merge_edges(
     }
 
 
-def upsert_edges(io: TableIO, updates: DataFrame) -> None:
-    """Back-compat wrapper: partition-scoped edge merge, no remap."""
-    merge_edges(io, updates)
-
-
 def merge_mentions(
-    io: TableIO,
-    updates: DataFrame,
-    remap: DataFrame | None = None,
-    n_buckets: int = N_BUCKETS,
-    full_rewrite: bool = False,
+    io: TableIO, updates: DataFrame, remap: DataFrame | None = None
 ) -> dict:
     """MENTIONS merge scoped to the doc-hash buckets holding (a) the
     batch's docs and (b) stored rows whose entity was re-canonicalized.
@@ -328,22 +290,9 @@ def merge_mentions(
             )
         )
 
-    updates = with_part(updates, n_buckets=n_buckets).withColumnRenamed(
-        "part", "mpart"
-    )
+    updates = with_part(updates).withColumnRenamed("part", "mpart")
     if not io.exists("mentions"):
         io.write("mentions", updates, partition_by=["mpart"])
-        return {"n_rows_rewritten": io.fast_count("mentions"), "n_parts_rewritten": -1}
-
-    if full_rewrite:
-        stored = _remap_rows(io.read("mentions").select(*mcols))
-        kept = stored.join(
-            F.broadcast(updates.select("uuid").dropDuplicates()), "uuid", "left_anti"
-        )
-        out = with_part(
-            kept.unionByName(updates.select(*mcols)), n_buckets=n_buckets
-        ).withColumnRenamed("part", "mpart")
-        io.write("mentions", out, partition_by=["mpart"])
         return {"n_rows_rewritten": io.fast_count("mentions"), "n_parts_rewritten": -1}
 
     stored = io.read("mentions")
@@ -366,16 +315,16 @@ def merge_mentions(
     kept = in_parts.join(
         F.broadcast(updates.select("uuid").dropDuplicates()), "uuid", "left_anti"
     )
-    out = with_part(
-        kept.unionByName(updates.select(*mcols)), n_buckets=n_buckets
-    ).withColumnRenamed("part", "mpart")
+    out = with_part(kept.unionByName(updates.select(*mcols))).withColumnRenamed(
+        "part", "mpart"
+    )
     io.overwrite_partitions("mentions", out, "mpart", parts=parts)
     n = io.fast_count("mentions", parts=("mpart", parts))
     return {"n_rows_rewritten": n, "n_parts_rewritten": len(parts)}
 
 
 def _update_node_stats(
-    io: TableIO, batch_mentions: DataFrame, changed: DataFrame | None
+    io: TableIO, batch_mentions: DataFrame, changed: DataFrame
 ) -> DataFrame:
     """Maintain per-entity distinct-episode counts incrementally: only
     entities mentioned in this batch or involved in a cluster merge are
@@ -396,7 +345,7 @@ def _update_node_stats(
 
     affected = batch_mentions.select("entity_uuid").dropDuplicates()
     dead = None
-    if changed is not None and not changed.isEmpty():
+    if not changed.isEmpty():
         affected = affected.unionByName(
             changed.select(F.col("_new").alias("entity_uuid"))
         ).dropDuplicates()
@@ -414,13 +363,6 @@ def _update_node_stats(
         .localCheckpoint(eager=True)
     )
     stored = io.read("node_stats")
-    if "spart" not in stored.columns:
-        # one-time layout migration from the unpartitioned format
-        kept = stored.join(
-            F.broadcast(drop_keys.select("entity_uuid")), "entity_uuid", "left_anti"
-        ).withColumn("spart", upart_col(F.col("entity_uuid")))
-        io.write("node_stats", kept.unionByName(fresh), partition_by=["spart"])
-        return io.read("node_stats")
     parts = sorted({r.spart for r in drop_keys.select("spart").distinct().collect()})
     if parts:
         kept = stored.where(F.col("spart").isin(parts)).join(
@@ -433,9 +375,8 @@ def _update_node_stats(
 
 
 def _merge_uuid_map(io: TableIO, rows: DataFrame) -> dict:
-    """Partition-scoped keyed upsert of restricted uuid_map rows —
-    replaces the legacy full-table overwrite. Ingest never deletes a
-    name (remove_episode handles durable deletes), so this is a pure
+    """Partition-scoped keyed upsert of restricted uuid_map rows.
+    Ingest never deletes a name (remove_episode handles durable deletes), so this is a pure
     upsert on the uuid key."""
     from .operators.incremental import upart_col
 
@@ -469,11 +410,6 @@ def _merge_nodes(io: TableIO, fresh: DataFrame, dead: DataFrame) -> dict:
         .localCheckpoint(eager=True)
     )
     stored = io.read("nodes")
-    if "npart" not in stored.columns:
-        kept = stored.join(F.broadcast(keys.select("uuid")), "uuid", "left_anti")
-        out = kept.withColumn("npart", upart_col(F.col("uuid"))).unionByName(fresh)
-        io.write("nodes", out, partition_by=["npart"])
-        return {"n_rows_rewritten": io.fast_count("nodes"), "n_parts_rewritten": -1}
     parts = sorted({r.npart for r in keys.select("npart").distinct().collect()})
     if not parts:
         return {"n_rows_rewritten": 0, "n_parts_rewritten": 0}
@@ -491,97 +427,98 @@ def materialize_graph(
     out_dir: str,
     resume: bool = False,
     batch_time: str = corpus.BATCH_TIME,
-    n_buckets: int = N_BUCKETS,
-    incremental: bool | None = None,
-    skip_completed: bool | None = None,
-    full_rewrite: bool = False,
-    edge_parts: int = EDGE_PARTS,
     search_indexes: bool = False,
 ) -> TableIO:
-    """Run the pipeline and persist all outputs with lineage/metrics.
+    """Run the pipeline on ``episodes`` and merge its outputs into the
+    graph root ``out_dir``, with lineage and one metrics write.
 
-    With resume=True, episode partitions already recorded in the
-    'extract' lineage are skipped; outputs MERGE into existing tables
-    keyed on their deterministic ids. Because ids and timestamps are
-    content-derived (never now()/uuid4), a partial re-run converges to
-    the same table state. ``full_rewrite=True`` forces the legacy
-    O(table) re-merge path (kept for equivalence tests).
+    The entity-resolution strategy follows from the root (see the
+    module docstring): restricted once ``entity_bands`` exists, global
+    over the batch plus the stored ``uuid_map`` names before that.
+    ``resume=True`` skips the episode partitions already recorded in
+    the 'extract' lineage (crash recovery over the same input). Ids
+    and timestamps are content-derived (never now()/uuid4), so a
+    re-run converges to the same table state.
+
+    The frames ``run_pipeline`` caches are released before returning.
     """
-    # resume = crash-recovery over the SAME logical batch: skip already
-    # completed partitions AND resolve against prior state. Streaming
-    # micro-batches want incremental=True / skip_completed=False (each
-    # batch has fresh doc_ids; the part buckets repeat, so the lineage
-    # anti-join must not apply — idempotency there comes from the
-    # sink's keyed merges + the stream checkpoint).
-    incremental = resume if incremental is None else incremental
-    skip_completed = resume if skip_completed is None else skip_completed
-
     io = TableIO(spark, out_dir)
-    eps = with_part(episodes, n_buckets=n_buckets)
-
-    todo = io.resume_filter("extract", eps, "part") if skip_completed else eps
+    eps = with_part(episodes)
+    todo = io.resume_filter("extract", eps, "part") if resume else eps
     if todo.isEmpty():
         return io
 
-    # Entity resolution strategy:
-    # - restricted (the default incremental path once the band index
-    #   exists): resolve the batch against ONLY the LSH-collided
-    #   neighborhood of the existing graph — O(batch) compute, provably
-    #   identical output to the global path (operators/incremental.py).
-    # - global: first load, legacy roots (no entity_bands yet — this
-    #   run bootstraps the index), or full_rewrite=True A/B runs;
-    #   resolves batch ∪ ALL stored surface forms in one pass.
-    from .operators.incremental import (
-        BAND_INDEX_WRITE_OPTIONS,
-        entity_band_rows,
-        incremental_resolve,
-        upart_col,
-    )
+    from .operators.incremental import incremental_resolve
 
-    use_restricted = (
-        incremental
-        and not full_rewrite
-        and io.exists("uuid_map")
-        and io.exists("entity_bands")
-        and "upart" in io.read("uuid_map").columns
-    )
-    res_side: dict = {}
-    if use_restricted:
+    restricted: dict | None = None
+    if io.exists("entity_bands"):
+        # resolve the batch against ONLY the LSH-collided neighborhood
+        # of the stored graph — O(batch) compute, identical output to
+        # the global pass (operators/incremental.py)
+        restricted = {}
+
         def _resolver(mentions_raw):
-            info = incremental_resolve(io, mentions_raw)
-            res_side.update(info)
-            return info["uuid_map"], info["entities"]
+            restricted.update(incremental_resolve(io, mentions_raw))
+            return restricted["uuid_map"], restricted["entities"]
 
         out = run_pipeline(
             spark, todo.drop("part"), batch_time=batch_time, resolver=_resolver
         )
-        changed = res_side["changed"].localCheckpoint(eager=True)
     else:
-        existing_names = (
+        stored_names = (
             io.read("uuid_map").select("group_id", "name")
-            if incremental and io.exists("uuid_map")
+            if io.exists("uuid_map")
             else None
         )
         out = run_pipeline(
             spark,
             todo.drop("part"),
             batch_time=batch_time,
-            extra_entity_names=existing_names,
+            extra_entity_names=stored_names,
         )
+    try:
+        _merge_batch(io, eps, out, restricted, search_indexes)
+    finally:
+        for df in (out.triples_raw, out.entities, out.uuid_map):
+            df.unpersist()
+    return io
+
+
+def _merge_batch(
+    io: TableIO,
+    eps: DataFrame,
+    out,
+    restricted: dict | None,
+    search_indexes: bool,
+) -> None:
+    """Merge one pipeline output into the root. ``restricted`` is the
+    incremental resolver's result, or None after a global resolution
+    (whose uuid_map IS the full entity space)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from .operators.incremental import (
+        BAND_INDEX_WRITE_OPTIONS,
+        entity_band_rows,
+        upart_col,
+    )
+    from .operators.ontology import enrich_nodes_with_stats
+
+    if restricted is not None:
+        changed = restricted["changed"].localCheckpoint(eager=True)
+    else:
         # Only CHANGED mappings re-canonicalize stored rows (identity
         # mappings are no-ops by construction: canonical names are a
         # deterministic function of the canonical uuid).
-        remap = out.uuid_map.select(
-            F.col("uuid").alias("_old"),
-            F.col("canonical_uuid").alias("_new"),
-            F.col("canonical_name").alias("_new_name"),
+        changed = (
+            out.uuid_map.select(
+                F.col("uuid").alias("_old"),
+                F.col("canonical_uuid").alias("_new"),
+                F.col("canonical_name").alias("_new_name"),
+            )
+            .where(F.col("_old") != F.col("_new"))
+            .localCheckpoint(eager=True)
         )
-        changed = remap.where(F.col("_old") != F.col("_new")).localCheckpoint(
-            eager=True
-        )
-    uuid_map = out.uuid_map
-
-    triples = with_part(out.triples_raw, n_buckets=n_buckets)
+    triples = with_part(out.triples_raw)
 
     # A new batch can merge clusters the old graph kept separate, so
     # stored edges/mentions must be re-canonicalized through the new
@@ -592,12 +529,9 @@ def materialize_graph(
     # upstream plans, so they are submitted from a thread pool: Spark
     # runs the jobs concurrently (multi-threaded job submission is the
     # supported pattern) and the per-batch DRIVER latency — plan
-    # compile, job scheduling, commit renames, the dominant micro-batch
-    # fixed cost per the round-3 profile — overlaps instead of
+    # compile, job scheduling, commit renames — overlaps instead of
     # serializing. Each merge is byte-for-byte the job it was when
     # sequential; only wall-clock changes.
-    from concurrent.futures import ThreadPoolExecutor
-
     jobs = {
         "episodes": lambda: io.merge_upsert(
             "episodes", eps, key_cols=["doc_id"], partition_col="part"
@@ -606,18 +540,12 @@ def materialize_graph(
             "triples_raw", triples, key_cols=["doc_id", "offset"],
             partition_col="part",
         ),
-        "edges": lambda: merge_edges(
-            io, out.edges, remap=changed, n_parts=edge_parts,
-            full_rewrite=full_rewrite,
-        ),
-        "mentions": lambda: merge_mentions(
-            io, out.mentions, remap=changed, n_buckets=n_buckets,
-            full_rewrite=full_rewrite,
-        ),
+        "edges": lambda: merge_edges(io, out.edges, remap=changed),
+        "mentions": lambda: merge_mentions(io, out.mentions, remap=changed),
     }
-    if use_restricted:
-        jobs["uuid_map"] = lambda: _merge_uuid_map(io, uuid_map)
-        new_bands_plan = entity_band_rows(res_side["new_entities"])
+    if restricted is not None:
+        jobs["uuid_map"] = lambda: _merge_uuid_map(io, out.uuid_map)
+        new_bands_plan = entity_band_rows(restricted["new_entities"])
 
         def _append_bands():
             nb = new_bands_plan.localCheckpoint(eager=True)
@@ -637,58 +565,43 @@ def materialize_graph(
     mention_stats = merged["mentions"]
 
     # Node enrichment (summary = all-time mention stats) must see the
-    # MERGED mention counts; node_stats maintains them incrementally.
-    from .operators.ontology import enrich_nodes_with_stats
-
-    if use_restricted:
-        # entity-space tables: partition-scoped keyed merges over the
-        # restricted rows only — never a full rewrite. uuid_map and the
-        # band index merged in the pool above; node_stats must follow
-        # the mentions merge, nodes must follow node_stats.
+    # MERGED mention counts; node_stats maintains them incrementally,
+    # so it follows the mentions merge and nodes follow node_stats.
+    stats = _update_node_stats(io, out.mentions, changed)
+    nodes = enrich_nodes_with_stats(
+        out.nodes.select("group_id", "uuid", "name", "name_embedding", "created_at"),
+        stats,
+    )
+    if restricted is not None:
+        # partition-scoped keyed merges over the restricted rows only
         resolve_stats = merged["uuid_map"]
-        stats = _update_node_stats(io, out.mentions, changed)
-        nodes_base = out.nodes.select(
-            "group_id", "uuid", "name", "name_embedding", "created_at"
-        )
-        node_stats_merge = _merge_nodes(
-            io,
-            enrich_nodes_with_stats(nodes_base, stats),
-            res_side["dead_canonicals"],
-        )
+        node_merge = _merge_nodes(io, nodes, restricted["dead_canonicals"])
     else:
         # global resolution: the map IS the full entity space —
-        # overwrite (stale canonicals disappear, as in a fresh run).
-        resolve_stats = {
+        # overwrite (stale canonicals disappear, as in a fresh run),
+        # then write the band index LAST: it marks the entity space as
+        # committed, so the next batch takes the restricted path
+        resolve_stats = node_merge = {
             "n_rows_rewritten": -1, "n_parts_rewritten": -1,
         }
         io.write(
             "uuid_map",
-            uuid_map.withColumn("upart", upart_col(F.col("uuid"))),
+            out.uuid_map.withColumn("upart", upart_col(F.col("uuid"))),
             partition_by=["upart"],
         )
-        stats = _update_node_stats(io, out.mentions, changed)
-        nodes_base = out.nodes.select(
-            "group_id", "uuid", "name", "name_embedding", "created_at"
-        )
-        node_stats_merge = {"n_rows_rewritten": -1, "n_parts_rewritten": -1}
         io.write(
             "nodes",
-            enrich_nodes_with_stats(nodes_base, stats).withColumn(
-                "npart", upart_col(F.col("uuid"))
-            ),
+            nodes.withColumn("npart", upart_col(F.col("uuid"))),
             partition_by=["npart"],
         )
-        if incremental:
-            # bootstrap/refresh the append-only LSH band index so the
-            # NEXT batch can take the restricted path
-            io.write(
-                "entity_bands",
-                entity_band_rows(
-                    io.read("uuid_map").select("group_id", "uuid", "name")
-                ).sortWithinPartitions("key"),
-                partition_by=["kpart"],
-                options=BAND_INDEX_WRITE_OPTIONS,
-            )
+        io.write(
+            "entity_bands",
+            entity_band_rows(
+                io.read("uuid_map").select("group_id", "uuid", "name")
+            ).sortWithinPartitions("key"),
+            partition_by=["kpart"],
+            options=BAND_INDEX_WRITE_OPTIONS,
+        )
 
     # Opt-in persistent fulltext indexes (reference index DDL,
     # graph_queries.py:68-86), maintained O(batch) per micro-batch:
@@ -722,43 +635,26 @@ def materialize_graph(
     # lineage AFTER the writes (a crash before this point re-runs the
     # partitions; the keyed merges make that idempotent)
     io.record_lineage("extract", triples, "part")
-    # table-size metrics from footer stats (Iceberg snapshot-stats
-    # stand-in) — NOT Spark counts, which would re-scan every table
-    # per micro-batch
-    io.record_metric("extract", "n_triples", io.fast_count("triples_raw"))
-    io.record_metric("resolve", "n_nodes", io.fast_count("nodes"))
-    io.record_metric("edges", "n_edges", io.fast_count("edges"))
-    io.record_metric(
-        "edges", "n_invalidated", io.fast_count("edges", non_null="invalid_at")
-    )
-    io.record_metric("mentions", "n_mentions", io.fast_count("mentions"))
-    # O(batch) evidence: how much the edge/mention merges actually
-    # rewrote (-1 parts = initial or full rewrite).
-    io.record_metric("edges_merge", "n_rows_rewritten", edge_stats["n_rows_rewritten"])
-    io.record_metric(
-        "edges_merge", "n_parts_rewritten", edge_stats["n_parts_rewritten"]
-    )
-    io.record_metric(
-        "mentions_merge", "n_rows_rewritten", mention_stats["n_rows_rewritten"]
-    )
-    io.record_metric(
-        "mentions_merge", "n_parts_rewritten", mention_stats["n_parts_rewritten"]
-    )
-    # O(batch) evidence for the entity-resolution merge (-1 = global/
-    # bootstrap run): rows + parts the uuid_map/nodes merges rewrote,
-    # and the size of the restricted vertex set actually resolved.
-    io.record_metric(
-        "resolve_merge", "n_rows_rewritten", resolve_stats["n_rows_rewritten"]
-    )
-    io.record_metric(
-        "resolve_merge", "n_parts_rewritten", resolve_stats["n_parts_rewritten"]
-    )
-    io.record_metric(
-        "nodes_merge", "n_rows_rewritten", node_stats_merge["n_rows_rewritten"]
-    )
-    io.record_metric(
-        "nodes_merge", "n_parts_rewritten", node_stats_merge["n_parts_rewritten"]
-    )
-    for k, v in res_side.get("metrics", {}).items():
-        io.record_metric("resolve_incremental", k, v)
-    return io
+    # Table sizes come from footer stats (Iceberg snapshot-stats
+    # stand-in), NOT Spark counts, which would re-scan every table per
+    # micro-batch. The *_merge rows are the O(batch) evidence: rows and
+    # parts each merge rewrote (-1 = first write or global overwrite).
+    metrics = [
+        ("extract", "n_triples", io.fast_count("triples_raw")),
+        ("resolve", "n_nodes", io.fast_count("nodes")),
+        ("edges", "n_edges", io.fast_count("edges")),
+        ("edges", "n_invalidated", io.fast_count("edges", non_null="invalid_at")),
+        ("mentions", "n_mentions", io.fast_count("mentions")),
+    ]
+    for stage, st in (
+        ("edges_merge", edge_stats),
+        ("mentions_merge", mention_stats),
+        ("resolve_merge", resolve_stats),
+        ("nodes_merge", node_merge),
+    ):
+        metrics += [(stage, k, st[k]) for k in ("n_rows_rewritten", "n_parts_rewritten")]
+    if restricted is not None:
+        metrics += [
+            ("resolve_incremental", k, v) for k, v in restricted["metrics"].items()
+        ]
+    io.record_metrics(metrics)

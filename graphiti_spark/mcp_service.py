@@ -40,6 +40,9 @@ import sys
 from datetime import datetime, timezone
 
 PROTOCOL_VERSION = "2024-11-05"
+# bound on serve_stdio's final ingest-queue drain; matches the default
+# timeout of the HTTP surface's POST /flush
+FLUSH_TIMEOUT_S = 300
 
 
 
@@ -122,9 +125,11 @@ class McpServer:
 
     def serve_stdio(self, stdin=None, stdout=None) -> None:
         """MCP stdio transport: newline-delimited JSON-RPC. Blocks
-        until stdin closes; drains the ingest queue before returning
-        (episodes acked as queued must not vanish with the daemon
-        thread at process exit). A malformed line yields a JSON-RPC
+        until stdin closes; drains the ingest queue, for at most
+        ``FLUSH_TIMEOUT_S``, before returning (episodes acked as queued
+        must not vanish with the daemon thread at process exit; a
+        wedged job must not hang the exit either — an undrained queue
+        is reported on stderr). A malformed line yields a JSON-RPC
         -32700 parse-error response and the loop keeps serving — one
         bad client write must not take the server (and its queue)
         down."""
@@ -149,7 +154,13 @@ class McpServer:
                     stdout.write(json.dumps(resp) + "\n")
                     stdout.flush()
         finally:
-            self.worker.flush()
+            if not self.worker.flush(timeout=FLUSH_TIMEOUT_S):
+                print(
+                    f"graphiti-spark: ingest queue not drained after "
+                    f"{FLUSH_TIMEOUT_S}s; {self.worker.queue.unfinished_tasks} "
+                    f"job(s) pending",
+                    file=sys.stderr,
+                )
 
     # ------------------------------------------------------------------
     # tools

@@ -64,8 +64,9 @@ def add_triplet(
 ) -> DataFrame:
     """Insert one manual triple through the standard machinery:
     deterministic ids, provenance-free edge row, then bi-temporal
-    re-resolution of the touched pair group. Returns the new edges
-    DataFrame (caller persists via TableIO/upsert_edges)."""
+    re-resolution of the touched pair group. Returns the whole new edges
+    DataFrame for the caller to persist (``GraphitiSpark.add_triplet``
+    is the partition-scoped write, via ``materialize.merge_edges``)."""
     from ..operators.temporal import resolve_bitemporal
 
     spark = edges.sparkSession

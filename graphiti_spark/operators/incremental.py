@@ -5,7 +5,7 @@ node, search the EXISTING graph for candidates; never re-cluster the
 whole graph) + ``compress_uuid_map`` (bulk_utils.py:400-409).
 
 Why this is exactly equivalent to re-resolving the entire entity space
-(the legacy path in pipeline.run_pipeline with ``extra_entity_names``):
+(the global path in pipeline.run_pipeline with ``extra_entity_names``):
 
 - Entity uuids and LSH band keys are both pure functions of
   (group_id, lower(name)) — ``schemas.entity_uuid`` and
@@ -128,9 +128,8 @@ def incremental_resolve(
     only the LSH-collided neighborhood.
 
     ``mentions_raw``: the batch's extracted (group_id, name, ...)
-    mention rows. Requires ``uuid_map`` (upart-partitioned) and
-    ``entity_bands`` to exist (materialize_graph bootstraps them on the
-    first incremental run).
+    mention rows. Requires ``uuid_map`` and ``entity_bands`` to exist
+    (materialize_graph's first, global run writes them).
 
     Two physical strategies behind one semantics (the same adaptive
     pattern as ``connected_components``):

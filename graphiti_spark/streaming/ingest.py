@@ -10,10 +10,11 @@ window is session state; edge invalidation is its late-data handling.
 
 Spark mapping: ``readStream`` over the episodes table directory →
 ``foreachBatch`` running the SAME batch pipeline incrementally
-(materialize_graph with incremental=True), with all state in the graph
-tables (exactly how the reference uses Neo4j as its only state). No
-watermark: facts arriving out of event order UPDATE validity intervals
-(T1/T2 are monotone merges), they are never dropped.
+(materialize_graph, which resolves each micro-batch against the stored
+graph), with all state in the graph tables (exactly how the reference
+uses Neo4j as its only state). No watermark: facts arriving out of
+event order UPDATE validity intervals (T1/T2 are monotone merges), they
+are never dropped.
 
 Exactly-once story: the stream checkpoint gives at-least-once
 foreachBatch delivery; the sink's keyed merges + monotone interval
@@ -58,8 +59,6 @@ def stream_episodes(
             batch_df,
             out_dir,
             batch_time=batch_time,
-            incremental=True,
-            skip_completed=False,
             search_indexes=search_indexes,
         )
 

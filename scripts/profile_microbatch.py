@@ -2,7 +2,9 @@
 incremental_microbatch stage) with per-function cumulative wall time —
 py4j blocking attributes Spark job time to the driver frame that
 launched it, which is exactly the per-batch fixed-cost breakdown the
-round-3 verdict asked for."""
+round-3 verdict asked for.
+
+Cores default to the machine's count; SPARK_GRAFT_CPUS overrides it."""
 import cProfile
 import os
 import pstats
@@ -19,22 +21,20 @@ from graphiti_spark.materialize import materialize_graph  # noqa: E402
 from graphiti_spark.synth import synthesize_episodes  # noqa: E402
 
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-spark = get_spark(cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+spark = get_spark(cpus=int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()))
 
 root = tempfile.mkdtemp(prefix="prof_graph_")
 base = synthesize_episodes(spark, sf_dir)
 bucket = SF.pmod(SF.xxhash64("doc_id"), SF.lit(10)).cast("int")
 t0 = time.perf_counter()
-materialize_graph(
-    spark, base.where(bucket != 0), root, incremental=True, skip_completed=False
-)
+materialize_graph(spark, base.where(bucket != 0), root)
 print(f"bootstrap: {time.perf_counter() - t0:.1f}s", flush=True)
 
 micro = base.where((bucket == 0) & (SF.col("group_id") == "g0"))
 t0 = time.perf_counter()
 prof = cProfile.Profile()
 prof.enable()
-materialize_graph(spark, micro, root, incremental=True, skip_completed=False)
+materialize_graph(spark, micro, root)
 prof.disable()
 print(f"microbatch: {time.perf_counter() - t0:.1f}s", flush=True)
 

@@ -47,10 +47,12 @@ def main() -> None:
         raise SystemExit("one of --episodes / --sf-dir is required")
 
     io = materialize_graph(spark, episodes, args.output, resume=args.resume)
-    metrics = {
-        (r.stage, r.metric): r.value for r in io.read("metrics").collect()
-    }
-    print(json.dumps({f"{s}.{m}": v for (s, m), v in sorted(metrics.items())}))
+    # each materialize_graph call writes one metrics file; print the
+    # latest (a --resume with nothing left to do writes none)
+    rows = io.read("metrics").collect()
+    last = max(r.seq for r in rows)
+    metrics = {f"{r.stage}.{r.metric}": r.value for r in rows if r.seq == last}
+    print(json.dumps(dict(sorted(metrics.items()))))
     spark.stop()
 
 

@@ -261,3 +261,19 @@ def test_compact_preserves_content_and_coalesces_files(spark, graph):
     n_map = graph.table("uuid_map").count()
     graph.add_episodes(eps)
     assert graph.table("uuid_map").count() == n_map  # re-ingest: no new entities
+
+
+def test_saved_node_on_empty_root_survives_add_episodes(spark, tmp_path_factory):
+    """save_entity_node on a root with no tables writes the partitioned
+    layout and registers the node in uuid_map and the band index, so
+    the next add_episodes resolves against it instead of overwriting
+    the entity tables with the batch's entities only."""
+    g = GraphitiSpark(spark, str(tmp_path_factory.mktemp("empty_root")))
+    uuid = g.save_entity_node("g0", "Zorblax Quantum Ltd", summary="saved by hand")
+    eps = synthesize_episodes(spark, SF_SMOKE).where(F.col("doc_id") < "doc-000050")
+    g.add_episodes(eps)
+
+    saved = g.nodes.where(F.col("uuid") == uuid).collect()
+    assert len(saved) == 1 and saved[0].summary == "saved by hand"
+    assert g.table("uuid_map").where(F.col("uuid") == uuid).count() == 1
+    assert g.mentions.count() > 0  # the batch itself landed too

@@ -108,7 +108,7 @@ def _mk_root(spark, tmp_path, episodes):
     from graphiti_spark.materialize import materialize_graph
 
     root = str(tmp_path / "graph")
-    materialize_graph(spark, episodes, root, incremental=True, skip_completed=False)
+    materialize_graph(spark, episodes, root)
     return root
 
 
@@ -162,17 +162,11 @@ def test_materialize_incremental_uses_driver_path_and_stays_equivalent(
     bucket = F.pmod(F.xxhash64("doc_id"), F.lit(10)).cast("int")
 
     root_inc = str(tmp_path / "inc")
-    materialize_graph(
-        spark, eps.where(bucket != 0), root_inc, incremental=True,
-        skip_completed=False,
-    )
-    materialize_graph(
-        spark, eps.where(bucket == 0), root_inc, incremental=True,
-        skip_completed=False,
-    )
+    materialize_graph(spark, eps.where(bucket != 0), root_inc)
+    materialize_graph(spark, eps.where(bucket == 0), root_inc)
 
     root_full = str(tmp_path / "full")
-    materialize_graph(spark, eps, root_full, incremental=True, skip_completed=False)
+    materialize_graph(spark, eps, root_full)
 
     cols = ["group_id", "uuid", "name", "canonical_uuid", "canonical_name"]
     a = sorted(

@@ -108,7 +108,8 @@ def _edge_part_files(io: TableIO):
 def test_incremental_merge_o_batch_and_equivalent(spark, episodes, tmp_path_factory):
     """Scale contract of the incremental write path: batch N+1 rewrites
     only the pair-hash buckets it touches (O(batch), not O(table)), and
-    the result is byte-identical to the legacy full-table re-merge."""
+    the result is byte-identical to one global build of the union of
+    the batches."""
     inc_dir = str(tmp_path_factory.mktemp("inc"))
     full_dir = str(tmp_path_factory.mktemp("fullrw"))
 
@@ -121,17 +122,13 @@ def test_incremental_merge_o_batch_and_equivalent(spark, episodes, tmp_path_fact
         eps_b.where(F.col("b") == 9).drop("b"),     # small increment
     ]
     for df in batches:
-        io_inc = materialize_graph(
-            spark, df, inc_dir, incremental=True, skip_completed=False
-        )
+        io_inc = materialize_graph(spark, df, inc_dir)
     before = _edge_part_files(io_inc)
 
     # one more tiny batch: a handful of docs
     tiny_ids = [r.doc_id for r in episodes.select("doc_id").limit(4).collect()]
     tiny = episodes.where(F.col("doc_id").isin(tiny_ids))
-    io_inc = materialize_graph(
-        spark, tiny, inc_dir, incremental=True, skip_completed=False
-    )
+    io_inc = materialize_graph(spark, tiny, inc_dir)
     after = _edge_part_files(io_inc)
 
     metrics = [
@@ -148,12 +145,8 @@ def test_incremental_merge_o_batch_and_equivalent(spark, episodes, tmp_path_fact
     assert len(untouched) > len(changed)  # most buckets untouched on disk
     assert len(changed) <= parts_rewritten[-1]
 
-    # equivalence: same batches through the legacy full-rewrite path
-    for df in batches + [tiny]:
-        io_full = materialize_graph(
-            spark, df, full_dir, incremental=True, skip_completed=False,
-            full_rewrite=True,
-        )
+    # equivalence: one global build of the union of the batches
+    io_full = materialize_graph(spark, episodes, full_dir)
     for t in TABLES:
         assert _table_fingerprint(io_inc, t) == _table_fingerprint(io_full, t), t
 
@@ -171,14 +164,14 @@ def test_incremental_resolve_o_batch(spark, episodes, tmp_path_factory):
         "b", F.pmod(F.xxhash64("doc_id"), F.lit(10)).cast("int")
     )
     big = eps_b.where(F.col("b") < 9).drop("b")
-    io = materialize_graph(spark, big, d, incremental=True, skip_completed=False)
+    io = materialize_graph(spark, big, d)
     total_entities = io.read("uuid_map").count()
     nodes_before = _part_files(io, "nodes", "npart")
     map_before = _part_files(io, "uuid_map", "upart")
 
     tiny_ids = [r.doc_id for r in episodes.select("doc_id").limit(3).collect()]
     tiny = episodes.where(F.col("doc_id").isin(tiny_ids))
-    io = materialize_graph(spark, tiny, d, incremental=True, skip_completed=False)
+    io = materialize_graph(spark, tiny, d)
 
     metrics = [
         (r.stage, r.metric, r.value)
@@ -203,30 +196,28 @@ def test_incremental_resolve_o_batch(spark, episodes, tmp_path_factory):
         assert len(untouched) > 0.5 * len(before), table
 
 
+def _crafted_episodes(spark, rows):
+    """One-span episodes of group "g" from (doc_id, text) pairs."""
+    import datetime as dt
+
+    from graphiti_spark.schemas import EPISODES_SCHEMA
+
+    t0 = dt.datetime(2024, 1, 1)
+    return spark.createDataFrame(
+        [
+            (doc, "g", doc, "message", "test", [("text", text, "", 0)], t0, t0)
+            for doc, text in rows
+        ],
+        EPISODES_SCHEMA,
+    )
+
+
 def test_incremental_resolve_cross_batch_merge(spark, tmp_path_factory):
     """A later batch can merge an entity cluster the earlier batches
     kept separate: the restricted resolver must pull the stored
     component, re-pick the canonical, delete the swallowed canonical's
     nodes row, and re-canonicalize stored edges — matching a
     from-scratch run over the union of batches."""
-    import datetime as dt
-
-    from graphiti_spark.schemas import EPISODES_SCHEMA
-
-    t0 = dt.datetime(2024, 1, 1)
-
-    def eps(rows):
-        return spark.createDataFrame(
-            [
-                (
-                    doc, "g", doc, "message", "test",
-                    [("text", text, "", 0)], t0, t0,
-                )
-                for doc, text in rows
-            ],
-            EPISODES_SCHEMA,
-        )
-
     b1 = [
         ("d1", "Narrator: Alice Johnson works for Acme Corporation since 2020."),
         ("d2", "Narrator: Bob Stone works for Initech since 2021."),
@@ -236,16 +227,12 @@ def test_incremental_resolve_cross_batch_merge(spark, tmp_path_factory):
     b2 = [("d3", "Narrator: Carol Price works for Acme Corp since 2022.")]
 
     inc = str(tmp_path_factory.mktemp("xinc"))
-    io_inc = materialize_graph(
-        spark, eps(b1), inc, incremental=True, skip_completed=False
-    )
+    io_inc = materialize_graph(spark, _crafted_episodes(spark, b1), inc)
     assert io_inc.exists("entity_bands")
-    io_inc = materialize_graph(
-        spark, eps(b2), inc, incremental=True, skip_completed=False
-    )
+    io_inc = materialize_graph(spark, _crafted_episodes(spark, b2), inc)
 
     full = str(tmp_path_factory.mktemp("xfull"))
-    io_full = materialize_graph(spark, eps(b1 + b2), full, skip_completed=False)
+    io_full = materialize_graph(spark, _crafted_episodes(spark, b1 + b2), full)
 
     for t in ("nodes", "uuid_map", "edges", "mentions"):
         assert _table_fingerprint(io_inc, t) == _table_fingerprint(io_full, t), t
@@ -256,6 +243,71 @@ def test_incremental_resolve_cross_batch_merge(spark, tmp_path_factory):
         if "Acme" in r.name
     }
     assert len(m) == 2 and set(m.values()) == {"Acme Corp"}
+
+
+def test_two_default_calls_equal_one_global_build(spark, tmp_path_factory):
+    """Two default calls on one root with disjoint batches equal one
+    global build of their union: the second call finds the committed
+    entity space (entity_bands) and resolves against it instead of
+    overwriting uuid_map/nodes with its own entities. Every call leaves
+    exactly one metrics file, whose rows share one seq."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    b1 = [
+        ("d1", "Narrator: Alice Johnson works for Acme Corporation since 2020."),
+        ("d2", "Narrator: Bob Stone works for Initech since 2021."),
+    ]
+    b2 = [
+        ("d3", "Narrator: Alice Johnson works for Initech since 2023."),
+        ("d4", "Narrator: Dana White works for Globex since 2022."),
+    ]
+    two = str(tmp_path_factory.mktemp("two_calls"))
+    materialize_graph(spark, _crafted_episodes(spark, b1), two)
+    io_two = materialize_graph(spark, _crafted_episodes(spark, b2), two)
+    one = str(tmp_path_factory.mktemp("one_call"))
+    io_one = materialize_graph(spark, _crafted_episodes(spark, b1 + b2), one)
+
+    for t in ("nodes", "uuid_map", "edges", "mentions"):
+        assert _table_fingerprint(io_two, t) == _table_fingerprint(io_one, t), t
+
+    for io, n_calls in ((io_two, 2), (io_one, 1)):
+        p = io.path("metrics")
+        files = sorted(f for f in os.listdir(p) if f.endswith(".parquet"))
+        assert len(files) == n_calls
+        seqs = [
+            set(pq.read_table(os.path.join(p, f)).column("seq").to_pylist())
+            for f in files
+        ]
+        assert sorted(s for ss in seqs for s in ss) == list(range(n_calls))
+
+
+def _n_cached_plans(spark) -> int:
+    """Entry count of the session's CacheManager (every
+    DataFrame.cache/persist registers one). The JVM keeps the list
+    private, so it is read by reflection."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    return field.get(cm).size()
+
+
+def test_materialize_releases_cached_frames(spark, episodes, tmp_path_factory):
+    """A bootstrap materialize_graph plus a restricted add_episodes
+    leave the session's cache as they found it: the frames
+    run_pipeline caches are released before the calls return."""
+    from graphiti_spark.graphiti import GraphitiSpark
+
+    d = str(tmp_path_factory.mktemp("uncache"))
+    eps_p = with_part(episodes)
+    before = _n_cached_plans(spark)
+    materialize_graph(spark, eps_p.where(F.col("part") < 16).drop("part"), d)
+    assert _n_cached_plans(spark) == before
+    g = GraphitiSpark(spark, d)
+    assert g.io.exists("entity_bands")  # the next call takes the restricted path
+    g.add_episodes(eps_p.where(F.col("part") >= 16).drop("part"))
+    assert _n_cached_plans(spark) == before
 
 
 def test_partition_scoped_merge_upsert(spark, tmp_path_factory):
@@ -279,25 +331,6 @@ def test_partition_scoped_merge_upsert(spark, tmp_path_factory):
     assert [
         os.stat(os.path.join(p0, f)).st_mtime_ns for f in stat_before
     ] == mtimes_before
-
-
-def test_metrics_seq_backfill_on_legacy_table(spark, tmp_path_factory):
-    """ADVICE r2: a metrics table written before the seq column existed
-    is backfilled in place (file order) on the first new append, so
-    reads never mix 3-col and 4-col parquet schemas."""
-    import time
-
-    d = str(tmp_path_factory.mktemp("mseq"))
-    io = TableIO(spark, d)
-    for v in (1.0, 2.0):  # two legacy appends: no seq column
-        row = spark.createDataFrame(
-            [("s", "m", v)], "stage string, metric string, value double"
-        )
-        io.append("metrics", row.coalesce(1))
-        time.sleep(0.05)
-    io.record_metric("s", "m", 3.0)
-    got = [(r.value, r.seq) for r in io.read("metrics").orderBy("seq").collect()]
-    assert got == [(1.0, 0), (2.0, 1), (3.0, 2)]
 
 
 def test_overwrite_partitions_empties_listed_part(spark, tmp_path_factory):
@@ -351,7 +384,7 @@ def test_search_indexes_maintained_incrementally(spark, episodes, tmp_path_facto
     for b in (0, 1):
         io = materialize_graph(
             spark, eps_b.where(F.col("b") == b).drop("b"), d,
-            incremental=True, skip_completed=False, search_indexes=True,
+            search_indexes=True,
         )
     live = {r.uuid for r in io.read("edges").select("uuid").collect()}
     eidx = SearchIndex(io, "ft_edges")
@@ -403,7 +436,7 @@ def test_band_lookup_pushes_key_predicate(spark, episodes, tmp_path_factory):
     from graphiti_spark.operators.resolve import distinct_entities
 
     d = str(tmp_path_factory.mktemp("bands_push"))
-    io = materialize_graph(spark, episodes, d, incremental=True, skip_completed=False)
+    io = materialize_graph(spark, episodes, d)
 
     batch = distinct_entities(
         spark.createDataFrame(

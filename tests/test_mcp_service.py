@@ -208,3 +208,32 @@ def test_clear_graph_drops_every_table_dir(mcp, spark):
     _tool(server, "clear_graph")
     assert not graph.io.exists("ft_probe_postings")
     assert not graph.io.exists("episodes")
+
+
+def test_serve_stdio_final_drain_is_bounded(monkeypatch, capsys):
+    """A wedged ingest job must not hang serve_stdio's exit: the final
+    drain waits FLUSH_TIMEOUT_S, then reports the undrained queue on
+    stderr and returns."""
+    import io
+    import threading
+
+    from graphiti_spark import mcp_service
+    from graphiti_spark.service import IngestJob, IngestWorker
+
+    monkeypatch.setattr(mcp_service, "FLUSH_TIMEOUT_S", 0.2)
+    release = threading.Event()
+    worker = IngestWorker()
+    server = McpServer(graph=None, worker=worker)
+    worker.submit(IngestJob(group_id="g0", run=release.wait, label="wedged"))
+    done = threading.Thread(
+        target=server.serve_stdio,
+        kwargs={"stdin": io.StringIO(""), "stdout": io.StringIO()},
+    )
+    done.start()
+    done.join(timeout=30)
+    try:
+        assert not done.is_alive()
+        assert "not drained" in capsys.readouterr().err
+    finally:
+        release.set()
+        worker.stop()
