@@ -56,6 +56,7 @@ import hashlib
 import json
 import os
 import tempfile
+import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
@@ -123,13 +124,36 @@ class TransportConfig:
 
 @dataclass
 class TransportStats:
-    """Observability for tests and ops: every counter is per-client."""
+    """Observability for tests and ops: every counter is per-client.
+    ``generate_many``'s pool threads update them, so every update goes
+    through ``add`` under one lock (``+=`` is a read-modify-write that
+    loses increments between threads)."""
 
     calls: int = 0  # transport invocations (billable)
     retries: int = 0
     cache_hits: int = 0
     cache_misses: int = 0
     sleeps: list = field(default_factory=list)
+    _lock: threading.Lock = field(
+        default_factory=threading.Lock, repr=False, compare=False
+    )
+
+    def add(self, counter: str, n: int = 1) -> None:
+        with self._lock:
+            setattr(self, counter, getattr(self, counter) + n)
+
+    def add_sleep(self, wait: float) -> None:
+        with self._lock:
+            self.sleeps.append(wait)
+
+    # a client ships to executors inside UDF closures; a lock does not
+    # pickle, so each copy gets its own
+    def __getstate__(self) -> dict:
+        return {k: v for k, v in self.__dict__.items() if k != "_lock"}
+
+    def __setstate__(self, state: dict) -> None:
+        self.__dict__.update(state)
+        self._lock = threading.Lock()
 
 
 class HttpLLMClient:
@@ -215,9 +239,9 @@ class HttpLLMClient:
         key = self._cache_key(model, messages)
         cached = self._cache_get(key)
         if cached is not None:
-            self.stats.cache_hits += 1
+            self.stats.add("cache_hits")
             return cached
-        self.stats.cache_misses += 1
+        self.stats.add("cache_misses")
         payload = {
             "model": model,
             "messages": messages,
@@ -228,11 +252,11 @@ class HttpLLMClient:
         for attempt in range(1, self.config.max_attempts + 1):
             if attempt > 1:
                 wait = self._wait(attempt - 1)
-                self.stats.sleeps.append(wait)
+                self.stats.add_sleep(wait)
                 self.sleep(wait)
-                self.stats.retries += 1
+                self.stats.add("retries")
             try:
-                self.stats.calls += 1
+                self.stats.add("calls")
                 body = self.transport(payload)
                 response = json.loads(body)  # JSONDecodeError -> retry
                 if not isinstance(response, dict):

@@ -121,9 +121,7 @@ def compact_entity_bands(io) -> None:
     )
 
 
-def incremental_resolve(
-    io, mentions_raw: DataFrame, driver_cap: int | None = None
-) -> dict:
+def incremental_resolve(io, mentions_raw: DataFrame) -> dict:
     """Resolve one micro-batch against the existing graph, touching
     only the LSH-collided neighborhood.
 
@@ -141,11 +139,11 @@ def incremental_resolve(
       leaving only 3-4 bounded index/neighborhood lookups as Spark
       jobs. This cuts the ~8 driver-synchronous jobs of scheduling
       latency that dominated the micro-batch fixed cost.
-    - otherwise: the distributed path below, unchanged.
+    - otherwise (more distinct batch names than
+      ``incremental_local.DRIVER_RESOLVE_NAMES_CAP``, or a cap hit
+      mid-path): the distributed path below, unchanged.
 
-    ``driver_cap``: max distinct batch surface forms for the driver
-    path (None → DRIVER_RESOLVE_NAMES_CAP; 0 forces the distributed
-    path). Byte-equality of the two paths is pinned by
+    Byte-equality of the two paths is pinned by
     tests/test_incremental_local.py.
 
     Returns a dict:
@@ -162,31 +160,30 @@ def incremental_resolve(
                    band rows must be appended to the index;
       metrics    — evidence counters for the O(batch) claim.
     """
-    from .incremental_local import DRIVER_RESOLVE_NAMES_CAP, FallbackToSpark
+    from . import incremental_local as L
 
-    cap = DRIVER_RESOLVE_NAMES_CAP if driver_cap is None else driver_cap
-    if cap > 0:
-        batch_rows = (
-            mentions_raw.select("group_id", "name")
-            .dropDuplicates()
-            .limit(cap + 1)
-            .collect()
-        )
-        if len(batch_rows) <= cap:
-            try:
-                return _incremental_resolve_local(
-                    io, mentions_raw.sparkSession, batch_rows
-                )
-            except FallbackToSpark:
-                pass
+    cap = L.DRIVER_RESOLVE_NAMES_CAP
+    batch_rows = (
+        mentions_raw.select("group_id", "name")
+        .dropDuplicates()
+        .limit(cap + 1)
+        .collect()
+    )
+    if len(batch_rows) <= cap:
+        try:
+            return _incremental_resolve_local(
+                io, mentions_raw.sparkSession, batch_rows
+            )
+        except L.FallbackToSpark:
+            pass
     return _incremental_resolve_spark(io, mentions_raw)
 
 
 def _incremental_resolve_local(io, spark, batch_rows: list) -> dict:
     """Driver-side strategy: see ``incremental_resolve``. ``batch_rows``
     are the collected distinct (group_id, name) batch surface forms."""
+    from ..session import local_frame
     from . import incremental_local as L
-    from .resolve import COS_THRESHOLD, JW_THRESHOLD
 
     memo = L._MinhashMemo()
     batch_entities = L.local_distinct_entities(
@@ -206,7 +203,8 @@ def _incremental_resolve_local(io, spark, batch_rows: list) -> dict:
     stored_bands = io.read("entity_bands").where(F.col("kpart").isin(kparts))
     if len(keys) <= KEY_PUSHDOWN_CAP:
         stored_bands = stored_bands.where(F.col("key").isin(keys))
-    bk = spark.createDataFrame(
+    bk = local_frame(
+        spark,
         sorted({(g, b, k) for g, _u, b, k, _kp in batch_bands}),
         "group_id string, band int, key bigint",
     )
@@ -228,7 +226,7 @@ def _incremental_resolve_local(io, spark, batch_rows: list) -> dict:
         stored_map = io.read("uuid_map")
         uparts = sorted({L.upart_py(u) for u in collided})
         cdf = F.broadcast(
-            spark.createDataFrame([(u,) for u in collided], "uuid string")
+            local_frame(spark, [(u,) for u in collided], "uuid string")
         )
         seeds = sorted(
             {
@@ -242,9 +240,7 @@ def _incremental_resolve_local(io, spark, batch_rows: list) -> dict:
         )
         if seeds:
             sdf = F.broadcast(
-                spark.createDataFrame(
-                    [(s,) for s in seeds], "canonical_uuid string"
-                )
+                local_frame(spark, [(s,) for s in seeds], "canonical_uuid string")
             )
             neighborhood_rows = (
                 stored_map.join(sdf, "canonical_uuid", "left_semi")
@@ -262,15 +258,12 @@ def _incremental_resolve_local(io, spark, batch_rows: list) -> dict:
         [(r.group_id, r.name) for r in batch_rows]
         + [(r.group_id, r.name) for r in neighborhood_rows]
     )
-    pairs = L.local_duplicate_pairs(vertices, memo, JW_THRESHOLD, COS_THRESHOLD)
     seed_pairs = {
         (min(r.uuid, r.canonical_uuid), max(r.uuid, r.canonical_uuid))
         for r in neighborhood_rows
         if r.uuid != r.canonical_uuid
     }
-    all_pairs = sorted({(a, b) for _g, a, b in pairs} | seed_pairs)
-    comp = L.local_components([u for _g, u, _n in vertices], all_pairs)
-    new_map = L.local_build_uuid_map(vertices, comp)
+    _pairs, new_map = L.resolve_local(vertices, seed_pairs, memo)
 
     # --- deltas vs the stored state (same predicates as the
     # distributed path)
@@ -298,18 +291,14 @@ def _incremental_resolve_local(io, spark, batch_rows: list) -> dict:
     )
     ent_schema = "group_id string, uuid string, name string"
     return {
-        "uuid_map": spark.createDataFrame(new_map, map_schema),
-        "entities": spark.createDataFrame(
-            [(g, u, n) for g, u, n in vertices], ent_schema
+        "uuid_map": local_frame(spark, new_map, map_schema),
+        "entities": local_frame(spark, vertices, ent_schema),
+        "changed": local_frame(
+            spark, changed, "_old string, _new string, _new_name string"
         ),
-        "changed": spark.createDataFrame(
-            changed, "_old string, _new string, _new_name string"
-        ),
-        "dead_canonicals": spark.createDataFrame(
-            [(d,) for d in dead], "uuid string"
-        ),
-        "new_entities": spark.createDataFrame(
-            new_entities, "uuid string, group_id string, name string"
+        "dead_canonicals": local_frame(spark, [(d,) for d in dead], "uuid string"),
+        "new_entities": local_frame(
+            spark, new_entities, "uuid string, group_id string, name string"
         ),
         "metrics": {
             "n_batch_entities": len(batch_entities),

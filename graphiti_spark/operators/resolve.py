@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from ..functions.minhash import lsh_candidate_pairs
 from ..functions.similarity import dot, jaro_winkler_udf
 from ..schemas import entity_uuid
+from ..session import local_frame
 
 # Tuned on the fixture pairs (tests/test_resolve.py): accepts
 # (Acme Corp~Acme Corporation JW .912/cos .707), (John Smith~J. Smith
@@ -181,10 +182,11 @@ def connected_components(
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
         mapping = [(x, find(x)) for x in list(parent)]
-        spark = vertices.sparkSession
         if mapping:
             mdf = F.broadcast(
-                spark.createDataFrame(mapping, "uuid string, _component string")
+                local_frame(
+                    vertices.sparkSession, mapping, "uuid string, _component string"
+                )
             )
             return vertices.join(mdf, "uuid", "left").select(
                 "uuid", F.coalesce("_component", "uuid").alias("component")

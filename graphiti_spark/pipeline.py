@@ -25,6 +25,17 @@ Stages (all lazy DataFrames until materialized):
                              ▼
             nodes / edges / mentions tables (deterministic uuids)
 
+Resolution (D4+D5) runs on the distinct-name space, which one probe
+of the cached ``entities`` frame sizes. Up to
+``incremental_local.DRIVER_RESOLVE_NAMES_CAP`` names it runs on the
+driver, in the kernel micro-batches use (LSH banding, Jaro-Winkler +
+trigram cosine, union-find, canonical pick), and ``uuid_map``,
+``entities`` and ``duplicates`` come back as Arrow-backed local
+relations: no Spark job and no Python worker for the resolution
+itself. Above the cap the distributed LSH self-join, scoring UDFs and
+components run. Both give the same rows and schemas
+(tests/test_pipeline_paths.py).
+
 Scale notes: the only wide operations are (a) the edge-dedup groupBy on
 (group_id, src, predicate, dst, valid_at) — high-cardinality key, hot
 entities spread across many pairs; (b) the temporal window on
@@ -143,6 +154,72 @@ def dedupe_edges(resolved_triples: DataFrame) -> DataFrame:
     )
 
 
+def duplicate_of_edges(named_pairs: DataFrame, batch_time: str) -> DataFrame:
+    """D10: IS_DUPLICATE_OF rows from accepted pairs (group_id, name_a,
+    name_b, id_a, id_b), names and ids ordered least-first (reference
+    build_duplicate_of_edges, edge_operations.py:66-85). J5's anti-join
+    against already-recorded pairs happens at persist time
+    (TableIO.merge_upsert keyed on uuid is exactly that)."""
+    return (
+        named_pairs.withColumn("name", F.lit("IS_DUPLICATE_OF"))
+        .withColumn(
+            "uuid",
+            F.sha2(F.concat_ws("|", F.lit("dup"), F.col("id_a"), F.col("id_b")), 256),
+        )
+        .withColumn("created_at", F.lit(batch_time).cast("timestamp"))
+    )
+
+
+def _resolve_on_driver(
+    entities: DataFrame, batch_time: str
+) -> tuple[DataFrame, DataFrame, DataFrame] | None:
+    """Resolve the distinct-name space ``entities`` (group_id, name,
+    uuid) with the driver kernel (operators/incremental_local.py), when
+    it holds at most ``DRIVER_RESOLVE_NAMES_CAP`` names and its LSH
+    candidates fit ``DRIVER_PAIR_CAP``; else None, and the distributed
+    path runs. Returns (entities, uuid_map, duplicates) as Arrow-backed
+    local relations with the distributed path's schemas and rows."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from .operators import incremental_local as L
+    from .session import local_frame
+
+    cap = L.DRIVER_RESOLVE_NAMES_CAP
+    rows = entities.limit(cap + 1).collect()
+    if len(rows) > cap:
+        return None
+    vertices = [(r.group_id, r.uuid, r.name) for r in rows]
+    try:
+        pairs, map_rows = L.resolve_local(vertices)
+    except L.FallbackToSpark:
+        return None
+    name_of = {u: n for _g, u, n in vertices}
+    dup_rows = [
+        (g, *sorted((name_of[a], name_of[b])), a, b) for g, a, b in pairs
+    ]
+
+    # group_id keeps the input's nullability, as it does through the
+    # distributed path's joins; every other resolved column is nullable
+    def schema(*cols: str) -> StructType:
+        return StructType(
+            [entities.schema["group_id"]]
+            + [StructField(c, StringType()) for c in cols]
+        )
+
+    spark = entities.sparkSession
+    return (
+        local_frame(spark, rows, entities.schema),
+        local_frame(
+            spark, map_rows,
+            schema("uuid", "name", "canonical_uuid", "canonical_name"),
+        ),
+        duplicate_of_edges(
+            local_frame(spark, dup_rows, schema("name_a", "name_b", "id_a", "id_b")),
+            batch_time,
+        ),
+    )
+
+
 def run_pipeline(
     spark: SparkSession,
     episodes: DataFrame,
@@ -215,37 +292,32 @@ def run_pipeline(
             mention_names = mentions_raw.select("group_id", "name").unionByName(
                 extra_entity_names.select("group_id", "name")
             )
-        entities = distinct_entities(mention_names)
         # Resolution runs on the distinct-name space (orders of magnitude
-        # smaller than the corpus); cache it — it feeds LSH, components and
-        # the canonical-node projection.
-        entities = entities.cache()
-        pairs = duplicate_pairs(entities)
-        comps = connected_components(entities, pairs)
-        uuid_map = build_uuid_map(entities, comps).cache()
-
-        # D10: materialize IS_DUPLICATE_OF rows from the accepted pairs
-        # (reference build_duplicate_of_edges, edge_operations.py:66-85).
-        # J5's anti-join against already-recorded pairs happens at persist
-        # time (TableIO.merge_upsert keyed on uuid is exactly that).
-        names = entities.select("uuid", "name")
-        duplicates = (
-            pairs.join(names.select(F.col("uuid").alias("id_a"), F.col("name").alias("name_a")), "id_a")
-            .join(names.select(F.col("uuid").alias("id_b"), F.col("name").alias("name_b")), "id_b")
-            .select(
-                "group_id",
-                F.least("name_a", "name_b").alias("name_a"),
-                F.greatest("name_a", "name_b").alias("name_b"),
-                F.least("id_a", "id_b").alias("id_a"),
-                F.greatest("id_a", "id_b").alias("id_b"),
+        # smaller than the corpus); cache it — one probe decides the
+        # strategy, and above the cap it feeds LSH, components and the
+        # canonical-node projection.
+        entities = distinct_entities(mention_names).cache()
+        local = _resolve_on_driver(entities, batch_time)
+        if local is not None:
+            entities.unpersist()
+            entities, uuid_map, duplicates = local
+        else:
+            pairs = duplicate_pairs(entities)
+            comps = connected_components(entities, pairs)
+            uuid_map = build_uuid_map(entities, comps).cache()
+            names = entities.select("uuid", "name")
+            duplicates = duplicate_of_edges(
+                pairs.join(names.select(F.col("uuid").alias("id_a"), F.col("name").alias("name_a")), "id_a")
+                .join(names.select(F.col("uuid").alias("id_b"), F.col("name").alias("name_b")), "id_b")
+                .select(
+                    "group_id",
+                    F.least("name_a", "name_b").alias("name_a"),
+                    F.greatest("name_a", "name_b").alias("name_b"),
+                    F.least("id_a", "id_b").alias("id_a"),
+                    F.greatest("id_a", "id_b").alias("id_b"),
+                ),
+                batch_time,
             )
-            .withColumn("name", F.lit("IS_DUPLICATE_OF"))
-            .withColumn(
-                "uuid",
-                F.sha2(F.concat_ws("|", F.lit("dup"), F.col("id_a"), F.col("id_b")), 256),
-            )
-            .withColumn("created_at", F.lit(batch_time).cast("timestamp"))
-        )
 
     resolved = resolve_pointers(
         triples_raw.withColumn("source_node_uuid", F.lit(None).cast("string")),

@@ -1,4 +1,5 @@
-"""SparkSession factory.
+"""SparkSession factory, and the one way driver-side rows become a
+DataFrame (``local_frame``).
 
 Defaults tuned for the sandbox (local[N], single JVM) but every knob is
 what we would set on a 1000-executor cluster too: UTC session timezone
@@ -12,7 +13,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -75,3 +77,25 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows, schema: StructType | str
+) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples in ``schema``'s
+    column order; ``schema`` is a StructType or a DDL string). The rows
+    reach the JVM as one Arrow table, so no Python worker starts to
+    unpickle them as it does for ``createDataFrame(list)``. Empty
+    ``rows`` keep the schema, column types and nullability included."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table)

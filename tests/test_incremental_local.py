@@ -112,11 +112,12 @@ def _mk_root(spark, tmp_path, episodes):
     return root
 
 
-def test_driver_and_spark_paths_resolve_identically(spark, tmp_path):
+def test_driver_and_spark_paths_resolve_identically(spark, tmp_path, monkeypatch):
     """incremental_resolve(driver path) ≡ incremental_resolve(forced
     distributed path) on the same root + micro-batch: every returned
     relation equal as a sorted row set, every metric equal."""
     from graphiti_spark.io.tables import TableIO
+    from graphiti_spark.operators import incremental_local as L
     from graphiti_spark.operators.extract import extract_mentions, extract_triples
     from graphiti_spark.operators.incremental import incremental_resolve
     from graphiti_spark.synth import synthesize_episodes
@@ -135,8 +136,9 @@ def test_driver_and_spark_paths_resolve_identically(spark, tmp_path):
     )
     mentions_raw = extract_mentions(extract_triples(micro)).unionByName(novel)
 
-    local = incremental_resolve(io, mentions_raw)            # driver path
-    dist = incremental_resolve(io, mentions_raw, driver_cap=0)  # forced spark
+    local = incremental_resolve(io, mentions_raw)  # driver path
+    monkeypatch.setattr(L, "DRIVER_RESOLVE_NAMES_CAP", 0)
+    dist = incremental_resolve(io, mentions_raw)  # forced spark
 
     assert local["metrics"] == dist["metrics"]
     for key in ("uuid_map", "entities", "changed", "dead_canonicals", "new_entities"):
@@ -178,7 +180,7 @@ def test_materialize_incremental_uses_driver_path_and_stays_equivalent(
     assert a == b
 
 
-def test_pair_cap_falls_back(spark, tmp_path):
+def test_pair_cap_falls_back(spark, tmp_path, monkeypatch):
     """Exceeding a driver cap mid-path must fall back to the
     distributed strategy, not fail."""
     from graphiti_spark.operators import incremental_local as L
@@ -200,7 +202,8 @@ def test_pair_cap_falls_back(spark, tmp_path):
         out = incremental_resolve(io, mentions_raw)
     finally:
         L.DRIVER_NEIGHBORHOOD_CAP = orig
-    ref = incremental_resolve(io, mentions_raw, driver_cap=0)
+    monkeypatch.setattr(L, "DRIVER_RESOLVE_NAMES_CAP", 0)
+    ref = incremental_resolve(io, mentions_raw)
     assert out["metrics"] == ref["metrics"]
     assert sorted(tuple(r) for r in out["uuid_map"].collect()) == sorted(
         tuple(r) for r in ref["uuid_map"].collect()

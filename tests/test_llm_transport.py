@@ -350,6 +350,39 @@ def test_generate_many_bounded_concurrency_and_order():
     assert state["peak"] <= 3
 
 
+def test_generate_many_stats_count_every_update_exactly(tmp_path):
+    """generate_many's pool threads all update one client's stats; no
+    increment may be lost. A tiny GIL switch interval makes threads
+    interleave inside the counters' read-modify-write."""
+    import sys
+
+    def echo(payload):
+        return json.dumps({"echo": payload["messages"][-1]["content"]})
+
+    n = 20_000
+    msgs = [[{"role": "user", "content": f"m{i}"}] for i in range(n)]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        c = HttpLLMClient(echo, TransportConfig(max_in_flight=8), sleep=NO_SLEEP)
+        c.generate_many(msgs)
+        assert (c.stats.calls, c.stats.cache_misses, c.stats.cache_hits) == (n, n, 0)
+
+        k = 300
+        cached = HttpLLMClient(
+            echo,
+            TransportConfig(max_in_flight=8, cache_dir=str(tmp_path / "c")),
+            sleep=NO_SLEEP,
+        )
+        cached.generate_many(msgs[:k])
+        cached.generate_many(msgs[:k])
+        assert (
+            cached.stats.calls, cached.stats.cache_misses, cached.stats.cache_hits
+        ) == (k, k, k)
+    finally:
+        sys.setswitchinterval(old)
+
+
 # ---------------------------------------------------------------------------
 # Adapter units
 # ---------------------------------------------------------------------------
