@@ -14,8 +14,10 @@ points mirror how Catalyst hashes each type:
   (``hash = compute(value, hash)``), which :func:`xxh64_chain`
   replicates.
 
-Bit-exactness is pinned by tests/test_xxh64.py against live
-``F.xxhash64`` output on random strings / ints / longs / chains —
+Bit-exactness is pinned by
+tests/test_incremental_local.py::test_xxh64_matches_spark_on_random_inputs
+against live ``F.xxhash64`` output on random strings / ints / longs /
+chains —
 this module exists so small micro-batches can compute LSH band keys
 driver-side without a Spark job, with results byte-identical to the
 distributed path (operators/incremental.py).

@@ -163,9 +163,9 @@ class HttpLLMClient:
     the raw response body, which must parse as a JSON object; a
     production adapter is ~5 lines of ``urllib``/``requests`` POST.
 
-    ``generate`` = cache-check -> clean -> retry loop -> cache-write.
-    ``generate_many`` = order-preserving bounded concurrent fan-out
-    for use inside one Arrow batch.
+    ``generate`` = clean -> cache-check -> retry loop -> cache-write.
+    ``generate_many`` = order-preserving, single-flight, bounded
+    concurrent fan-out for use inside one Arrow batch.
     """
 
     def __init__(
@@ -228,15 +228,23 @@ class HttpLLMClient:
         c = self.config
         return min(max(c.backoff_multiplier * (2.0 ** (attempt - 1)), c.backoff_min), c.backoff_max)
 
-    def generate(self, messages: list[dict], model_size: str = "medium") -> dict:
-        """One chat completion: list of ``{"role", "content"}`` in,
-        parsed JSON response object out. Raises the last error after
-        ``max_attempts`` (reraise=True, client.py:99)."""
+    def _prepare(
+        self, messages: list[dict], model_size: str
+    ) -> tuple[str, list[dict], str]:
+        """(model, cleaned messages, cache key) of one request."""
         model = self._route(model_size)
         messages = [
             {**m, "content": clean_input(m.get("content", ""))} for m in messages
         ]
-        key = self._cache_key(model, messages)
+        return model, messages, self._cache_key(model, messages)
+
+    def generate(self, messages: list[dict], model_size: str = "medium") -> dict:
+        """One chat completion: list of ``{"role", "content"}`` in,
+        parsed JSON response object out. Raises the last error after
+        ``max_attempts`` (reraise=True, client.py:99)."""
+        return self._generate(*self._prepare(messages, model_size))
+
+    def _generate(self, model: str, messages: list[dict], key: str) -> dict:
         cached = self._cache_get(key)
         if cached is not None:
             self.stats.add("cache_hits")
@@ -289,14 +297,21 @@ class HttpLLMClient:
     ) -> list[dict]:
         """Bounded concurrent fan-out over one Arrow batch's prompts:
         at most ``max_in_flight`` requests outstanding per executor
-        slot, results in input order. Serial when the batch is 1."""
-        if len(messages_list) <= 1:
-            return [self.generate(m, model_size) for m in messages_list]
-        workers = max(1, min(self.config.max_in_flight, len(messages_list)))
-        with ThreadPoolExecutor(max_workers=workers) as pool:
-            return list(
-                pool.map(lambda m: self.generate(m, model_size), messages_list)
-            )
+        slot, results in input order. Single-flight: prompts that share
+        a cache key (after cleaning) make one request, and every copy
+        gets that one response object. Serial when one prompt is left."""
+        prepared = [self._prepare(m, model_size) for m in messages_list]
+        unique = {p[2]: p for p in prepared}
+        if len(unique) <= 1:
+            responses = [self._generate(*p) for p in unique.values()]
+        else:
+            workers = max(1, min(self.config.max_in_flight, len(unique)))
+            with ThreadPoolExecutor(max_workers=workers) as pool:
+                responses = list(
+                    pool.map(lambda p: self._generate(*p), unique.values())
+                )
+        by_key = dict(zip(unique, responses))
+        return [by_key[p[2]] for p in prepared]
 
 
 # ---------------------------------------------------------------------------

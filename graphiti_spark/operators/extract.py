@@ -1,4 +1,4 @@
-"""Mention + triple extraction (reference X1/X3) as an Arrow batch map.
+"""Mention + triple extraction (reference X1/X3).
 
 The reference extracts per episode with LLM calls —
 ``extract_nodes`` (graphiti_core/utils/maintenance/node_operations.py:69-176)
@@ -12,19 +12,18 @@ Here the extractor is pluggable. The default ``RuleBasedExtractor``
 is deterministic: it is configured with a relation ontology
 (predicate → surface phrase), mirroring how the reference receives
 ``edge_types`` (graphiti_core/graphiti.py:361-365), and parses
-"Speaker: Subj <phrase> Obj since <year>." sentences. Its default
-execution is ``mapInArrow`` (RE2 kernels over RecordBatches — the
-measured-fastest shape; see ``extract_triples``); a pure-Catalyst
-``regexp_*`` kernel (zero Python in the stage) is available via
-``kernel="native"``. LLM-backed extractors slot into the same
-interface and run one Arrow batch per client call through
-``mapInPandas``, exactly like the reference's pluggable LLMClient
-(llm_client/client.py:129-169).
+"Speaker: Subj <phrase> Obj since <year>." sentences. It runs as one
+Catalyst kernel (``extract_native``: ``regexp_*`` expressions inside
+WholeStageCodegen, no Python worker in the stage); its pandas
+``extract`` is the reference that kernel is tested against. LLM-backed
+extractors offer only ``extract(pdf)`` and run one Arrow batch per
+client call through ``mapInPandas``, like the reference's pluggable
+LLMClient (llm_client/client.py:129-169).
 
 Scale notes: the input is the exploded text-span table, partitioned by
-doc_id hash — extraction is embarrassingly parallel, no shuffle. The
-`spans` explode and the regex both run columnar; media spans are
-filtered out before the UDF (predicate pushdown to the scan).
+doc_id hash — extraction is embarrassingly parallel, no shuffle. Media
+spans are filtered out before any parse runs (predicate pushdown to the
+scan).
 """
 
 from __future__ import annotations
@@ -52,15 +51,6 @@ TRIPLES_RAW_SCHEMA = T.StructType(
         T.StructField("fact", T.StringType(), False),
         T.StructField("valid_at", T.TimestampType(), True),
         T.StructField("episode_valid_at", T.TimestampType(), False),
-    ]
-)
-
-MENTIONS_RAW_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("group_id", T.StringType(), False),
-        T.StructField("name", T.StringType(), False),
-        T.StructField("role", T.StringType(), False),  # speaker|subject|object
     ]
 )
 
@@ -92,39 +82,35 @@ class RuleBasedExtractor:
         alt = "|".join(re.escape(p) for p in phrases)
         # Non-greedy subject/object lets multi-word entity names work:
         # backtracking stops at the first split where the phrase + the
-        # ' since <year>.' suffix both parse. RE2 (the Arrow kernel)
-        # uses leftmost-first semantics like Python re, so both engines
-        # parse identically; alternation order is the same list.
-        self._pattern_src = (
+        # ' since <year>.' suffix both parse. The Catalyst kernel's
+        # java.util.regex twins below use the same leftmost-first lazy
+        # semantics and alternation order, with unnamed groups (Java
+        # rejects (?P<name>...)), so both engines split identically
+        # (pinned by tests/test_extract.py and the fuzz test in
+        # tests/test_properties.py). re.ASCII makes \d [0-9], as in Java.
+        self.pattern = re.compile(
             rf"^(?P<speaker>[^:]+): (?P<subj>.+?) (?P<phrase>{alt}) "
-            rf"(?P<obj>.+?) since (?P<year>\d{{4}})\.$"
+            rf"(?P<obj>.+?) since (?P<year>\d{{4}})\.$",
+            re.ASCII,
         )
-        self._fallback_src = (
+        self.fallback_pattern = re.compile(
             rf"^(?P<speaker>[^:]+): (?P<subj>.+?) (?P<phrase>{alt}) "
             rf"(?P<obj>.+?)\.$"
         )
-        self.pattern = re.compile(self._pattern_src)
-        self.fallback_pattern = re.compile(self._fallback_src)
         self.phrase_to_pred = {p: name for name, p in self.ontology}
-        # RE2 spells unicode code points \x{200b}, not ​
-        self._clean_re2 = "[\\x00-\\x08\\x0b-\\x1f\\x7f\\x{200b}-\\x{200d}\\x{feff}]"
-        # Java regex (Catalyst regexp_* kernels): unnamed groups —
-        # java.util.regex rejects (?P<name>...). Same leftmost-first
-        # lazy-quantifier semantics as Python re / RE2, same
-        # alternation order, so all three kernels split identically
-        # (pinned by tests/test_extract_arrow.py).
+        # (?d): '.' stops only at \n, as in Python. Python's '$' also
+        # matches before one final \n; the Java twin consumes that \n
+        # (\n?\z) so the rewrite below leaves nothing after the record.
         self._pattern_java = (
-            rf"^([^:]+): (.+?) ({alt}) (.+?) since (\d{{4}})\.$"
+            rf"(?d)^([^:]+): (.+?) ({alt}) (.+?) since (\d{{4}})\.\n?\z"
         )
-        self._fallback_java = rf"^([^:]+): (.+?) ({alt}) (.+?)\.$"
+        self._fallback_java = rf"(?d)^([^:]+): (.+?) ({alt}) (.+?)\.\n?\z"
 
     def extract(self, pdf: pd.DataFrame) -> pd.DataFrame:
-        """One Arrow batch of text spans → parsed triple columns.
-
-        Vectorized: a single ``str.extract`` over the batch does all
-        parsing; the per-row python is only the dict lookup for the
-        predicate id.
-        """
+        """The pandas reference parse: one batch of text spans →
+        parsed triple columns, via a single ``str.extract`` over the
+        batch. ``extract_triples`` runs :meth:`extract_native`; the
+        kernel tests compare it against this method row for row."""
         cleaned = pdf["text"].str.replace(self.CLEAN_RE, "", regex=True)
         ext = cleaned.str.extract(self.pattern)
         out = pdf[["doc_id", "group_id", "offset", "episode_valid_at"]].copy()
@@ -136,9 +122,9 @@ class RuleBasedExtractor:
         # stores the extracted natural-language sentence, edges.py:199).
         out["fact"] = cleaned.str.split(": ", n=1).str[1]
         # The cross-kernel contract is the EXPLICIT inclusive range
-        # 1678-2261 (what the arrow and native kernels clamp to), not
-        # pandas' raw ns range: pandas would also accept 2262 (its max
-        # is 2262-04-11, so 2262-01-01 parses) and the kernels would
+        # 1678-2261 (what the native kernel clamps to), not pandas' raw
+        # ns range: pandas would also accept 2262 (its max is
+        # 2262-04-11, so 2262-01-01 parses) and the kernels would
         # disagree on exactly that year — caught by the kernel fuzz
         # test. Mask first, then coerce-parse; the reference's date
         # parse falls back to None on failure
@@ -170,104 +156,16 @@ class RuleBasedExtractor:
             ]
         ]
 
-    def extract_arrow(self, batch):
-        """Same parse as :meth:`extract`, pure pyarrow (RE2
-        ``extract_regex``) over one RecordBatch — no pandas objects
-        are ever materialized, which is most of the pandas path's
-        cost (the regex itself is ~3% of that stage's wall time)."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        text = pc.replace_substring_regex(
-            batch.column("text"), pattern=self._clean_re2, replacement=""
-        )
-        ext = pc.extract_regex(text, pattern=self._pattern_src)
-        ts_type = batch.column("episode_valid_at").type
-
-        def year_to_ts(year):
-            # mirror the pandas kernel's ns-bounds contract: years the
-            # ns epoch cannot hold (outside 1678-2261) become NULL —
-            # nulled BEFORE strptime/cast so no out-of-bounds value is
-            # ever materialized
-            yr = pc.cast(year, pa.int32())
-            ok = pc.and_(
-                pc.greater_equal(yr, pa.scalar(1678, pa.int32())),
-                pc.less_equal(yr, pa.scalar(2261, pa.int32())),
-            )
-            safe = pc.if_else(
-                pc.fill_null(ok, False), year, pa.scalar(None, pa.string())
-            )
-            return pc.assume_timezone(
-                pc.strptime(safe, format="%Y", unit="us"), "UTC"
-            ).cast(ts_type)
-
-        fields = {
-            n: pc.struct_field(ext, n)
-            for n in ("speaker", "subj", "phrase", "obj", "year")
-        }
-        valid = pc.is_valid(ext)
-        valid_at = year_to_ts(fields["year"])
-        if self.reflexion:
-            fb = pc.extract_regex(text, pattern=self._fallback_src)
-            use_fb = pc.and_(pc.invert(valid), pc.is_valid(fb))
-            for n in ("speaker", "subj", "phrase", "obj"):
-                fields[n] = pc.if_else(use_fb, pc.struct_field(fb, n), fields[n])
-            valid_at = pc.if_else(
-                use_fb, batch.column("episode_valid_at"), valid_at
-            )
-            valid = pc.or_(valid, use_fb)
-        # phrase → SCREAMING_SNAKE predicate via a value-set lookup
-        phrases = pa.array(list(self.phrase_to_pred), type=pa.string())
-        preds = pa.array(list(self.phrase_to_pred.values()), type=pa.string())
-        pred = pc.take(preds, pc.index_in(fields["phrase"], value_set=phrases))
-        fact = pc.replace_substring_regex(
-            text, pattern="^[^:]+: ", replacement="", max_replacements=1
-        )
-        keep = pc.fill_null(
-            pc.and_(valid, pc.not_equal(fields["subj"], fields["obj"])), False
-        )
-        out = pa.RecordBatch.from_arrays(
-            [
-                batch.column("doc_id"),
-                batch.column("group_id"),
-                batch.column("offset"),
-                fields["speaker"],
-                fields["subj"],
-                pred,
-                fields["obj"],
-                fact,
-                valid_at,
-                batch.column("episode_valid_at"),
-            ],
-            names=[
-                "doc_id", "group_id", "offset", "speaker", "subj_name",
-                "predicate", "obj_name", "fact", "valid_at", "episode_valid_at",
-            ],
-        )
-        return out.filter(keep)
-
     def extract_native(self, spans: DataFrame) -> DataFrame:
-        """Same parse as :meth:`extract`, pure Catalyst expressions —
-        zero Python in the stage.
+        """The rule-based parse as pure Catalyst expressions — the
+        same rows as :meth:`extract`, no Python in the stage.
 
-        The rule-based extractor is a regex, so the Spark-first
-        execution is JVM codegen, not an Arrow round-trip: one
-        cleaning ``regexp_replace``, one ``rlike`` gate, and one
+        One cleaning ``regexp_replace``, one ``rlike`` gate, and one
         anchored ``regexp_replace`` that rewrites the whole matched
         sentence into a ``\\x01``-delimited record (the cleaning pass
         strips ``\\x01`` from the input first, so the delimiter cannot
-        collide), then a ``split``. That is ~4 regex passes per row,
-        all inside WholeStageCodegen — no serialization to a Python
-        worker at all.
-
-        Measured vs the Arrow kernel at the bench shape (3.7M spans,
-        best-of-3 interleaved): faster on pruned reads (1.99 s vs
-        2.07 s), ~25% slower on full-column materialization (2.71 s
-        vs 2.08 s) — java.util.regex backtracks on this lazy-
-        quantifier + alternation pattern where RE2 runs a linear-time
-        DFA — so the Arrow kernel stays the default and this one is
-        opt-in (``extract_triples(..., kernel="native")``) for
-        deployments that want a Python-less write path.
+        collide), then a ``split``: ~4 regex passes per row, all inside
+        WholeStageCodegen.
         """
         SEP = "\x01"
 
@@ -284,7 +182,7 @@ class RuleBasedExtractor:
         )
 
         def year_to_ts(year):
-            # mirror the pandas/arrow kernels' ns-bounds contract:
+            # mirror the pandas reference's ns-bounds contract:
             # years outside 1678-2261 yield NULL valid_at
             y = year.cast("int")
             return F.when(
@@ -440,62 +338,26 @@ def text_spans(episodes: DataFrame) -> DataFrame:
 
 
 def extract_triples(
-    episodes: DataFrame,
-    extractor: RuleBasedExtractor | None = None,
-    kernel: str | None = None,
+    episodes: DataFrame, extractor: RuleBasedExtractor | None = None
 ) -> DataFrame:
     """Episodes → raw triples (one row per parsed sentence).
 
-    Kernel selection (``kernel``: ``"arrow"`` | ``"native"`` |
-    ``"pandas"``; default = fastest MEASURED shape the extractor
-    supports):
-
-    - ``extract_arrow`` (the default for ``RuleBasedExtractor``):
-      ``mapInArrow`` — pyarrow RecordBatches end to end, RE2 kernels,
-      no pandas materialization. Measured fastest on full-column
-      materialization at the bench shape (best-of-3 interleaved,
-      3.7M spans): 2.08 s vs the Catalyst kernel's 2.71 s — RE2's
-      linear-time DFA beats java.util.regex's backtracking NFA on
-      this lazy-quantifier + 8-way-alternation pattern.
-    - ``extract_native`` (opt-in, ``kernel="native"``): pure Catalyst
-      regexp expressions, WholeStageCodegen, zero Python anywhere in
-      the stage (PLANS.md plan 11). Slightly faster when downstream
-      prunes most parse columns (1.99 s vs 2.07 s for a count-style
-      read) and removes the Python-worker dependency entirely; ~25%
-      slower when every column materializes, hence not the default.
-    - ``extract(pdf)`` only (the X9 LLM plug point, e.g.
-      ``ClientBackedExtractor``): ``mapInPandas`` — one Arrow batch
-      per client call, the scale-correct shape for remote LLMs.
-
-    All kernels parse byte-identically (tests/test_extract_arrow.py).
+    An extractor with ``extract_native`` (``RuleBasedExtractor``) runs
+    as Catalyst expressions, with no Python worker in the stage. One
+    with only ``extract(pdf)`` (the X9 LLM plug point, e.g.
+    ``ClientBackedExtractor``) runs through ``mapInPandas``: one Arrow
+    batch per client call, the scale-correct shape for remote LLMs.
     """
     ex = extractor or RuleBasedExtractor()
-
-    if kernel is None:
-        if hasattr(ex, "extract_arrow"):
-            kernel = "arrow"
-        elif hasattr(ex, "extract_native"):
-            kernel = "native"
-        else:
-            kernel = "pandas"
-
-    if kernel == "native":
-        return ex.extract_native(text_spans(episodes))
-
-    if kernel == "arrow":
-        import pyarrow as pa
-
-        def run_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            for batch in batches:
-                yield ex.extract_arrow(batch)
-
-        return text_spans(episodes).mapInArrow(run_arrow, schema=TRIPLES_RAW_SCHEMA)
+    spans = text_spans(episodes)
+    if hasattr(ex, "extract_native"):
+        return ex.extract_native(spans)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield ex.extract(pdf)
 
-    return text_spans(episodes).mapInPandas(run, schema=TRIPLES_RAW_SCHEMA)
+    return spans.mapInPandas(run, schema=TRIPLES_RAW_SCHEMA)
 
 
 def extract_mentions(triples_raw: DataFrame) -> DataFrame:

@@ -19,7 +19,8 @@ canonical pick as plain Python over the collected rows.
 
 Byte-identical by construction, pinned by tests:
 - hashes: :mod:`..functions.xxh64` is bit-exact with ``F.xxhash64``
-  (tests/test_xxh64.py) — minhash band keys, kpart and upart buckets
+  (tests/test_incremental_local.py::test_xxh64_matches_spark_on_random_inputs)
+  — minhash band keys, kpart and upart buckets
   reproduce the stored index's values exactly;
 - shingles / representative pick: Python string ops mirror the
   Catalyst expressions (UTF-8 byte order == code-point order, so
@@ -169,7 +170,6 @@ def local_duplicate_pairs(
     memo: _MinhashMemo,
     jw_threshold: float,
     cos_threshold: float,
-    pair_cap: int = DRIVER_PAIR_CAP,
 ) -> list[tuple[str, str, str]]:
     """Python mirror of ``resolve.duplicate_pairs``: LSH bucket
     blocking → distinct unordered candidate pairs → Jaro-Winkler +
@@ -191,7 +191,7 @@ def local_duplicate_pairs(
                 (i, j) if vertices[i][1] < vertices[j][1] else (j, i)
             )
             cand.add((a, b))
-            if len(cand) > pair_cap:
+            if len(cand) > DRIVER_PAIR_CAP:
                 raise FallbackToSpark("candidate pairs over cap")
 
     if not cand:

@@ -350,6 +350,29 @@ def test_generate_many_bounded_concurrency_and_order():
     assert state["peak"] <= 3
 
 
+def test_generate_many_single_flight_keeps_input_order():
+    """Repeated prompts in one batch (equal after input cleaning) make
+    one transport call per unique prompt, and every copy gets its
+    response in input order."""
+    import threading
+
+    lock = threading.Lock()
+    seen = []
+
+    def t(payload):
+        content = payload["messages"][-1]["content"]
+        with lock:
+            seen.append(content)
+        return json.dumps({"echo": content})
+
+    c = HttpLLMClient(t, TransportConfig(max_in_flight=4), sleep=NO_SLEEP)
+    prompts = ["a", "b", "a", "c", "b\u200b", "a", "d", "c"]
+    out = c.generate_many([[{"role": "user", "content": p}] for p in prompts])
+    assert [r["echo"] for r in out] == ["a", "b", "a", "c", "b", "a", "d", "c"]
+    assert sorted(seen) == ["a", "b", "c", "d"]
+    assert (c.stats.calls, c.stats.cache_misses) == (4, 4)
+
+
 def test_generate_many_stats_count_every_update_exactly(tmp_path):
     """generate_many's pool threads all update one client's stats; no
     increment may be lost. A tiny GIL switch interval makes threads

@@ -1,6 +1,7 @@
 """The bulk build resolves its distinct names on the driver when they
-fit ``incremental_local.DRIVER_RESOLVE_NAMES_CAP`` and with the
-distributed LSH/scoring/components path above it. Both paths must give
+fit ``incremental_local.DRIVER_RESOLVE_NAMES_CAP`` and their LSH
+candidates fit ``DRIVER_PAIR_CAP``, and with the distributed
+LSH/scoring/components path otherwise. Both paths must give
 byte-identical output: the same schema and the same rows in every
 GraphOutput frame. The driver path must also keep a build's Spark job
 count small."""
@@ -10,6 +11,7 @@ from __future__ import annotations
 import datetime as dt
 import uuid
 
+from graphiti_spark import pipeline
 from graphiti_spark.operators import incremental_local as L
 from graphiti_spark.pipeline import run_pipeline
 
@@ -65,23 +67,44 @@ def _release(out) -> None:
         df.unpersist()
 
 
-def _both_paths(spark, monkeypatch, episodes, **kw) -> dict:
-    """{frame: (driver-path result, distributed-path result)}, checking
-    that each run took the path it was meant to."""
+def _both_paths(
+    spark, monkeypatch, episodes, force="DRIVER_RESOLVE_NAMES_CAP", **kw
+) -> dict:
+    """{frame: (driver-path result, distributed-path result)}. The
+    distributed run sets the cap named ``force`` to 0: the names cap
+    skips the driver kernel, the pair cap makes ``resolve_local`` raise
+    ``FallbackToSpark`` on its first candidate pair. Spies on
+    ``resolve_local`` and on the distributed ``connected_components``
+    check that each run took the path it was meant to."""
     calls = []
     resolve_local = L.resolve_local
+    components = pipeline.connected_components
+
+    def spy_local(*a, **k):
+        try:
+            out = resolve_local(*a, **k)
+        except L.FallbackToSpark:
+            calls.append("fallback")
+            raise
+        calls.append("local")
+        return out
+
+    monkeypatch.setattr(L, "resolve_local", spy_local)
     monkeypatch.setattr(
-        L, "resolve_local", lambda *a, **k: calls.append(1) or resolve_local(*a, **k)
+        pipeline,
+        "connected_components",
+        lambda *a, **k: calls.append("distributed") or components(*a, **k),
     )
     local = run_pipeline(spark, episodes, **kw)
-    assert calls, "default build did not take the driver path"
+    assert calls == ["local"], f"default build took {calls}"
     got = {name: [_frame(getattr(local, name))] for name in FRAMES}
     _release(local)
 
     calls.clear()
-    monkeypatch.setattr(L, "DRIVER_RESOLVE_NAMES_CAP", 0)
+    monkeypatch.setattr(L, force, 0)
     dist = run_pipeline(spark, episodes, **kw)
-    assert not calls, "a cap of 0 must force the distributed path"
+    fallback = [] if force == "DRIVER_RESOLVE_NAMES_CAP" else ["fallback"]
+    assert calls == fallback + ["distributed"], f"{force} = 0 took {calls}"
     for name in FRAMES:
         got[name].append(_frame(getattr(dist, name)))
     _release(dist)
@@ -108,6 +131,17 @@ def test_paths_identical_with_near_dups_case_variants_and_two_groups(
         ("g0", "Initech", "Initech Inc"),
         ("g1", "Acme Corp", "Acme Corporation"),
     }
+
+
+def test_pair_cap_fallback_identical_with_near_dups(spark, monkeypatch):
+    """A batch under the names cap whose LSH candidates pass
+    ``DRIVER_PAIR_CAP`` falls back to the distributed path, read at
+    call time, with the same output."""
+    got = _both_paths(
+        spark, monkeypatch, _episodes(spark, NEAR_DUPS), force="DRIVER_PAIR_CAP"
+    )
+    _assert_identical(got)
+    assert len(got["duplicates"][0][1]) == 3
 
 
 def test_paths_identical_without_accepted_pairs(spark, monkeypatch):

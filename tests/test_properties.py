@@ -347,68 +347,43 @@ def test_ivf_topk_probes_find_planted_neighbors(spark):
         max_size=30,
     )
 )
-def test_arrow_kernel_equals_pandas_kernel_fuzzed(texts):
-    """The RE2 RecordBatch kernel and the Python-re pandas kernel must
-    agree row-for-row on arbitrary input, not just the fixture grammar
-    (leftmost-first alternation, non-greedy splits, cleaning, self-loop
-    drop)."""
-    import pandas as pd
-    import pyarrow as pa
-
-    from graphiti_spark.operators.extract import RuleBasedExtractor
-
-    ex = RuleBasedExtractor()
-    pdf = pd.DataFrame(
-        {
-            "doc_id": [f"d{i}" for i in range(len(texts))],
-            "group_id": ["g"] * len(texts),
-            "offset": pd.array(range(len(texts)), dtype="int32"),
-            "episode_valid_at": pd.to_datetime("2025-01-01", utc=True),
-            "text": texts,
-        }
-    )
-    want = ex.extract(pdf).reset_index(drop=True)
-    got = (
-        ex.extract_arrow(pa.RecordBatch.from_pandas(pdf, preserve_index=False))
-        .to_pandas()
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+def test_native_kernel_equals_pandas_kernel_fuzzed(spark, texts):
+    """The Catalyst kernel (java.util.regex) on a Spark frame and the
+    Python-re pandas reference must agree row-for-row on arbitrary
+    input, not just the fixture grammar (leftmost-first alternation,
+    non-greedy splits, cleaning, self-loop drop)."""
+    _assert_native_equals_pandas(spark, texts)
 
 
 def test_kernels_agree_on_ns_boundary_years(spark):
     """The valid_at contract is the EXPLICIT year range 1678-2261 in
-    every kernel. 2262 is the trap: pandas' raw ns range accepts
+    both kernels. 2262 is the trap: pandas' raw ns range accepts
     2262-01-01 (its max is 2262-04-11), so an unclamped coerce-parse
-    diverges from the arrow/native clamps on exactly that year — found
-    by the kernel fuzz test, pinned here deterministically."""
+    diverges from the native clamp on exactly that year — found by the
+    kernel fuzz test, pinned here deterministically."""
     import pandas as pd
-    import pyarrow as pa
 
-    from graphiti_spark.operators.extract import RuleBasedExtractor
-
-    ex = RuleBasedExtractor()
     years = [1677, 1678, 2261, 2262, 9999]
-    texts = [f"Ann: Acme works for Globex since {y}." for y in years]
-    pdf = pd.DataFrame(
-        {
-            "doc_id": [f"d{i}" for i in range(len(texts))],
-            "group_id": ["g"] * len(texts),
-            "offset": pd.array(range(len(texts)), dtype="int32"),
-            "episode_valid_at": pd.to_datetime("2025-01-01", utc=True),
-            "text": texts,
-        }
+    want = _assert_native_equals_pandas(
+        spark, [f"Ann: Acme works for Globex since {y}." for y in years]
     )
-    want = ex.extract(pdf).reset_index(drop=True)
-    got = (
-        ex.extract_arrow(pa.RecordBatch.from_pandas(pdf, preserve_index=False))
-        .to_pandas()
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(got, want, check_dtype=False)
-    by_year = dict(zip(years, want["valid_at"]))
+    by_year = {years[o]: v for o, v in zip(want["offset"], want["valid_at"])}
     assert pd.isna(by_year[1677]) and pd.isna(by_year[2262]) and pd.isna(by_year[9999])
     assert by_year[1678].year == 1678 and by_year[2261].year == 2261
+
+
+def _assert_native_equals_pandas(spark, texts):
+    """Parse ``texts`` with the pandas reference and with
+    ``extract_native`` on a Spark frame; assert equal rows and return
+    the reference's."""
+    import pandas as pd
+
+    from graphiti_spark.operators.extract import RuleBasedExtractor
+    from tests.test_extract import _native_and_pandas, _pdf
+
+    got, want = _native_and_pandas(spark, RuleBasedExtractor(), _pdf(texts))
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+    return want
 
 
 def test_curation_randomized_invariants(spark):
