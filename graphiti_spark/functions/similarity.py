@@ -93,10 +93,17 @@ def _trigram_hash(g: str) -> int:
 def _embed_batch(texts: pd.Series, dim: int) -> pd.Series:
     """Character-trigram feature hashing → L2-normalized vector.
 
+    Each text is lowercased and padded with one space on each side;
+    every character trigram (repeats included) is md5-hashed, and its
+    first 8 bytes pick the bucket (mod ``dim``) and bit 8 the sign of a
+    +/-1 count. The float64 counts are L2-normalized and returned as
+    float32; a null or empty text maps to a zero vector.
+
     Similar surface forms share trigrams → high cosine, which is exactly
     the property the resolver needs from real name embeddings. Purely
-    deterministic (no model). Process-local memoized trigram hashing
-    keeps repeated names (the common case after explode) cheap.
+    deterministic (no model). ``hash_embed_udf`` runs this per Arrow
+    batch on executors; the driver-side bulk resolution runs it once
+    over the canonical names (pipeline._resolve_on_driver).
     """
     out = []
     for t in texts:

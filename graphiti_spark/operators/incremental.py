@@ -42,6 +42,7 @@ Scale shape per micro-batch:
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -185,27 +186,28 @@ def _incremental_resolve_local(io, spark, batch_rows: list) -> dict:
     from ..session import local_frame
     from . import incremental_local as L
 
-    memo = L._MinhashMemo()
     batch_entities = L.local_distinct_entities(
         [(r.group_id, r.name) for r in batch_rows]
     )
-    batch_bands = [
-        (g, uuid, band, key, kp)
-        for g, uuid, name in batch_entities
-        for band, key, kp in L.band_rows_py(name, memo)
-    ]
+    keys, kpart = L.band_rows([name for _g, _u, name in batch_entities])
 
     # --- band-index lookup (Spark job 1): same kpart pruning + key
     # InSet pushdown as the distributed path, with the batch side as a
     # broadcast local relation instead of a recomputed column plan
-    kparts = sorted({kp for *_r, kp in batch_bands})
-    keys = sorted({key for _g, _u, _b, key, _kp in batch_bands})
+    kparts = np.unique(kpart).tolist()
+    key_list = np.unique(keys).tolist()
     stored_bands = io.read("entity_bands").where(F.col("kpart").isin(kparts))
-    if len(keys) <= KEY_PUSHDOWN_CAP:
-        stored_bands = stored_bands.where(F.col("key").isin(keys))
+    if len(key_list) <= KEY_PUSHDOWN_CAP:
+        stored_bands = stored_bands.where(F.col("key").isin(key_list))
     bk = local_frame(
         spark,
-        sorted({(g, b, k) for g, _u, b, k, _kp in batch_bands}),
+        sorted(
+            {
+                (g, b, k)
+                for (g, _u, _n), row in zip(batch_entities, keys.tolist())
+                for b, k in enumerate(row)
+            }
+        ),
         "group_id string, band int, key bigint",
     )
     collided_rows = (
@@ -224,7 +226,7 @@ def _incremental_resolve_local(io, spark, batch_rows: list) -> dict:
     neighborhood_rows: list = []
     if collided:
         stored_map = io.read("uuid_map")
-        uparts = sorted({L.upart_py(u) for u in collided})
+        uparts = np.unique(L.upart_py(collided)).tolist()
         cdf = F.broadcast(
             local_frame(spark, [(u,) for u in collided], "uuid string")
         )
@@ -263,7 +265,7 @@ def _incremental_resolve_local(io, spark, batch_rows: list) -> dict:
         for r in neighborhood_rows
         if r.uuid != r.canonical_uuid
     }
-    _pairs, new_map = L.resolve_local(vertices, seed_pairs, memo)
+    _pairs, new_map = L.resolve_local(vertices, seed_pairs)
 
     # --- deltas vs the stored state (same predicates as the
     # distributed path)

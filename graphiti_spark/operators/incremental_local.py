@@ -13,15 +13,21 @@ fits ``DRIVER_RESOLVE_NAMES_CAP``:
 
 On the distributed path the same small resolution costs tens of Spark
 jobs of scheduling latency plus Python-worker round trips for the
-scoring UDFs; here ``resolve_local`` runs LSH banding, candidate pairs,
-Jaro-Winkler + trigram-cosine scoring, union-find components and the
-canonical pick as plain Python over the collected rows.
+scoring UDFs; here ``resolve_local`` runs over the collected rows. The
+hashing is an array kernel: ``band_rows`` hashes every unique shingle
+once per MinHash seed in one numpy XXH64 pass, takes the signatures
+with ``np.minimum.reduceat`` and chains the band keys and kparts as
+array ops, and the LSH buckets come from one sort of the band keys.
+Only the per-candidate Jaro-Winkler + trigram-cosine scoring,
+union-find components and the canonical pick remain Python loops, and
+they run over candidate pairs and vertices, not over hashes.
 
 Byte-identical by construction, pinned by tests:
 - hashes: :mod:`..functions.xxh64` is bit-exact with ``F.xxhash64``
   (tests/test_incremental_local.py::test_xxh64_matches_spark_on_random_inputs)
-  — minhash band keys, kpart and upart buckets
-  reproduce the stored index's values exactly;
+  — minhash band keys, kpart and upart buckets reproduce the stored
+  index's values exactly
+  (tests/test_incremental_local.py::test_band_rows_match_entity_band_rows);
 - shingles / representative pick: Python string ops mirror the
   Catalyst expressions (UTF-8 byte order == code-point order, so
   Python ``<`` on str equals Spark's binary string comparison;
@@ -45,23 +51,30 @@ Reference semantics being preserved: bulk node dedup
 from __future__ import annotations
 
 import hashlib
-from collections import defaultdict
 from itertools import combinations
 
+import numpy as np
+
 from ..functions.minhash import BAND_SIZE, NUM_HASHES, SHINGLE_K
-from ..functions.xxh64 import xxh64_chain, xxh64_string
+from ..functions.xxh64 import (
+    SPARK_SEED,
+    byte_groups,
+    xxh64_ints,
+    xxh64_longs,
+    xxh64_rows,
+    xxh64_strings,
+)
 
 # Distinct names above which both resolution entry points take the
 # distributed path. Measured on a 4-vCPU host (local[4]) over random
 # two-word names with 10% planted variants, at 1k / 3.1k / 6k / 12k /
-# 24k names: the kernel costs 2.4 / 5.2 / 7.5 / 10.2 / 18.7 s of driver
-# CPU, most of it pure-Python xxh64 over the unique trigrams; the
+# 24k names: ``resolve_local`` costs 0.08 / 0.26 / 0.57 / 1.9 / 5.9 s of
+# driver CPU; at 24k names most of it is the per-pair Jaro-Winkler
+# over 177k LSH candidates (past ``DRIVER_PAIR_CAP``). The
 # distributed pairs + components + uuid_map, with the pairs computed
 # again as the duplicates drain does, cost 14.6 / 15.8 / 16.6 / 19.8 /
-# 36.3 s of process CPU. The kernel takes about half the CPU at every
-# size, but it is single-threaded: its wall time passes the
-# distributed path's near 4k names and trails it by ~1.4 s at 6k-12k
-# (8.0 vs 6.7 s, 10.6 vs 9.2 s). The cap keeps that lag bounded.
+# 36.3 s of process CPU, so the kernel is the cheaper path at every
+# measured size; the cap stays until the distributed path is retired.
 DRIVER_RESOLVE_NAMES_CAP = 10_000    # distinct names
 DRIVER_NEIGHBORHOOD_CAP = 5_000      # stored neighborhood rows
 DRIVER_PAIR_CAP = 100_000            # LSH candidate pairs
@@ -80,9 +93,10 @@ def entity_uuid_py(group_id: str, name: str) -> str:
     ).hexdigest()
 
 
-def upart_py(uuid: str, n_parts: int = 64) -> int:
-    """Python mirror of ``incremental.upart_col`` (pmod(xxhash64, n))."""
-    return xxh64_string(uuid) % n_parts
+def upart_py(uuids: list[str], n_parts: int = 64) -> np.ndarray:
+    """Python mirror of ``incremental.upart_col`` (pmod(xxhash64, n))
+    over a batch of uuids."""
+    return xxh64_strings(uuids) % n_parts
 
 
 def shingles_py(name: str, k: int = SHINGLE_K) -> frozenset[str]:
@@ -94,46 +108,51 @@ def shingles_py(name: str, k: int = SHINGLE_K) -> frozenset[str]:
     return frozenset(padded[i : i + k] for i in range(upper))
 
 
-class _MinhashMemo:
-    """Per-call memo: each unique shingle hashes once per seed."""
-
-    def __init__(self, num_hashes: int = NUM_HASHES) -> None:
-        self.num_hashes = num_hashes
-        self._memo: dict[str, list[int]] = {}
-
-    def hashes(self, shingle: str) -> list[int]:
-        h = self._memo.get(shingle)
-        if h is None:
-            h = [
-                xxh64_string(f"{seed}|{shingle}")
-                for seed in range(self.num_hashes)
-            ]
-            self._memo[shingle] = h
-        return h
-
-
-def band_rows_py(
-    name: str,
-    memo: _MinhashMemo,
+def band_rows(
+    names: list[str],
     num_hashes: int = NUM_HASHES,
     band_size: int = BAND_SIZE,
-) -> list[tuple[int, int, int]]:
-    """Python mirror of ``incremental.entity_band_rows`` for one name:
-    [(band, key, kpart)]. Signature mins are SIGNED int64 like Spark's
-    LongType min; the band key chains the band's minhashes through
-    ``xxhash64`` exactly as the generated SQL does; kpart =
-    pmod(xxhash64(band:int, key:long), 64)."""
-    sh = shingles_py(name)
-    per_seed = [memo.hashes(g) for g in sh]
-    sig = [min(col) for col in zip(*per_seed)]
-    out = []
-    for b in range(num_hashes // band_size):
-        key = xxh64_chain(
-            [("long", sig[b * band_size + j]) for j in range(band_size)]
-        )
-        kpart = xxh64_chain([("int", b), ("long", key)]) % 64
-        out.append((b, key, kpart))
-    return out
+) -> tuple[np.ndarray, np.ndarray]:
+    """Python mirror of ``incremental.entity_band_rows`` for a batch of
+    names: (keys int64[V, bands], kpart int64[V, bands]), row i for
+    ``names[i]``, column b for band b. Each unique shingle is hashed
+    once per seed, all of them in one array pass per seed
+    (``xxh64("{seed}|{shingle}")``); the signature is the SIGNED int64
+    min per name, like Spark's LongType ``array_min``; a band key
+    chains the band's minhashes through ``xxhash64`` as the generated
+    SQL does; kpart = pmod(xxhash64(band:int, key:long), 64)."""
+    n_bands = num_hashes // band_size
+    if not names:
+        empty = np.empty((0, n_bands), dtype=np.int64)
+        return empty, empty
+    index: dict[str, int] = {}
+    flat: list[int] = []
+    starts: list[int] = []
+    for name in names:
+        starts.append(len(flat))
+        flat.extend(index.setdefault(g, len(index)) for g in shingles_py(name))
+    groups = byte_groups([g.encode("utf-8") for g in index])
+    flat_idx = np.asarray(flat, dtype=np.int64)
+    sig = np.empty((num_hashes, len(names)), dtype=np.int64)
+    hashes = np.empty(len(index), dtype=np.int64)
+    for seed in range(num_hashes):
+        prefix = np.frombuffer(f"{seed}|".encode(), dtype=np.uint8)
+        for rows, mat in groups:
+            pre = np.broadcast_to(prefix, (len(rows), len(prefix)))
+            hashes[rows] = xxh64_rows(np.hstack([pre, mat]))
+        sig[seed] = np.minimum.reduceat(hashes[flat_idx], starts)
+
+    # [band, member, name] -> one chained key per (band, name)
+    by_band = sig.reshape(n_bands, band_size, len(names))
+    key = np.full(n_bands * len(names), SPARK_SEED, dtype=np.int64)
+    for j in range(band_size):
+        key = xxh64_longs(by_band[:, j, :].ravel(), key)
+    bands = np.repeat(np.arange(n_bands, dtype=np.int32), len(names))
+    kpart = xxh64_longs(key, xxh64_ints(bands)) % 64
+    return (
+        np.ascontiguousarray(key.reshape(n_bands, -1).T),
+        np.ascontiguousarray(kpart.reshape(n_bands, -1).T),
+    )
 
 
 def local_distinct_entities(
@@ -167,7 +186,6 @@ def _dot_fold(va, vb) -> float:
 
 def local_duplicate_pairs(
     vertices: list[tuple[str, str, str]],
-    memo: _MinhashMemo,
     jw_threshold: float,
     cos_threshold: float,
 ) -> list[tuple[str, str, str]]:
@@ -177,16 +195,28 @@ def local_duplicate_pairs(
     returns [(group_id, id_a, id_b)] with id_a < id_b."""
     from ..functions.similarity import EMBED_DIM, _embed_batch, jaro_winkler
 
-    buckets: dict[tuple[str, int, int], list[int]] = defaultdict(list)
-    for i, (g, _uuid, name) in enumerate(vertices):
-        for band, key, _kp in band_rows_py(name, memo):
-            buckets[(g, band, key)].append(i)
+    keys, _kpart = band_rows([name for _g, _u, name in vertices])
+    # bucket = (group, band, key): sort the (vertex, band) cells by it
+    # and keep the runs holding two or more vertices
+    n_vertices, n_bands = keys.shape
+    group_of = {g: i for i, g in enumerate(dict.fromkeys(v[0] for v in vertices))}
+    groups = np.array([group_of[v[0]] for v in vertices], dtype=np.int64)
+    cells = np.stack([
+        np.repeat(groups, n_bands),
+        np.tile(np.arange(n_bands, dtype=np.int64), n_vertices),
+        keys.ravel(),
+    ])
+    vid = np.repeat(np.arange(n_vertices), n_bands)
+    order = np.lexsort(cells[::-1])
+    cells, vid = cells[:, order], vid[order]
+    starts = np.flatnonzero(
+        np.r_[True, (cells[:, 1:] != cells[:, :-1]).any(axis=0)]
+    )
+    sizes = np.diff(np.r_[starts, len(vid)])
 
     cand: set[tuple[int, int]] = set()
-    for members in buckets.values():
-        if len(members) < 2:
-            continue
-        for i, j in combinations(members, 2):
+    for lo, size in zip(starts[sizes > 1].tolist(), sizes[sizes > 1].tolist()):
+        for i, j in combinations(vid[lo : lo + size].tolist(), 2):
             a, b = (
                 (i, j) if vertices[i][1] < vertices[j][1] else (j, i)
             )
@@ -263,7 +293,6 @@ def local_build_uuid_map(
 def resolve_local(
     vertices: list[tuple[str, str, str]],
     seed_pairs: set[tuple[str, str]] = frozenset(),
-    memo: _MinhashMemo | None = None,
 ) -> tuple[list[tuple[str, str, str]], list[tuple[str, str, str, str, str]]]:
     """The driver entry point of both resolution paths: accepted
     duplicate pairs, components and canonical pick over ``vertices``
@@ -272,13 +301,10 @@ def resolve_local(
     (a micro-batch's stored intra-component edges). Returns (pairs
     [(group_id, id_a, id_b)], uuid_map rows [(group_id, uuid, name,
     canonical_uuid, canonical_name)]). Raises ``FallbackToSpark`` past
-    ``DRIVER_PAIR_CAP`` candidate pairs. ``memo`` reuses shingle hashes
-    the caller already computed."""
+    ``DRIVER_PAIR_CAP`` candidate pairs."""
     from .resolve import COS_THRESHOLD, JW_THRESHOLD
 
-    pairs = local_duplicate_pairs(
-        vertices, memo or _MinhashMemo(), JW_THRESHOLD, COS_THRESHOLD
-    )
+    pairs = local_duplicate_pairs(vertices, JW_THRESHOLD, COS_THRESHOLD)
     all_pairs = sorted({(a, b) for _g, a, b in pairs} | seed_pairs)
     comp = local_components([u for _g, u, _n in vertices], all_pairs)
     return pairs, local_build_uuid_map(vertices, comp)

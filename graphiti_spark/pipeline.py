@@ -30,11 +30,13 @@ of the cached ``entities`` frame sizes. Up to
 ``incremental_local.DRIVER_RESOLVE_NAMES_CAP`` names it runs on the
 driver, in the kernel micro-batches use (LSH banding, Jaro-Winkler +
 trigram cosine, union-find, canonical pick), and ``uuid_map``,
-``entities`` and ``duplicates`` come back as Arrow-backed local
-relations: no Spark job and no Python worker for the resolution
-itself. Above the cap the distributed LSH self-join, scoring UDFs and
-components run. Both give the same rows and schemas
-(tests/test_pipeline_paths.py).
+``entities``, ``duplicates`` and the embedded canonical nodes come
+back as Arrow-backed local relations: no Spark job for the resolution
+itself, and with the rule-based extractor no Python worker in the
+whole build (tests/test_pipeline_paths.py). Above the cap the
+distributed LSH self-join, scoring UDFs and components run, and
+``hash_embed_udf`` embeds the nodes. Both give the same rows and
+schemas (tests/test_pipeline_paths.py).
 
 Scale notes: the only wide operations are (a) the edge-dedup groupBy on
 (group_id, src, predicate, dst, valid_at) — high-cardinality key, hot
@@ -170,17 +172,41 @@ def duplicate_of_edges(named_pairs: DataFrame, batch_time: str) -> DataFrame:
     )
 
 
+def _canonical_nodes(uuid_map: DataFrame) -> DataFrame:
+    """(group_id, uuid, name, name_embedding): one row per canonical
+    node of ``uuid_map``, embedded by ``hash_embed_udf`` (X7)."""
+    return (
+        uuid_map.select(
+            "group_id",
+            F.col("canonical_uuid").alias("uuid"),
+            F.col("canonical_name").alias("name"),
+        )
+        .dropDuplicates(["group_id", "uuid"])
+        .withColumn("name_embedding", hash_embed_udf(F.col("name")))
+    )
+
+
 def _resolve_on_driver(
     entities: DataFrame, batch_time: str
-) -> tuple[DataFrame, DataFrame, DataFrame] | None:
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame] | None:
     """Resolve the distinct-name space ``entities`` (group_id, name,
     uuid) with the driver kernel (operators/incremental_local.py), when
     it holds at most ``DRIVER_RESOLVE_NAMES_CAP`` names and its LSH
     candidates fit ``DRIVER_PAIR_CAP``; else None, and the distributed
-    path runs. Returns (entities, uuid_map, duplicates) as Arrow-backed
-    local relations with the distributed path's schemas and rows."""
-    from pyspark.sql.types import StringType, StructField, StructType
+    path runs. Returns (entities, uuid_map, duplicates, canonical nodes)
+    as Arrow-backed local relations with the distributed path's schemas
+    and rows; the nodes are embedded here by ``_embed_batch``, the
+    function ``hash_embed_udf`` runs, so no Python worker starts."""
+    import pandas as pd
+    from pyspark.sql.types import (
+        ArrayType,
+        FloatType,
+        StringType,
+        StructField,
+        StructType,
+    )
 
+    from .functions.similarity import EMBED_DIM, _embed_batch
     from .operators import incremental_local as L
     from .session import local_frame
 
@@ -197,6 +223,9 @@ def _resolve_on_driver(
     dup_rows = [
         (g, *sorted((name_of[a], name_of[b])), a, b) for g, a, b in pairs
     ]
+    canon = sorted({(g, cu, cn) for g, _u, _n, cu, cn in map_rows})
+    embeddings = _embed_batch(pd.Series([cn for _g, _cu, cn in canon]), EMBED_DIM)
+    node_rows = [(*c, e) for c, e in zip(canon, embeddings)]
 
     # group_id keeps the input's nullability, as it does through the
     # distributed path's joins; every other resolved column is nullable
@@ -216,6 +245,10 @@ def _resolve_on_driver(
         duplicate_of_edges(
             local_frame(spark, dup_rows, schema("name_a", "name_b", "id_a", "id_b")),
             batch_time,
+        ),
+        local_frame(
+            spark, node_rows,
+            schema("uuid", "name").add("name_embedding", ArrayType(FloatType())),
         ),
     )
 
@@ -286,6 +319,7 @@ def run_pipeline(
         uuid_map = uuid_map.cache()
         entities = entities.cache()
         duplicates = None
+        nodes_base = _canonical_nodes(uuid_map)
     else:
         mention_names = mentions_raw
         if extra_entity_names is not None:
@@ -300,7 +334,7 @@ def run_pipeline(
         local = _resolve_on_driver(entities, batch_time)
         if local is not None:
             entities.unpersist()
-            entities, uuid_map, duplicates = local
+            entities, uuid_map, duplicates, nodes_base = local
         else:
             pairs = duplicate_pairs(entities)
             comps = connected_components(entities, pairs)
@@ -318,6 +352,7 @@ def run_pipeline(
                 ),
                 batch_time,
             )
+            nodes_base = _canonical_nodes(uuid_map)
 
     resolved = resolve_pointers(
         triples_raw.withColumn("source_node_uuid", F.lit(None).cast("string")),
@@ -391,17 +426,11 @@ def run_pipeline(
     # typed attributes, deterministic summary — operators/ontology.py).
     from .operators.ontology import enrich_nodes
 
-    nodes_base = (
-        uuid_map.select(
-            "group_id",
-            F.col("canonical_uuid").alias("uuid"),
-            F.col("canonical_name").alias("name"),
-        )
-        .dropDuplicates(["group_id", "uuid"])
-        .withColumn("name_embedding", hash_embed_udf(F.col("name")))
-        .withColumn("created_at", F.lit(batch_time).cast("timestamp"))
+    nodes = enrich_nodes(
+        nodes_base.withColumn("created_at", F.lit(batch_time).cast("timestamp")),
+        mentions,
+        entity_types,
     )
-    nodes = enrich_nodes(nodes_base, mentions, entity_types)
 
     return GraphOutput(
         episodes=episodes,

@@ -18,80 +18,110 @@ NAMES = [
 ]
 
 
+def _utf8_of_length(rng: random.Random, n: int) -> str:
+    """A random string whose UTF-8 encoding is exactly ``n`` bytes,
+    mixing 1-, 2-, 3- and 4-byte characters."""
+    by_width = {1: string.ascii_letters + " |", 2: "éüßñ", 3: "東京✓€", 4: "𝄞😀"}
+    out, left = [], n
+    while left:
+        w = rng.choice([w for w in by_width if w <= left])
+        out.append(rng.choice(by_width[w]))
+        left -= w
+    return "".join(out)
+
+
 def test_xxh64_matches_spark_on_random_inputs(spark):
-    """Pure-Python XXH64 must be bit-exact with F.xxhash64 for every
-    type the band-key expressions hash: strings (UTF-8), longs, ints,
-    and multi-argument chains."""
+    """The array XXH64 must be bit-exact with F.xxhash64 for every type
+    the band-key and partition expressions hash: strings (UTF-8) of
+    every byte length from 0 to 40 (each tail-round group and the
+    >= 32-byte stripe loop) and longer, longs, ints, and multi-argument
+    chains, where each row's seed is the previous argument's hash."""
     from graphiti_spark.functions.xxh64 import (
-        xxh64_chain,
-        xxh64_int,
-        xxh64_long,
-        xxh64_string,
+        xxh64_ints,
+        xxh64_longs,
+        xxh64_strings,
     )
 
     rng = random.Random(11)
-    strs = NAMES + [
-        "".join(rng.choices(string.printable + "✓é東", k=rng.randint(0, 90)))
-        for _ in range(120)
-    ]
-    got = spark.createDataFrame([(s,) for s in strs], "s string").select(
-        "s", F.xxhash64("s").alias("h")
+    strs = (
+        NAMES
+        + [_utf8_of_length(rng, n) for n in range(41) for _ in range(3)]
+        + [
+            "".join(rng.choices(string.printable + "✓é東", k=rng.randint(0, 90)))
+            for _ in range(120)
+        ]
     )
-    assert all(xxh64_string(r.s) == r.h for r in got.collect())
-
-    longs = [0, 1, -1, 2**62, -(2**62), 42] + [
-        rng.randint(-(2**63), 2**63 - 1) for _ in range(100)
-    ]
-    got = spark.createDataFrame([(v,) for v in longs], "v long").select(
-        "v", F.xxhash64("v").alias("h")
-    )
-    assert all(xxh64_long(r.v, 42) == r.h for r in got.collect())
-
+    assert {len(s.encode()) for s in strs} >= set(range(41))
     ints = [0, 1, -1, 2**31 - 1, -(2**31)] + [
-        rng.randint(-(2**31), 2**31 - 1) for _ in range(60)
+        rng.randint(-(2**31), 2**31 - 1) for _ in range(len(strs) - 5)
     ]
-    got = spark.createDataFrame([(v,) for v in ints], "v int").select(
-        "v", F.xxhash64("v").alias("h")
-    )
-    assert all(xxh64_int(r.v, 42) == r.h for r in got.collect())
-
-    chains = [
-        (rng.randint(-(2**31), 2**31 - 1), rng.randint(-(2**63), 2**63 - 1))
-        for _ in range(60)
+    longs = [0, 1, -1, 2**62, -(2**62), 42] + [
+        rng.randint(-(2**63), 2**63 - 1) for _ in range(len(strs) - 6)
     ]
-    got = spark.createDataFrame(chains, "a int, b long").select(
-        "a", "b", F.xxhash64("a", "b").alias("h")
+    rows = (
+        spark.createDataFrame(
+            list(zip(strs, ints, longs)), "s string, a int, b long"
+        )
+        .select(
+            "s", "a", "b",
+            F.xxhash64("s").alias("hs"),
+            F.xxhash64("a").alias("ha"),
+            F.xxhash64("b").alias("hb"),
+            F.xxhash64("a", "b").alias("hab"),
+            F.xxhash64("b", "b").alias("hbb"),
+            F.xxhash64("a", "s").alias("has"),
+        )
+        .collect()
     )
-    assert all(
-        xxh64_chain([("int", r.a), ("long", r.b)]) == r.h for r in got.collect()
-    )
+    s = [r.s for r in rows]
+    a = [r.a for r in rows]
+    b = [r.b for r in rows]
+    assert xxh64_strings(s).tolist() == [r.hs for r in rows]
+    assert xxh64_ints(a).tolist() == [r.ha for r in rows]
+    assert xxh64_longs(b).tolist() == [r.hb for r in rows]
+    assert xxh64_longs(b, xxh64_ints(a)).tolist() == [r.hab for r in rows]
+    assert xxh64_longs(b, xxh64_longs(b)).tolist() == [r.hbb for r in rows]
+    assert xxh64_strings(s, xxh64_ints(a)).tolist() == [r.has for r in rows]
 
 
 def test_band_rows_match_entity_band_rows(spark):
     """Driver banding (shingles → minhash → band key → kpart) must
     reproduce entity_band_rows' stored values exactly, including on
     unicode names — these keys probe the persisted index, so one bit of
-    drift silently breaks incremental dedup."""
+    drift silently breaks incremental dedup. The names make the hashed
+    ``"seed|shingle"`` inputs reach every byte length they can have:
+    4 (the empty name's two-space shingle) to 15 (three 4-byte
+    characters behind a two-digit seed)."""
+    from graphiti_spark.functions.minhash import NUM_HASHES
     from graphiti_spark.operators.incremental import entity_band_rows
     from graphiti_spark.operators.incremental_local import (
-        _MinhashMemo,
-        band_rows_py,
+        band_rows,
         entity_uuid_py,
         local_distinct_entities,
+        shingles_py,
         upart_py,
     )
 
-    ents = local_distinct_entities([("g0", n) for n in NAMES if n.strip()])
+    names = NAMES + ["𝄞", "𝄞𝄞𝄞", "𝄞𝄞é𝄞𝄞東", "é東𝄞a", "ßé€ü"]
+    lengths = {
+        len(f"{seed}|{g}".encode())
+        for n in names
+        for g in shingles_py(n)
+        for seed in range(NUM_HASHES)
+    }
+    assert lengths == set(range(4, 16))
+
+    ents = local_distinct_entities([("g0", n) for n in names])
     spark_rows = entity_band_rows(
         spark.createDataFrame(ents, "group_id string, uuid string, name string")
     ).collect()
     want = {(r.group_id, r.uuid, r.band, r.key, r.kpart) for r in spark_rows}
 
-    memo = _MinhashMemo()
+    keys, kpart = band_rows([name for _g, _u, name in ents])
     got = {
         (g, uuid, band, key, kp)
-        for g, uuid, name in ents
-        for band, key, kp in band_rows_py(name, memo)
+        for (g, uuid, _name), krow, prow in zip(ents, keys.tolist(), kpart.tolist())
+        for band, (key, kp) in enumerate(zip(krow, prow))
     }
     assert got == want
 
@@ -101,7 +131,8 @@ def test_band_rows_match_entity_band_rows(spark):
     uparts = spark.createDataFrame(
         [(u,) for _g, u, _n in ents], "uuid string"
     ).select("uuid", F.pmod(F.xxhash64("uuid"), F.lit(64)).cast("int").alias("p"))
-    assert all(upart_py(r.uuid) == r.p for r in uparts.collect())
+    rows = uparts.collect()
+    assert upart_py([r.uuid for r in rows]).tolist() == [r.p for r in rows]
 
 
 def _mk_root(spark, tmp_path, episodes):

@@ -199,3 +199,25 @@ def test_bulk_build_job_budget(spark):
     _release(out)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 0 < len(jobs) <= JOB_BUDGET, f"{len(jobs)} jobs"
+
+
+PYTHON_NODES = (
+    "ArrowEvalPython", "BatchEvalPython", "MapInPandas", "MapInArrow",
+    "FlatMapGroupsInPandas",
+)
+
+
+def test_under_cap_build_runs_no_python_worker(spark):
+    """A bulk build at or under the names cap plans no Python-evaluation
+    node in any GraphOutput frame: extraction is Catalyst and the
+    canonical nodes are embedded on the driver."""
+    out = run_pipeline(spark, _episodes(spark, NEAR_DUPS))
+    try:
+        for name in FRAMES:
+            df = getattr(out, name)
+            df.write.format("noop").mode("overwrite").save()
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            found = [n for n in PYTHON_NODES if n in plan]
+            assert not found, f"{name} plans {found}:\n{plan}"
+    finally:
+        _release(out)
