@@ -135,15 +135,23 @@ def test_band_rows_match_entity_band_rows(spark):
     assert upart_py([r.uuid for r in rows]).tolist() == [r.p for r in rows]
 
 
-def _mk_root(spark, tmp_path, episodes):
+@pytest.fixture(scope="module")
+def prior_root(spark, tmp_path_factory):
+    """A graph root built from the 90% of sf0.001 whose doc_id bucket
+    is not 0; the micro-batch is bucket 0. incremental_resolve only
+    reads the root, so the tests below share it."""
     from graphiti_spark.materialize import materialize_graph
+    from graphiti_spark.synth import synthesize_episodes
+    from tests.conftest import SF_SMOKE
 
-    root = str(tmp_path / "graph")
-    materialize_graph(spark, episodes, root)
+    eps = synthesize_episodes(spark, SF_SMOKE)
+    root = str(tmp_path_factory.mktemp("prior") / "graph")
+    bucket = F.pmod(F.xxhash64("doc_id"), F.lit(10)).cast("int")
+    materialize_graph(spark, eps.where(bucket != 0), root)
     return root
 
 
-def test_driver_and_spark_paths_resolve_identically(spark, tmp_path, monkeypatch):
+def test_driver_and_spark_paths_resolve_identically(spark, prior_root, monkeypatch):
     """incremental_resolve(driver path) ≡ incremental_resolve(forced
     distributed path) on the same root + micro-batch: every returned
     relation equal as a sorted row set, every metric equal."""
@@ -156,8 +164,7 @@ def test_driver_and_spark_paths_resolve_identically(spark, tmp_path, monkeypatch
 
     eps = synthesize_episodes(spark, SF_SMOKE)
     bucket = F.pmod(F.xxhash64("doc_id"), F.lit(10)).cast("int")
-    root = _mk_root(spark, tmp_path, eps.where(bucket != 0))
-    io = TableIO(spark, root)
+    io = TableIO(spark, prior_root)
     micro = eps.where(bucket == 0)
     # a never-seen name makes new_entities non-empty, exercising the
     # first-seen anti-join on both paths
@@ -211,7 +218,7 @@ def test_materialize_incremental_uses_driver_path_and_stays_equivalent(
     assert a == b
 
 
-def test_pair_cap_falls_back(spark, tmp_path, monkeypatch):
+def test_pair_cap_falls_back(spark, prior_root, monkeypatch):
     """Exceeding a driver cap mid-path must fall back to the
     distributed strategy, not fail."""
     from graphiti_spark.operators import incremental_local as L
@@ -223,8 +230,7 @@ def test_pair_cap_falls_back(spark, tmp_path, monkeypatch):
 
     eps = synthesize_episodes(spark, SF_SMOKE)
     bucket = F.pmod(F.xxhash64("doc_id"), F.lit(10)).cast("int")
-    root = _mk_root(spark, tmp_path, eps.where(bucket != 0))
-    io = TableIO(spark, root)
+    io = TableIO(spark, prior_root)
     mentions_raw = extract_mentions(extract_triples(eps.where(bucket == 0)))
 
     orig = L.DRIVER_NEIGHBORHOOD_CAP

@@ -30,11 +30,17 @@ def episodes(spark):
     return synthesize_episodes(spark, SF_SMOKE).cache()
 
 
-def test_full_vs_partial_resume(spark, episodes, tmp_path_factory):
-    full_dir = str(tmp_path_factory.mktemp("full"))
+@pytest.fixture(scope="module")
+def full_build(spark, episodes, tmp_path_factory):
+    """One global build of ``episodes``, shared by the tests that only
+    read it (none of them writes to this root)."""
+    return materialize_graph(spark, episodes, str(tmp_path_factory.mktemp("full")))
+
+
+def test_full_vs_partial_resume(spark, episodes, full_build, tmp_path_factory):
     part_dir = str(tmp_path_factory.mktemp("partial"))
 
-    io_full = materialize_graph(spark, episodes, full_dir)
+    io_full = full_build
 
     # simulate a crash: first run saw only half the partitions
     eps_p = with_part(episodes)
@@ -56,9 +62,8 @@ def test_rerun_is_noop(spark, episodes, tmp_path_factory):
     assert before == after
 
 
-def test_lineage_and_metrics_written(spark, episodes, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("lin"))
-    io = materialize_graph(spark, episodes, d)
+def test_lineage_and_metrics_written(full_build):
+    io = full_build
     lineage = io.read("lineage")
     assert lineage.where(F.col("stage") == "extract").count() > 0
     assert set(lineage.columns) >= {"stage", "part", "row_count", "content_hash"}
@@ -105,13 +110,14 @@ def _edge_part_files(io: TableIO):
     return _part_files(io, "edges", "epart")
 
 
-def test_incremental_merge_o_batch_and_equivalent(spark, episodes, tmp_path_factory):
+def test_incremental_merge_o_batch_and_equivalent(
+    spark, episodes, full_build, tmp_path_factory
+):
     """Scale contract of the incremental write path: batch N+1 rewrites
     only the pair-hash buckets it touches (O(batch), not O(table)), and
     the result is byte-identical to one global build of the union of
     the batches."""
     inc_dir = str(tmp_path_factory.mktemp("inc"))
-    full_dir = str(tmp_path_factory.mktemp("fullrw"))
 
     eps_b = episodes.withColumn(
         "b", F.pmod(F.xxhash64("doc_id"), F.lit(10)).cast("int")
@@ -146,9 +152,8 @@ def test_incremental_merge_o_batch_and_equivalent(spark, episodes, tmp_path_fact
     assert len(changed) <= parts_rewritten[-1]
 
     # equivalence: one global build of the union of the batches
-    io_full = materialize_graph(spark, episodes, full_dir)
     for t in TABLES:
-        assert _table_fingerprint(io_inc, t) == _table_fingerprint(io_full, t), t
+        assert _table_fingerprint(io_inc, t) == _table_fingerprint(full_build, t), t
 
 
 def test_incremental_resolve_o_batch(spark, episodes, tmp_path_factory):
@@ -344,14 +349,13 @@ def test_overwrite_partitions_empties_listed_part(spark, tmp_path_factory):
     assert {r.k for r in io.read("t").collect()} == {"z"}
 
 
-def test_episode_edges_forward_pointers(spark, episodes, tmp_path_factory):
+def test_episode_edges_forward_pointers(episodes, full_build):
     """episode_edges (the reference's episode.entity_edges forward
     pointers) inverts edge provenance exactly, and episode_subgraph
     resolves identically through the index and the arrays_overlap scan."""
     from graphiti_spark.operators.graph_api import episode_subgraph
 
-    d = str(tmp_path_factory.mktemp("ee"))
-    io = materialize_graph(spark, episodes, d)
+    io = full_build
     edges = io.read("edges")
     ee = io.read("episode_edges")
     expect = {
@@ -427,7 +431,7 @@ def test_search_uses_materialized_indexes(spark, episodes, tmp_path_factory):
     assert a == b and a
 
 
-def test_band_lookup_pushes_key_predicate(spark, episodes, tmp_path_factory):
+def test_band_lookup_pushes_key_predicate(spark, full_build):
     """The incremental band-index lookup must reach the parquet scan
     with the batch's band keys as a pushed In predicate (row-group
     skipping over the key-sorted, bloom-filtered index) — not scan the
@@ -435,8 +439,7 @@ def test_band_lookup_pushes_key_predicate(spark, episodes, tmp_path_factory):
     from graphiti_spark.operators.incremental import entity_band_rows
     from graphiti_spark.operators.resolve import distinct_entities
 
-    d = str(tmp_path_factory.mktemp("bands_push"))
-    io = materialize_graph(spark, episodes, d)
+    io = full_build
 
     batch = distinct_entities(
         spark.createDataFrame(
@@ -451,12 +454,11 @@ def test_band_lookup_pushes_key_predicate(spark, episodes, tmp_path_factory):
     assert "PushedFilters: [In(key" in plan, plan[:1200]
 
 
-def test_fast_count_matches_spark_counts(spark, episodes, tmp_path_factory):
+def test_fast_count_matches_spark_counts(full_build):
     """Footer-stats counts (the Iceberg snapshot-stats stand-in the
     per-batch metrics use) must equal real Spark counts — total,
     non-null-column, and partition-scoped."""
-    d = str(tmp_path_factory.mktemp("fastcount"))
-    io = materialize_graph(spark, episodes, d)
+    io = full_build
     edges = io.read("edges")
     assert io.fast_count("edges") == edges.count()
     assert io.fast_count("edges", non_null="invalid_at") == edges.where(
