@@ -36,8 +36,8 @@ Byte-identical by construction, pinned by tests:
   ARE the Python functions the Spark UDFs call, and the cosine is the
   same left-fold over float32→float64 casts as the ``F.aggregate``
   column expression (same order, same IEEE ops);
-- components: the same min-root union-find the distributed
-  ``connected_components`` uses on its driver fast path.
+- components: ``local_components`` is the one union-find; the
+  distributed ``connected_components`` calls it on its driver fast path.
 
 tests/test_incremental_local.py pins the micro-batch path and
 tests/test_pipeline_paths.py the bulk build against the forced
@@ -253,9 +253,11 @@ def local_duplicate_pairs(
 def local_components(
     vertex_uuids: list[str], pairs: list[tuple[str, str]]
 ) -> dict[str, str]:
-    """Python mirror of ``resolve.connected_components``' driver
-    union-find: component = min uuid of the connected component
-    (min-root unions keep the tree root at the component minimum)."""
+    """The union-find behind every driver-side component labelling
+    (``resolve_local`` and ``resolve.connected_components``' fast path):
+    maps each of ``vertex_uuids`` to the min uuid of its connected
+    component over ``pairs`` (min-root unions keep the tree root at the
+    component minimum; a vertex in no pair maps to itself)."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:

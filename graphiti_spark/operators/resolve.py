@@ -32,6 +32,7 @@ from ..functions.minhash import lsh_candidate_pairs
 from ..functions.similarity import dot, jaro_winkler_udf
 from ..schemas import entity_uuid
 from ..session import local_frame
+from .incremental_local import local_components
 
 # Tuned on the fixture pairs (tests/test_resolve.py): accepts
 # (Acme Corp~Acme Corporation JW .912/cos .707), (John Smith~J. Smith
@@ -99,29 +100,20 @@ def resolution_partitions(
     return max(1, min(cap, math.ceil(n / rows_per_partition)))
 
 
-def duplicate_pairs(
-    entities: DataFrame,
-    embedded: DataFrame | None = None,
-    n_partitions: int | None = None,
-) -> DataFrame:
-    """D4 blocking + deterministic dedup decision.
-
-    ``embedded``: optional (uuid, name_embedding) — defaults to hashing
-    embeddings computed inline. Returns (group_id, id_a, id_b) with
-    id_a < id_b for accepted duplicate pairs.
+def duplicate_pairs(entities: DataFrame) -> DataFrame:
+    """D4 blocking + deterministic dedup decision over inline hashing
+    embeddings. Returns (group_id, id_a, id_b) with id_a < id_b for
+    accepted duplicate pairs.
     """
     from ..functions.similarity import hash_embed_udf
 
-    if n_partitions is None:
-        n_partitions = resolution_partitions(entities)
-    entities = entities.repartition(n_partitions)
+    entities = entities.repartition(resolution_partitions(entities))
     pairs = lsh_candidate_pairs(
         entities, id_col="uuid", text_col="name", partition_cols=["group_id"]
     )
-    if embedded is None:
-        embedded = entities.select(
-            "uuid", hash_embed_udf(F.col("name")).alias("name_embedding")
-        )
+    embedded = entities.select(
+        "uuid", hash_embed_udf(F.col("name")).alias("name_embedding")
+    )
     ea = embedded.select(
         F.col("uuid").alias("id_a"), F.col("name_embedding").alias("emb_a")
     )
@@ -140,12 +132,14 @@ def duplicate_pairs(
 
 
 DRIVER_CC_THRESHOLD = 500_000
+# round cap of the distributed label propagation; it stops earlier, at
+# the first round that changes no label
+MAX_CC_ITERS = 20
 
 
 def connected_components(
     vertices: DataFrame,
     pairs: DataFrame,
-    max_iters: int = 20,
     driver_threshold: int = DRIVER_CC_THRESHOLD,
 ) -> DataFrame:
     """D5: connected components of the duplicate-pair graph.
@@ -156,8 +150,9 @@ def connected_components(
     Two physical strategies behind one semantics:
     - pair graph fits the driver (≤ driver_threshold edges — near-dup
       pairs are a vanishing fraction of the corpus, so this is the
-      common case even at huge doc counts): union-find on the driver,
-      broadcast the non-identity labels back. Zero iterative jobs.
+      common case even at huge doc counts): the driver union-find
+      ``incremental_local.local_components``, then broadcast the
+      non-identity labels back. Zero iterative jobs.
     - otherwise: iterative min-label hash-join propagation with
       localCheckpoint per round (no Catalyst recursion), converging in
       O(log diameter) rounds — the north rule's 'iterative hash-join
@@ -166,22 +161,9 @@ def connected_components(
     # one materialization decides the strategy AND feeds the fast path
     probe = pairs.select("id_a", "id_b").limit(driver_threshold + 1).collect()
     if len(probe) <= driver_threshold:
-        edges_local = probe
-        parent: dict[str, str] = {}
-
-        def find(x: str) -> str:
-            while parent.get(x, x) != x:
-                parent[x] = parent.get(parent[x], parent[x])
-                x = parent[x]
-            return x
-
-        for r in edges_local:
-            ra, rb = find(r.id_a), find(r.id_b)
-            if ra != rb:
-                # min-id becomes the root → component = min uuid
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        mapping = [(x, find(x)) for x in list(parent)]
+        members = dict.fromkeys(u for r in probe for u in r)
+        comp = local_components(list(members), probe)
+        mapping = [(u, c) for u, c in comp.items() if u != c]
         if mapping:
             mdf = F.broadcast(
                 local_frame(
@@ -201,7 +183,7 @@ def connected_components(
     labels = vertices.select(F.col("uuid"), F.col("uuid").alias("component"))
     edges = edges.localCheckpoint(eager=True)
     labels = labels.localCheckpoint(eager=True)
-    for _ in range(max_iters):
+    for _ in range(MAX_CC_ITERS):
         neighbor_min = (
             edges.join(labels, edges["dst"] == labels["uuid"])
             .groupBy("src")

@@ -73,6 +73,9 @@ def tokenize_py(text: str) -> list[str]:
 # as the corpus grows (VERDICT r2 #5). Bucket count only shapes the
 # layout — BM25 scores are bucket-independent.
 TERM_BUCKETS = 256
+# doc-hash buckets of the persisted (id, dl) ledger: fixes its on-disk
+# layout, so every index of a root must agree on it
+DOC_BUCKETS = 32
 
 
 def term_bucket_py(term: str, n_buckets: int = TERM_BUCKETS) -> int:
@@ -337,65 +340,15 @@ class SearchIndex:
     the write path appends O(batch) posting files and never re-tokenizes
     the corpus."""
 
-    def __init__(self, io, prefix: str = "ft", n_doc_buckets: int = 32):
+    def __init__(self, io, prefix: str = "ft"):
         self.io = io
         self.prefix = prefix
-        self.n_doc_buckets = n_doc_buckets
-        # _migrate_epoch_format is a per-merge no-op after the first
-        # check: cache the verdict so steady-state ingest never re-probes
-        # the stored postings schema (a driver footer read per call that
-        # the round-3 bench showed adds up at micro-batch cadence)
-        self._fmt_checked = False
 
     def _t(self, suffix: str) -> str:
         return f"{self.prefix}_{suffix}"
 
     def exists(self) -> bool:
         return self.io.exists(self._t("postings"))
-
-    def _migrate_epoch_format(self) -> None:
-        """One-time layout upgrade from the epoch-less round-2 format:
-        postings/stats/tombstones gain an ``epoch`` write-generation
-        column and legacy-tombstoned ids leave the doc ledger (the
-        legacy delete left them there, which made a deleted id
-        permanently un-indexable: a re-merge was skipped by the ledger
-        while its postings stayed tombstone-hidden). O(table) once,
-        never again — the same pattern as the node_stats layout
-        migration. The probe (a driver-side schema read) is cached per
-        instance: once the layout is current it stays current — every
-        writer in this module stamps epoch."""
-        if self._fmt_checked:
-            return
-        if not self.exists():
-            self._fmt_checked = True
-            return
-        p = self.io.read(self._t("postings"))
-        if "epoch" in p.columns:
-            self._fmt_checked = True
-            return
-        self.io.write(
-            self._t("postings"),
-            p.withColumn("epoch", F.lit(0).cast("long")),
-            partition_by=["tpart"],
-        )
-        s = self.io.read(self._t("stats"))
-        if "epoch" not in s.columns:
-            self.io.write(
-                self._t("stats"), s.withColumn("epoch", F.lit(0).cast("long"))
-            )
-        if self.io.exists(self._t("tombstones")):
-            t = self.io.read(self._t("tombstones"))
-            docs = self.io.read(self._t("docs"))
-            self.io.write(
-                self._t("docs"),
-                docs.join(t.select("id"), "id", "left_anti"),
-                partition_by=["part"],
-            )
-            self.io.write(
-                self._t("tombstones"),
-                t.select("id", "dl").withColumn("epoch", F.lit(0).cast("long")),
-            )
-        self._fmt_checked = True
 
     def _epoch(self) -> int:
         """Current write generation from the 1-row stats table (0 when
@@ -417,10 +370,7 @@ class SearchIndex:
         ]
         epoch = 0
         for f in files:
-            pf = pq.ParquetFile(f)
-            if "epoch" not in pf.schema_arrow.names:
-                continue
-            col = pf.read(columns=["epoch"]).column("epoch")
+            col = pq.ParquetFile(f).read(columns=["epoch"]).column("epoch")
             if len(col):
                 epoch = max(epoch, int(col[0].as_py()))
         return epoch
@@ -433,12 +383,11 @@ class SearchIndex:
         and tombstones hide only postings written at-or-before the
         delete's epoch, a previously-deleted id is simply re-indexed
         here — its new postings outrank the tombstone."""
-        self._migrate_epoch_format()
         epoch = self._epoch() + 1
         docs = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
         docs = docs.withColumn(
             "part",
-            F.pmod(F.xxhash64(F.col("id")), F.lit(self.n_doc_buckets)).cast("int"),
+            F.pmod(F.xxhash64(F.col("id")), F.lit(DOC_BUCKETS)).cast("int"),
         )
         if self.io.exists(self._t("docs")):
             parts = [r[0] for r in docs.select("part").distinct().collect()]
@@ -483,7 +432,7 @@ class SearchIndex:
                     F.size(tokenize(F.col("text"))).cast("long"), F.lit(0).cast("long")
                 ).alias("dl"),
             )
-            .repartition(self.n_doc_buckets, "part")
+            .repartition(DOC_BUCKETS, "part")
             .localCheckpoint(eager=True)
         )
         self.io.merge_upsert(
@@ -524,7 +473,6 @@ class SearchIndex:
         merges away node/edge uuids; compaction physically drops the
         hidden rows. O(batch): the tombstone append, the affected ledger
         buckets, and the 1-row stats."""
-        self._migrate_epoch_format()
         epoch = self._epoch()
         ids = ids.toDF("id").dropDuplicates()
         ledger = self.io.read(self._t("docs"))
@@ -570,7 +518,6 @@ class SearchIndex:
         Stats are already tombstone-adjusted, so they are unchanged.
         This is the one full-rewrite operation of the index; run it on
         a maintenance cadence, not per batch."""
-        self._migrate_epoch_format()
         live = self.postings().repartition("tpart").localCheckpoint(eager=True)
         self.io.write(self._t("postings"), live, partition_by=["tpart"])
         if self.io.exists(self._t("tombstones")):
@@ -579,18 +526,18 @@ class SearchIndex:
     def postings(self) -> DataFrame:
         p = self.io.read(self._t("postings"))
         if self.io.exists(self._t("tombstones")):
-            t = self.io.read(self._t("tombstones"))
-            if "epoch" in p.columns and "epoch" in t.columns:
-                # a tombstone hides postings written AT OR BEFORE its
-                # epoch; rows re-indexed after the delete stay visible
-                tm = t.groupBy("id").agg(F.max("epoch").alias("_te"))
-                p = (
-                    p.join(F.broadcast(tm), "id", "left")
-                    .where(F.col("_te").isNull() | (F.col("epoch") > F.col("_te")))
-                    .drop("_te")
-                )
-            else:
-                p = p.join(F.broadcast(t.select("id")), "id", "left_anti")
+            # a tombstone hides postings written AT OR BEFORE its epoch;
+            # rows re-indexed after the delete stay visible
+            tm = (
+                self.io.read(self._t("tombstones"))
+                .groupBy("id")
+                .agg(F.max("epoch").alias("_te"))
+            )
+            p = (
+                p.join(F.broadcast(tm), "id", "left")
+                .where(F.col("_te").isNull() | (F.col("epoch") > F.col("_te")))
+                .drop("_te")
+            )
         return p
 
     def stats(self) -> DataFrame:
