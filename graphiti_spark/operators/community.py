@@ -113,12 +113,6 @@ def detect_communities(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     return label_propagation(nodes.select("group_id", "uuid"), adj)
 
 
-def default_summarizer(names: list[str]) -> str:
-    """Deterministic stand-in for the reference's pairwise LLM summary
-    tree (community_operations.py:153-192): sorted member roster."""
-    return "Community of: " + ", ".join(sorted(names))
-
-
 def build_communities(
     membership: DataFrame,
     nodes: DataFrame,

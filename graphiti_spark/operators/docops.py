@@ -1,8 +1,13 @@
-"""Training-data pipeline operators over the `documents` /
-`embeddings` tables: dedup (exact, MinHash-LSH + n-gram Jaccard,
-SimHash, embedding-cosine), similarity search (brute-force baseline +
-LSH-bucketed and IVF ANN scale paths), and text analysis (language id,
-quality scoring, token stats incl. BPE-ish counts, fingerprinting).
+"""Corpus-curation operators over the `documents` / `embeddings`
+tables:
+- dedup: MinHash-LSH + n-gram Jaccard near-duplicates, corpus-wide
+  line dedup, duplicated-span detection, containment pairs, and the
+  keep-lists over them (``dedup_keep_list``, ``dedup_keep_best``);
+- embeddings: cosine near-duplicates, SemDeDup keep-lists and the
+  LSH-bucketed top-k;
+- sketches: KMV distinct counts;
+- splits, chunking and sequence packing; mixture and stratified
+  sampling; PII scrubbing; the per-source cap.
 
 These are first-class engine components beyond the reference's own
 operator set — what a 100 TB corpus-preparation pipeline needs around
@@ -27,241 +32,8 @@ from .evaluate import _md5_u32
 from .search import tokenize
 
 # ---------------------------------------------------------------------------
-# tokenization + stats
-# ---------------------------------------------------------------------------
-
-STOPWORDS = {
-    # tiny per-language keyword lists for the heuristic language id —
-    # the testdata generator tags docs with lang but the text is a
-    # shared vocabulary, so this heuristic is honest about uncertainty.
-    "en": ["the", "a", "and", "of", "to"],
-    "de": ["der", "die", "das", "und", "ist"],
-    "es": ["el", "la", "los", "y", "es"],
-    "fr": ["le", "la", "les", "et", "est"],
-    "zh": ["de", "shi", "he", "zai", "you"],
-}
-
-
-# GPT-2-style pre-tokenizer shape (word / number / punctuation runs,
-# each absorbing one leading space) — the "BPE-ish" token estimate; a
-# real BPE vocab would further split rare words, so this is the lower
-# bound a tokenizer-budget pipeline plans with. Same RE2-compatible
-# pattern runs in DuckDB for the oracle.
-BPE_ISH_PATTERN = r" ?[a-z]+| ?[0-9]+| ?[^a-z0-9\s]+"
-
-
-def token_stats(documents: DataFrame) -> DataFrame:
-    """(doc_id, n_tokens, n_distinct_tokens, n_chars, avg_token_len,
-    n_bpe_tokens) — whitespace tokens + the BPE-ish pre-tokenizer
-    count."""
-    toks = tokenize(F.col("text"))
-    return documents.select(
-        "doc_id",
-        F.size(toks).cast("long").alias("n_tokens"),
-        F.size(F.array_distinct(toks)).cast("long").alias("n_distinct_tokens"),
-        F.length("text").cast("long").alias("n_chars"),
-        F.round(
-            F.aggregate(toks, F.lit(0), lambda a, t: a + F.length(t)).cast("double")
-            / F.greatest(F.size(toks), F.lit(1)),
-            6,
-        ).alias("avg_token_len"),
-        F.size(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(BPE_ISH_PATTERN), F.lit(0))
-        ).cast("long").alias("n_bpe_tokens"),
-    )
-
-
-def _micro(c: Column) -> Column:
-    """floor(x*1e6 + 0.5) instead of round(x, 6): the ratios are exact
-    small rationals that can land exactly on a .5 rounding boundary,
-    where Spark (HALF_UP) and DuckDB (HALF_EVEN) disagree; floor of
-    the identical IEEE double is engine-independent."""
-    return F.floor(c * 1000000 + 0.5).cast("long")
-
-
-def _quality_exprs() -> dict[str, Column]:
-    """Quality heuristics as pure column expressions over ``text`` —
-    shared by :func:`quality_score` and :func:`curate` so the facade
-    computes them inline on its one corpus scan instead of re-scanning
-    and re-joining."""
-    toks = tokenize(F.col("text"))
-    n = F.size(toks)
-    distinct_ratio = F.size(F.array_distinct(toks)) / F.greatest(n, F.lit(1))
-    en_stop = F.array(*[F.lit(w) for w in STOPWORDS["en"]])
-    stop_ratio = F.size(
-        F.filter(toks, lambda t: F.array_contains(en_stop, t))
-    ) / F.greatest(n, F.lit(1))
-    length_ok = (n >= 10) & (n <= 100000)
-    score = (
-        0.5 * distinct_ratio
-        + 0.3 * F.least(stop_ratio * 5, F.lit(1.0))
-        + 0.2 * length_ok.cast("double")
-    )
-    return {
-        "distinct_ratio_micro": _micro(distinct_ratio),
-        "stopword_ratio_micro": _micro(stop_ratio),
-        "length_ok": length_ok,
-        "quality_micro": _micro(score),
-    }
-
-
-def quality_score(documents: DataFrame) -> DataFrame:
-    """Deterministic quality heuristics: repetition ratio (distinct/total
-    tokens), length band, stopword presence. score in [0,1]."""
-    q = _quality_exprs()
-    return documents.select(
-        "doc_id", *[expr.alias(name) for name, expr in q.items()]
-    )
-
-
-def _lang_pred_columns() -> tuple[list[Column], Column]:
-    """(per-language raw-score columns named ``score_<lang>``, argmax
-    expression over those columns) — pure expressions over ``text``,
-    shared by :func:`language_id` and :func:`curate`. Ties go to the
-    lexicographically first language."""
-    toks = tokenize(F.col("text"))
-    n = F.greatest(F.size(toks), F.lit(1))
-    scores = []
-    for lang in sorted(STOPWORDS):
-        kw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-        scores.append(
-            (F.size(F.filter(toks, lambda t: F.array_contains(kw, t))) / n).alias(
-                f"score_{lang}"
-            )
-        )
-    langs = sorted(STOPWORDS)
-    best = F.greatest(*[F.col(f"score_{l}") for l in langs])
-    pred = None
-    for l in langs:  # first lang reaching the max wins (ties → asc name)
-        cond = F.col(f"score_{l}") == best
-        pred = F.when(cond, F.lit(l)) if pred is None else pred.when(cond, F.lit(l))
-    return scores, pred
-
-
-def language_id(documents: DataFrame) -> DataFrame:
-    """Heuristic language id: per-language stopword hit rate, argmax
-    (ties → lexicographically first language)."""
-    scores, pred = _lang_pred_columns()
-    langs = sorted(STOPWORDS)
-    return documents.select("doc_id", *scores).select(
-        "doc_id",
-        *[F.round(F.col(f"score_{l}"), 6).alias(f"score_{l}") for l in langs],
-        pred.alias("lang_pred"),
-    )
-
-
-def _word_ngrams(toks: Column, n: int) -> Column:
-    """Word n-grams of a token array as space-joined strings (empty
-    array when the doc has fewer than n tokens) — pure columns.
-
-    sequence(1, hi) must be guarded: Spark's sequence(1, 0) yields the
-    DESCENDING [1, 0] (not an empty array), which made element_at blow
-    up on docs shorter than n tokens."""
-    hi = F.size(toks) - (n - 1)
-    idx = F.when(hi >= 1, F.sequence(F.lit(1), hi)).otherwise(
-        F.array().cast("array<int>")
-    )
-    return F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, i + off) for off in range(n)]
-        ),
-    )
-
-
-def repetition_stats(documents: DataFrame) -> DataFrame:
-    """Gopher-style repetition signals (Rae et al. 2021, appendix A1.1):
-    the fraction of a doc's bigrams/trigrams taken by its single most
-    frequent bigram/trigram, plus the duplicate-token fraction. High
-    values mark degenerate/boilerplate docs a pretraining pipeline
-    filters out.
-
-    Scale shape: explode n-grams → groupBy (doc_id, gram) with map-side
-    partial aggregation, then per-doc max/sum — keys are doc-scoped so
-    there is no corpus-wide hot key; linear in total tokens, two
-    shuffles, no window over the corpus. Fractions are emitted as
-    micro-integers (floor(x*1e6 + 0.5)) for engine-independent
-    comparison (see quality_score)."""
-    toks = tokenize(F.col("text"))
-
-    def _micro(c):
-        return F.floor(c * 1000000 + 0.5).cast("long")
-
-    base = documents.select(
-        "doc_id",
-        toks.alias("toks"),
-        _micro(
-            (F.size(toks) - F.size(F.array_distinct(toks)))
-            / F.greatest(F.size(toks), F.lit(1))
-        ).alias("dup_token_frac_micro"),
-    )
-
-    def top_frac(n: int, out_col: str) -> DataFrame:
-        grams = base.select(
-            "doc_id", F.explode(_word_ngrams(F.col("toks"), n)).alias("gram")
-        )
-        counts = grams.groupBy("doc_id", "gram").count()
-        return counts.groupBy("doc_id").agg(
-            _micro(F.max("count") / F.sum("count")).alias(out_col)
-        )
-
-    return (
-        base.select("doc_id", "dup_token_frac_micro")
-        .join(top_frac(2, "top_bigram_frac_micro"), "doc_id", "left")
-        .join(top_frac(3, "top_trigram_frac_micro"), "doc_id", "left")
-        .select(
-            "doc_id",
-            "dup_token_frac_micro",
-            F.coalesce("top_bigram_frac_micro", F.lit(0)).alias(
-                "top_bigram_frac_micro"
-            ),
-            F.coalesce("top_trigram_frac_micro", F.lit(0)).alias(
-                "top_trigram_frac_micro"
-            ),
-        )
-    )
-
-
-def boilerplate_ngrams(documents: DataFrame, n: int = 5, k: int = 20) -> DataFrame:
-    """Corpus-level boilerplate detector: the k word n-grams appearing
-    in the most distinct documents (doc frequency, not occurrences —
-    repeated template text scores by spread, not by within-doc spam).
-    Returns (gram, df) ordered by (df desc, gram asc).
-
-    Scale shape: per-doc distinct n-grams (array_distinct before the
-    explode keeps the shuffle to one row per (doc, gram)), count-
-    distinct-free groupBy with partial aggregation, then global top-k —
-    Spark plans the final ordering as TakeOrderedAndProject, so only k
-    rows ever reach the driver."""
-    toks = tokenize(F.col("text"))
-    grams = documents.select(
-        "doc_id", F.explode(F.array_distinct(_word_ngrams(toks, n))).alias("gram")
-    )
-    return (
-        grams.groupBy("gram")
-        .agg(F.count("doc_id").alias("df"))
-        .orderBy(F.desc("df"), F.asc("gram"))
-        .limit(k)
-    )
-
-
-# ---------------------------------------------------------------------------
 # dedup
 # ---------------------------------------------------------------------------
-
-def exact_duplicates(documents: DataFrame) -> DataFrame:
-    """Exact dedup by content hash: (content_hash, n_docs, keep_doc_id)
-    for groups with n>1; keep = min doc_id (hash-groupBy, one shuffle)."""
-    h = documents.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.md5(F.col("text")).alias("content_hash"),
-    )
-    return (
-        h.groupBy("content_hash")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("keep_doc_id"))
-        .where(F.col("n_docs") > 1)
-    )
-
 
 def word_shingles(col: Column, n: int = 3) -> Column:
     """Distinct word n-grams (joined by single spaces)."""
@@ -407,95 +179,12 @@ def dedup_keep_list(documents: DataFrame, threshold: float = 0.5) -> DataFrame:
     )
 
 
-SIMHASH_BITS = 16  # oracle-checkable md5-hex variant; production would
                    # widen to 64 via xxhash64 (engine-internal only).
-
-
-def _hex_digit_val(c: Column) -> Column:
-    return F.conv(c, 16, 10).cast("int")
-
-
-def simhash(documents: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
-    """SimHash over word tokens with md5-derived bit signs, pure column
-    algebra: bit j = hex digit j//4 of md5(token), bit (3 - j%4).
-    signed sum over tokens (+1/-1), sign → bit of the signature."""
-    toks = tokenize(F.col("text"))
-    bit_cols = []
-    for j in range(bits):
-        digit_idx = j // 4 + 1  # 1-based substr position in md5 hex
-        bit_in_digit = 3 - (j % 4)
-        contrib = F.aggregate(
-            toks,
-            F.lit(0),
-            lambda acc, t: acc
-            + F.when(
-                F.shiftright(
-                    _hex_digit_val(F.substring(F.md5(t), digit_idx, 1)),
-                    bit_in_digit,
-                ).bitwiseAND(F.lit(1))
-                == 1,
-                F.lit(1),
-            ).otherwise(F.lit(-1)),
-        )
-        bit_cols.append(
-            F.when(contrib > 0, F.lit(1 << (bits - 1 - j))).otherwise(F.lit(0))
-        )
-    sig = bit_cols[0]
-    for c in bit_cols[1:]:
-        sig = sig + c
-    return documents.select("doc_id", sig.cast("long").alias("simhash"))
-
-
-def fingerprint(documents: DataFrame, n: int = 3, mod: int = 8) -> DataFrame:
-    """Mod-p sampled n-gram fingerprint (winnowing-lite): keep shingle
-    hashes ≡ 0 (mod `mod`); emit count + min sampled hash as the doc
-    signature."""
-    sh = word_shingles(F.col("text"), n)
-    hashes = F.transform(sh, lambda s: _md5_u32(s))
-    sampled = F.filter(hashes, lambda h: h % mod == 0)
-    return documents.select(
-        "doc_id",
-        F.size(sampled).cast("long").alias("n_sampled"),
-        F.array_min(sampled).alias("min_hash"),
-    )
 
 
 # ---------------------------------------------------------------------------
 # similarity search over embeddings
 # ---------------------------------------------------------------------------
-
-def brute_force_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
-    """Exact cosine top-k per query: broadcast queries × embeddings,
-    window top-k. The baseline every ANN variant is measured against."""
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("qv")
-        )
-    )
-    scored = embeddings.crossJoin(q).select(
-        "query_id",
-        F.col(id_col).alias("id"),
-        F.round(
-            dot(F.col(vec_col), F.col("qv"))
-            / (l2_norm(F.col(vec_col)) * l2_norm(F.col("qv"))),
-            6,
-        ).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), "id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "id", "score", "rank")
-    )
-
 
 def _hyperplane_tables(vc: Column, planes) -> Column:
     """array<struct<t, bucket>> of per-table sign-bit hyperplane
@@ -650,8 +339,7 @@ def embedding_near_duplicates(
     seed: int = 42,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate PAIRS, bucketed — the embedding
-    modality of the dedup family (exact / MinHash-Jaccard / SimHash /
-    fingerprint live above).
+    modality of the dedup family (MinHash-Jaccard lives above).
 
     Scale shape: multi-table random-hyperplane blocking (OR-
     amplification: a pair is a candidate if it collides in ANY of
@@ -710,188 +398,11 @@ def embedding_near_duplicates(
     return scored.where(F.col("score") >= threshold)
 
 
-def md5_sample_centroids(
-    embeddings: DataFrame,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """Deterministic SAMPLE quantizer for IVF: the ``n_centroids``
-    corpus vectors with the smallest ``md5(id)`` become the centroids,
-    indexed in hash order. A uniform sample is a legitimate coarse
-    quantizer (k-means merely rebalances it), and md5 of the decimal id
-    string is reproducible in any engine — the same move
-    :func:`md5_planes` makes for hyperplane LSH — so the approximate
-    IVF path can be fully value-oracled in another engine. ``train_ivf_centroids`` below stays the
-    default library quantizer (better bucket balance); this one exists
-    for cross-engine verification and as the zero-training fallback.
-    Bounded driver pull: TakeOrdered of n_centroids rows, no full sort."""
-    rows = (
-        embeddings.select(
-            F.col(id_col).cast("string").alias("sid"), F.col(vec_col).alias("v")
-        )
-        .orderBy(F.md5(F.col("sid")), "sid")
-        .limit(n_centroids)
-        .collect()
-    )
-    return [[float(x) for x in r["v"]] for r in rows]
-
-
-def train_ivf_centroids(
-    embeddings: DataFrame,
-    n_centroids: int = 16,
-    n_iters: int = 5,
-    sample_cap: int = 10_000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-):
-    """Coarse quantizer for IVF: a few Lloyd iterations over a bounded,
-    deterministic sample (at 100 TB you train the quantizer on a sample
-    regardless; the cap bounds driver memory). The sample is HASH-ordered
-    — take the sample_cap smallest xxhash64(id) rows — which is as
-    deterministic as an ordered-id head but uniform over the corpus
-    (an id-ordered head is whatever the id assignment correlates with:
-    time, source, shard). TakeOrdered top-k, no full sort."""
-    import numpy as np
-
-    rows = (
-        embeddings.select(id_col, vec_col)
-        .orderBy(F.xxhash64(F.col(id_col).cast("string")), id_col)
-        .limit(sample_cap)
-        .collect()
-    )
-    x = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
-    rng = np.random.RandomState(seed)
-    cents = x[rng.choice(len(x), size=min(n_centroids, len(x)), replace=False)]
-    for _ in range(n_iters):
-        d = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-        assign = d.argmin(axis=1)
-        for c in range(len(cents)):
-            m = x[assign == c]
-            if len(m):
-                cents[c] = m.mean(axis=0)
-    return [c for c in cents]
-
-
-def _assign_centroids(
-    df: DataFrame, centroids, vec_col: str, out_col: str, top: int = 1
-) -> DataFrame:
-    """Nearest-centroid assignment as a broadcast join + per-row argmin
-    window — linear in |df| × n_centroids, never corpus × corpus."""
-    spark = df.sparkSession
-    cdf = F.broadcast(
-        spark.createDataFrame(
-            [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-            "centroid int, cvec array<double>",
-        )
-    )
-    vc = F.col(vec_col)
-    dist = F.aggregate(
-        F.zip_with(vc, F.col("cvec"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    scored = df.crossJoin(cdf).withColumn("_dist", dist)
-    w = Window.partitionBy(*df.columns).orderBy("_dist", "centroid")
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") <= top)
-        .withColumnRenamed("centroid", out_col)
-        .drop("cvec", "_dist", "_rk")
-    )
-
-
-def ivf_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    centroids=None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF (inverted-file) ANN — the second scale path next to
-    hyperplane LSH: a coarse k-means quantizer buckets the corpus by
-    nearest centroid; each query probes only its ``n_probe`` nearest
-    centroids' buckets, then scores exactly inside them. Candidates =
-    corpus rows in probed buckets (≈ n_probe/n_centroids of the data),
-    never an all-pairs cross join. Deterministic given the seeded
-    quantizer. Returns (query_id, id, score, rank), cosine-scored."""
-    centroids = centroids if centroids is not None else train_ivf_centroids(
-        embeddings, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col
-    )
-    emb_b = _assign_centroids(
-        embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")),
-        centroids, "v", "bucket", top=1,
-    )
-    q_b = _assign_centroids(
-        queries.select("query_id", F.col("query_vec").alias("qv")),
-        centroids, "qv", "bucket", top=n_probe,
-    )
-    scored = emb_b.join(F.broadcast(q_b), "bucket").select(
-        "query_id",
-        "id",
-        F.round(
-            dot(F.col("v"), F.col("qv")) / (l2_norm(F.col("v")) * l2_norm(F.col("qv"))),
-            6,
-        ).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), "id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "id", "score", "rank")
-    )
-
-
 # ---------------------------------------------------------------------------
-# corpus curation: decontamination, deterministic splits, sequence
-# packing, PII scrubbing — the remaining table-stakes ops of a
-# training-data pipeline (beyond dedup/quality above)
+# corpus curation: deterministic splits, sequence packing, PII
+# scrubbing, sampling — the table-stakes ops of a training-data
+# pipeline beyond dedup
 # ---------------------------------------------------------------------------
-
-
-def decontaminate(
-    documents: DataFrame, eval_docs: DataFrame, n: int = 4
-) -> DataFrame:
-    """Benchmark decontamination: flag training documents sharing any
-    word ``n``-gram with the held-out eval set (the standard exact
-    n-gram overlap test used before pretraining). Shape at scale:
-    explode DISTINCT n-grams on both sides, hash semi-join on the gram
-    (AQE broadcasts the eval side when it is small — the usual case:
-    eval benchmarks are tiny next to a 100 TB corpus), then one
-    groupBy(doc_id) count. Never doc×doc.
-
-    Returns (doc_id, n_shared_ngrams, contaminated) for every training
-    doc."""
-
-    def _grams(df: DataFrame) -> DataFrame:
-        toks = tokenize(F.col("text"))
-        return df.select(
-            "doc_id",
-            F.explode(F.array_distinct(_word_ngrams(toks, n))).alias("gram"),
-        )
-
-    eval_grams = _grams(eval_docs).select("gram").dropDuplicates()
-    hits = (
-        _grams(documents)
-        .join(eval_grams, "gram", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_shared_ngrams"))
-    )
-    return (
-        documents.select("doc_id")
-        .join(hits, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_shared_ngrams", F.lit(0)).cast("long").alias(
-                "n_shared_ngrams"
-            ),
-        )
-        .withColumn("contaminated", F.col("n_shared_ngrams") > 0)
-    )
 
 
 def hash_split(
@@ -908,22 +419,6 @@ def hash_split(
     # (_split_expr's otherwise), shared with leakage_safe_split
     return documents.withColumn(
         "split", _split_expr(F.col("doc_id"), boundaries)
-    )
-
-
-def split_summary(documents: DataFrame) -> DataFrame:
-    """Per (split, lang) doc and token counts over the hash split —
-    the budget sheet a data-mixture plan reads. One partial-aggregated
-    groupBy."""
-    toks = tokenize(F.col("text"))
-    return (
-        hash_split(documents)
-        .select("split", "lang", F.size(toks).cast("long").alias("n"))
-        .groupBy("split", "lang")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("n").cast("long").alias("n_tokens"),
-        )
     )
 
 
@@ -1018,7 +513,7 @@ def mixture_sample(
     reproducible, partition-invariant, and resumable — re-running any
     shard of a 100 TB job re-draws identical decisions. Copies emit as
     (doc_id, lang, copy) via a guarded sequence explode (sequence(1,0)
-    is DESCENDING in Spark, never empty — see _word_ngrams).
+    is DESCENDING in Spark, never empty).
     """
     if not weights:
         return documents.select(
@@ -1046,24 +541,6 @@ def mixture_sample(
     )
 
 
-def _token_lines(toks: Column, line_words: int) -> Column:
-    """array<string> of fixed ``line_words``-token windows — the
-    corpus "line" notion shared by line_dedup and c4_filters (the
-    synthetic corpus has no newlines; real corpora split on newline
-    and the downstream machinery is identical). One definition so the
-    two ops can never diverge on what a line is."""
-    n_lines = F.ceil(F.size(toks) / F.lit(line_words)).cast("int")
-    return F.when(
-        F.size(toks) > 0,
-        F.transform(
-            F.sequence(F.lit(0), n_lines - 1),
-            lambda i: F.array_join(
-                F.slice(toks, i * line_words + 1, line_words), " "
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def line_dedup(documents: DataFrame, line_words: int = 8) -> DataFrame:
     """CCNet-style corpus-wide exact LINE dedup: every line keeps only
     its FIRST occurrence across the whole corpus (first = smallest
@@ -1082,8 +559,18 @@ def line_dedup(documents: DataFrame, line_words: int = 8) -> DataFrame:
     bounded at ``line_words`` tokens; the per-doc rebuild aggregates
     (pos, line) structs map-side."""
     toks = tokenize(F.col("text"))
+    n_lines = F.ceil(F.size(toks) / F.lit(line_words)).cast("int")
+    windows = F.when(
+        F.size(toks) > 0,
+        F.transform(
+            F.sequence(F.lit(0), n_lines - 1),
+            lambda i: F.array_join(
+                F.slice(toks, i * line_words + 1, line_words), " "
+            ),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
     lines = F.transform(
-        _token_lines(toks, line_words),
+        windows,
         lambda l, i: F.struct(
             i.cast("long").alias("pos"), l.alias("line")
         ),
@@ -1127,49 +614,6 @@ def line_dedup(documents: DataFrame, line_words: int = 8) -> DataFrame:
             "n_kept",
             "text_clean",
         )
-    )
-
-
-def tfidf_topk_terms(documents: DataFrame, k: int = 5) -> DataFrame:
-    """Per-document top-``k`` TF-IDF terms — the classic keyword /
-    topic-signal extractor a curation pipeline uses for domain
-    clustering and mixture labeling. tf = in-doc count, idf =
-    ln((N+1)/(df+1)) + 1 (smooth; never zero, so single-corpus terms
-    still rank), score rounded to 6, ties broken by term asc. Returns
-    (doc_id, term, score, rank).
-
-    Scale shape: one (doc, term) tf aggregation (map-side combinable)
-    + one term-level df aggregation; the df table joins back on term
-    (AQE broadcasts it when vocab is small, shuffles when not — both
-    equi); the 1-row corpus count is a broadcast cross join; top-k is a
-    per-doc window, never a global sort."""
-    toks = documents.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.explode(tokenize(F.col("text"))).alias("term"),
-    )
-    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    n_docs = documents.select(
-        F.countDistinct(F.col("doc_id")).alias("n_docs")
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("score"), "term")
-    return (
-        tf.join(dfreq, "term")
-        .crossJoin(F.broadcast(n_docs))
-        .withColumn(
-            "score",
-            F.round(
-                F.col("tf")
-                * (
-                    F.log((F.col("n_docs") + 1) / (F.col("df") + 1))
-                    + F.lit(1.0)
-                ),
-                6,
-            ),
-        )
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("doc_id", "term", "score", "rank")
     )
 
 
@@ -1258,90 +702,6 @@ def leakage_safe_split(
     return keyed.withColumn("split", _split_expr(F.col("split_key"), boundaries))
 
 
-def curate(
-    documents: DataFrame,
-    langs: tuple = ("en",),
-    min_quality_micro: int = 500_000,
-    dedup_threshold: float = 0.5,
-    keep_rule: str = "min_id",
-) -> DataFrame:
-    """End-to-end curation decision — raw crawl docs → keep/drop with a
-    reason, as ONE declarative plan (the facade a pipeline user calls;
-    every stage is the already-oracle-checked operator):
-
-    1. ``language``: predicted language (:func:`language_id`) not in
-       ``langs``;
-    2. ``quality``: quality_micro (:func:`quality_score`) below the
-       threshold;
-    3. ``exact_dup``: among filter survivors, not the (lexicographic
-       min) keeper of its content-hash group;
-    4. ``near_dup``: among exact-kept survivors, not the keeper of its
-       near-dup component — ``keep_rule="min_id"`` (default,
-       :func:`dedup_keep_list`) or ``"longest"`` (the RefinedWeb-style
-       quality-aware representative, :func:`dedup_keep_best`).
-
-    Filter → dedup order is the standard pipeline shape: dedup keepers
-    are chosen among docs that already passed the cheap filters, so a
-    cluster's keeper is never a doc the filters would drop. Returns
-    (doc_id, lang_pred, quality_micro, reject_reason, kept); the reason
-    reports the FIRST failing stage.
-    """
-    # language + quality are pure per-row expressions over the same
-    # text, so compute them INLINE on the facade's one corpus scan —
-    # no per-stage re-scan, no doc_id re-join shuffles (the dedup
-    # stages below are the only operators that inherently shuffle)
-    lang_scores, lang_pred = _lang_pred_columns()
-    base = (
-        documents.select(
-            F.col("doc_id").cast("string").alias("doc_id"),
-            "text",
-            _quality_exprs()["quality_micro"].alias("quality_micro"),
-            *lang_scores,
-        )
-        .withColumn("lang_pred", lang_pred)
-        .drop(*[f"score_{l}" for l in sorted(STOPWORDS)])
-        .withColumn("_lang_ok", F.col("lang_pred").isin(list(langs)))
-        .withColumn("_q_ok", F.col("quality_micro") >= min_quality_micro)
-    )
-    flt = base.where(F.col("_lang_ok") & F.col("_q_ok"))
-    eh = flt.select("doc_id", F.md5("text").alias("_h"))
-    ek = eh.groupBy("_h").agg(F.min("doc_id").alias("_ek"))
-    exact = eh.join(ek, "_h").select(
-        "doc_id", (F.col("doc_id") != F.col("_ek")).alias("_exact_dup")
-    )
-    ekept = flt.join(
-        exact.where(~F.col("_exact_dup")).select("doc_id"), "doc_id", "left_semi"
-    )
-    if keep_rule == "min_id":
-        near = dedup_keep_list(ekept, threshold=dedup_threshold).select(
-            "doc_id", (~F.col("is_kept")).alias("_near_dup")
-        )
-    elif keep_rule == "longest":
-        near = dedup_keep_best(ekept, threshold=dedup_threshold).select(
-            "doc_id", (~F.col("is_kept")).alias("_near_dup")
-        )
-    else:
-        raise ValueError(f"keep_rule must be 'min_id' or 'longest', got {keep_rule!r}")
-    out = (
-        base.join(exact, "doc_id", "left")
-        .join(near, "doc_id", "left")
-        .withColumn(
-            "reject_reason",
-            F.when(~F.col("_lang_ok"), F.lit("language"))
-            .when(~F.col("_q_ok"), F.lit("quality"))
-            .when(F.coalesce(F.col("_exact_dup"), F.lit(False)), F.lit("exact_dup"))
-            .when(F.coalesce(F.col("_near_dup"), F.lit(False)), F.lit("near_dup")),
-        )
-    )
-    return out.select(
-        "doc_id",
-        "lang_pred",
-        "quality_micro",
-        "reject_reason",
-        F.col("reject_reason").isNull().alias("kept"),
-    )
-
-
 def duplicate_spans(documents: DataFrame, k: int = 8) -> DataFrame:
     """Exact duplicated-SUBSTRING detection (the suffix-array dedup
     stage of Lee et al. 2022, "Deduplicating Training Data Makes
@@ -1351,7 +711,7 @@ def duplicate_spans(documents: DataFrame, k: int = 8) -> DataFrame:
     anchored regions per document merge (gaps-and-islands) into MAXIMAL
     duplicated spans. Catches partially-copied passages (license
     blurbs, quoted paragraphs, template prose) that doc-level dedup
-    (exact_duplicates / near_duplicates) and fixed-window line_dedup
+    (near_duplicates) and fixed-window line_dedup
     both miss; every emitted span is exactly duplicated at >= k-token
     granularity — no false positives, and false negatives only below k
     tokens. Returns (doc_id, span_start, span_end, n_tokens), token
@@ -1474,80 +834,6 @@ def source_cap(documents: DataFrame, cap: int = 10, n_salts: int = 16) -> DataFr
     )
 
 
-def quantize_embeddings(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Per-vector symmetric int8 scalar quantization:
-    q_i = floor(127 * x_i / max|x| + 0.5) (round-half-up — floor is
-    engine-portable where banker's/HALF_UP rounding is not), scale =
-    max|x| / 127 for dequantization. Returns (vec_id, qvec, scale).
-
-    This is the standard embedding-compression step before
-    corpus-scale similarity work: int8 vectors are 4x smaller than
-    fp32 through every shuffle/broadcast/index, and SYMMETRIC
-    quantization makes the per-vector scales cancel in cosine — so
-    quantized cosine is pure integer arithmetic (exact in doubles up
-    to 2^53, hence no float-summation-order ambiguity at all; the
-    DuckDB oracle reproduces it bit-for-bit). qvec is int here for
-    oracle transparency; a production sink would store tinyint."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    max_abs = F.array_max(F.transform(v, lambda x: F.abs(x)))
-    qv = F.when(
-        max_abs > 0,
-        F.transform(
-            v, lambda x: F.floor(x * 127.0 / max_abs + 0.5).cast("int")
-        ),
-    ).otherwise(F.transform(v, lambda x: F.lit(0)))
-    return embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        qv.alias("qvec"),
-        F.round(
-            F.when(max_abs > 0, max_abs / F.lit(127.0)).otherwise(F.lit(0.0)), 9
-        ).alias("scale"),
-    )
-
-
-def quantized_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
-    """Exact cosine top-k over int8-quantized vectors — the
-    quality/cost trade every 100 TB similarity pipeline makes: the
-    corpus rides shuffles at 1/4 the bytes, and because symmetric
-    per-vector scales cancel, the quantized cosine is an integer dot
-    over integer norms (bit-deterministic in doubles). Same output
-    shape as brute_force_topk; recall vs the fp32 baseline is pinned
-    by pytest."""
-    qe = quantize_embeddings(embeddings, id_col=id_col, vec_col=vec_col)
-    qq = quantize_embeddings(
-        queries, id_col=query_id_col, vec_col=query_vec_col
-    ).select(
-        F.col("vec_id").alias("query_id"), F.col("qvec").alias("q_qvec")
-    )
-    scored = qe.crossJoin(F.broadcast(qq)).select(
-        "query_id",
-        F.col("vec_id").alias("id"),
-        F.round(
-            dot(F.col("qvec"), F.col("q_qvec"))
-            / (l2_norm(F.col("qvec")) * l2_norm(F.col("q_qvec"))),
-            6,
-        ).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), "id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "id", "score", "rank")
-    )
-
-
 def semantic_dedup_keep_list(
     embeddings: DataFrame,
     threshold: float = 0.9,
@@ -1589,527 +875,6 @@ def semantic_dedup_keep_list(
         F.col("component").cast("long").alias("keep_vec_id"),
         (F.col("uuid") == F.col("component")).alias("is_kept"),
     )
-
-
-def lm_perplexity(
-    documents: DataFrame,
-    reference: DataFrame | None = None,
-    alpha: float = 1.0,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """CCNet-style LM-perplexity quality signal (Wenzek et al. 2020,
-    arXiv:1911.00359): train an add-alpha-smoothed bigram language
-    model on ``reference`` (default: the scored corpus itself — the
-    self-scoring configuration), score each document's total and
-    per-bigram negative log-likelihood, and bucket the corpus into
-    CCNet's head/middle/tail perplexity terciles. Returns
-    (doc_id, n_bigrams, nll_micro, ce_micro, ppl_bucket).
-
-    Engine-parity discipline (shared with quality_score/_micro): the
-    only transcendental is ln(p) computed ONCE per distinct LM bigram
-    and immediately floored to integer micro-nats; per-doc scores are
-    then pure BIGINT sums (order-independent), ce_micro is a floored
-    integer-ratio, and the tercile cut is the all-integer comparison
-    3*row_number <= k*count over a (ce_micro, doc_id) ordering — no
-    float ever crosses an aggregation boundary.
-
-    Scale shape: two token-explode aggs (map-side combinable) build the
-    LM; the corpus joins the LM by bigram/context key (both shuffles on
-    high-cardinality keys, skew-safe); V and the corpus count ride
-    broadcast 1-row aggregates. No all-pairs, no window over the raw
-    token stream — the one global window (tercile ranking) is over one
-    row per document. Training on a curated reference (e.g. wiki) and
-    scoring a 100-TB crawl is the intended deployment: the LM tables
-    are reference-sized, broadcastable when small.
-    """
-    ref = documents if reference is None else reference
-
-    def _doc_bigrams(df: DataFrame) -> DataFrame:
-        toks = tokenize(F.col(text_col))
-        return (
-            df.select(
-                F.col(id_col).alias("doc_id"),
-                F.explode_outer(_word_ngrams(toks, 2)).alias("bigram"),
-            )
-            .groupBy("doc_id", "bigram")
-            .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        )
-
-    # --- LM training counts over the reference corpus ---
-    ref_bg = _doc_bigrams(ref).where(F.col("bigram").isNotNull())
-    c2 = ref_bg.groupBy("bigram").agg(F.sum("cnt").alias("c2"))
-    c1 = (
-        c2.withColumn("prev", F.split(F.col("bigram"), " ")[0])
-        .groupBy("prev")
-        .agg(F.sum("c2").alias("c1"))
-    )
-    vocab = (
-        ref.select(F.explode(tokenize(F.col(text_col))).alias("tok"))
-        .agg(F.countDistinct("tok").cast("long").alias("v"))
-    )
-
-    # --- per-distinct-bigram logprob in integer micro-nats ---
-    doc_bg = _doc_bigrams(documents)
-    scored_bg = (
-        doc_bg.where(F.col("bigram").isNotNull())
-        .select("doc_id", "bigram", "cnt",
-                F.split(F.col("bigram"), " ")[0].alias("prev"))
-        .join(c2, "bigram", "left")
-        .join(c1, "prev", "left")
-        .crossJoin(F.broadcast(vocab))
-        .withColumn(
-            "lp_micro",
-            F.floor(
-                F.log(
-                    (F.coalesce(F.col("c2"), F.lit(0)) + F.lit(alpha))
-                    / (F.coalesce(F.col("c1"), F.lit(0))
-                       + F.lit(alpha) * F.col("v"))
-                ) * 1000000
-                + 0.5
-            ).cast("long"),
-        )
-    )
-    per_doc = scored_bg.groupBy("doc_id").agg(
-        F.sum("cnt").cast("long").alias("n_bigrams"),
-        (-F.sum(F.col("cnt") * F.col("lp_micro"))).cast("long").alias("nll_micro"),
-    )
-    # docs with < 2 tokens have no bigrams: emit them with NULL score
-    empties = (
-        doc_bg.groupBy("doc_id")
-        .agg(F.max("bigram").alias("any_bg"))
-        .where(F.col("any_bg").isNull())
-        .select(
-            "doc_id",
-            F.lit(0).cast("long").alias("n_bigrams"),
-            F.lit(None).cast("long").alias("nll_micro"),
-        )
-    )
-    both = per_doc.unionByName(empties).withColumn(
-        "ce_micro",
-        F.when(
-            F.col("n_bigrams") > 0,
-            F.floor(F.col("nll_micro") / F.col("n_bigrams")).cast("long"),
-        ),
-    )
-
-    # --- CCNet terciles over scored docs (all-integer cut) ---
-    flag = F.col("n_bigrams") > 0
-    w = Window.partitionBy(flag).orderBy("ce_micro", "doc_id")
-    wc = Window.partitionBy(flag)
-    return (
-        both.withColumn("rn", F.row_number().over(w))
-        .withColumn("nd", F.count(F.lit(1)).over(wc))
-        .withColumn(
-            "ppl_bucket",
-            F.when(~flag, F.lit(None).cast("string"))
-            .when(F.col("rn") * 3 <= F.col("nd"), F.lit("head"))
-            .when(F.col("rn") * 3 <= F.col("nd") * 2, F.lit("middle"))
-            .otherwise(F.lit("tail")),
-        )
-        .select("doc_id", "n_bigrams", "nll_micro", "ce_micro", "ppl_bucket")
-    )
-
-
-def _cent_df(spark, c):
-    return F.broadcast(
-        spark.createDataFrame(
-            [(cid, vec) for cid, vec in sorted(c.items())],
-            "cid int, cvec array<long>",
-        )
-    )
-
-
-def _sq_dist() -> Column:
-    return F.aggregate(
-        F.zip_with("qvec", "cvec", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
-def _quantized_long(
-    embeddings: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """(vec_id, qvec array<long>) — int8-quantized corpus cast to long
-    and lazily checkpointed, the shared input representation of
-    kmeans_clusters and pq_topk (one definition so the bit-exact
-    cross-engine contract can't drift between them)."""
-    return (
-        quantize_embeddings(embeddings, id_col=id_col, vec_col=vec_col)
-        .select(
-            "vec_id",
-            F.transform("qvec", lambda x: x.cast("long")).alias("qvec"),
-        )
-        .localCheckpoint(eager=False)
-    )
-
-
-def _fit_kmeans(spark, qe: DataFrame, k: int, iters: int) -> dict:
-    """Deterministic integer Lloyd's fit over (vec_id, qvec) →
-    {cid: centroid} — the maximin-seeded trajectory documented on
-    :func:`kmeans_clusters`, factored out so product quantization can
-    fit one codebook per subspace on sliced sub-vectors. Each seeding
-    step and iteration is a bounded corpus pass; centroids live on the
-    driver (k × dim ints)."""
-    dist = _sq_dist()
-    # maximin seeding: one bounded pass per seed
-    first = (
-        qe.select(
-            "vec_id", "qvec", F.md5(F.col("vec_id").cast("string")).alias("h")
-        )
-        .orderBy("h", "vec_id")
-        .limit(1)
-        .collect()[0]
-    )
-    cents = {0: list(first.qvec)}
-    for j in range(1, k):
-        far = (
-            qe.crossJoin(_cent_df(spark, cents))
-            .select("vec_id", "qvec", "cid", dist.alias("dist"))
-            .groupBy("vec_id")
-            .agg(
-                F.min("dist").alias("mind"),
-                F.min(F.struct("dist", "cid", "qvec")).alias("m"),
-            )
-            .orderBy(F.desc("mind"), "vec_id")
-            .limit(1)
-            .collect()[0]
-        )
-        cents[j] = list(far.m.qvec)
-
-    for _ in range(iters):
-        best = (
-            qe.crossJoin(_cent_df(spark, cents))
-            .select("vec_id", "qvec", "cid", dist.alias("dist"))
-            .groupBy("vec_id")
-            .agg(F.min(F.struct("dist", "cid", "qvec")).alias("m"))
-            .select(F.col("m.cid").alias("cid"), F.col("m.qvec").alias("qvec"))
-        )
-        sums = (
-            best.select("cid", F.posexplode("qvec").alias("pos", "val"))
-            .groupBy("cid", "pos")
-            .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("c"))
-            .groupBy("cid")
-            .agg(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("pos", F.floor(F.col("s") / F.col("c")).alias("cv")))
-                    ),
-                    lambda st: st.getField("cv"),
-                ).alias("cvec")
-            )
-            .collect()
-        )
-        for r in sums:  # clusters that emptied keep their old centroid
-            cents[r.cid] = list(r.cvec)
-    return cents
-
-
-def kmeans_clusters(
-    embeddings: DataFrame,
-    k: int = 8,
-    iters: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Deterministic Lloyd's k-means over int8-QUANTIZED embeddings —
-    the corpus-clustering stage SemDeDup (Abbas et al. 2023) and
-    cluster-balanced mixture pipelines run before per-cluster dedup or
-    sampling. Returns the final assignment (vec_id, cluster, dist).
-
-    Exactness contract (what makes a float-free k-means hash-matchable
-    cross-engine): vectors are symmetric-int8 quantized first
-    (:func:`quantize_embeddings`), so every distance is an INTEGER sum
-    of squares (|q| <= 127 keeps it far below 2^53) and every centroid
-    update is floor(integer sum / count) — no float ever crosses an
-    aggregation boundary, so iteration trajectories are bit-identical
-    in any engine. Seeding is deterministic MAXIMIN (farthest-point,
-    the k-means++ limit): seed 0 = lowest md5(vec_id), each next seed
-    maximizes its distance to the nearest chosen seed (ties -> lowest
-    vec_id) — on separated data this places one seed per natural
-    cluster, avoiding the split-one-merge-two local optima random
-    seeding falls into. Ties in assignment break to the lowest
-    centroid id; a cluster that empties keeps its previous centroid.
-
-    Scale shape: classic Spark Lloyd's — centroids are a k-row table
-    collected to the driver each iteration (bounded: k x dim ints) and
-    re-broadcast, so each iteration is ONE corpus pass (broadcast
-    nested-loop against k rows + a posexplode partial-agg groupBy);
-    the quantized corpus is localCheckpointed once and reused across
-    iterations. Maximin seeding costs k-1 additional bounded passes —
-    at 100 TB, run it (or k-means||) over a deterministic hash-bounded
-    sample as train_ivf_centroids does, then Lloyd's over the corpus.
-    Linear in n, no all-pairs anywhere.
-    """
-    qe = _quantized_long(embeddings, id_col=id_col, vec_col=vec_col)
-    spark = embeddings.sparkSession
-    cents = _fit_kmeans(spark, qe, k, iters)
-
-    return (
-        qe.crossJoin(_cent_df(spark, cents))
-        .select("vec_id", "cid", _sq_dist().alias("dist"))
-        .groupBy("vec_id")
-        .agg(F.min(F.struct("dist", "cid")).alias("m"))
-        .select(
-            "vec_id",
-            F.col("m.cid").alias("cluster"),
-            F.col("m.dist").alias("dist"),
-        )
-    )
-
-
-def corpus_profile(
-    documents: DataFrame,
-    quantiles: tuple = (25, 50, 75, 95),
-) -> DataFrame:
-    """Per-source corpus datasheet: doc counts, char volume, language
-    spread, and EXACT length quantiles — the profiling sheet a
-    training-data pipeline publishes alongside every corpus snapshot
-    (the "datasheets for datasets" table; the reference's analogue is
-    its per-group metrics surface, graphiti_core/graphiti.py episode
-    counters).
-
-    Exactness contract: quantile q is the value at 1-based rank
-    floor((n-1)·q/100) + 1 of the per-source ordered lengths (the
-    discrete lower-quantile convention) — pure integer arithmetic, so
-    DuckDB reproduces it bit-for-bit; no interpolation, no floats.
-
-    Scale shape (100 TB): lengths collapse FIRST through
-    groupBy(source, n_chars) — map-side partial aggregation reduces a
-    trillion rows to |sources| × |distinct lengths| before any window;
-    the cumulative-count window then runs over that tiny histogram,
-    never over documents. One shuffle on source (AQE-coalesced), plus
-    one distinct-lang agg joined at |sources| rows. No sort of the
-    corpus, no window over raw rows, no skew hazard (a hot source's
-    histogram is still bounded by its distinct lengths).
-    """
-    hist = documents.groupBy("source", "n_chars").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt")
-    )
-    w_cum = (
-        Window.partitionBy("source")
-        .orderBy("n_chars")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_src = Window.partitionBy("source")
-    cum = F.sum("cnt").over(w_cum)
-    n = F.sum("cnt").over(w_src)
-    ranked = hist.select(
-        "source",
-        "n_chars",
-        "cnt",
-        cum.alias("cum"),
-        n.alias("n_docs"),
-    )
-    q_aggs = [
-        F.min(
-            F.when(
-                # rank = floor((n-1)*q/100) + 1; floor of the double is
-                # exact while (n-1)*q < 2^53 and matches DuckDB's //
-                F.col("cum") >= F.floor((F.col("n_docs") - 1) * q / 100) + 1,
-                F.col("n_chars"),
-            )
-        )
-        .cast("long")
-        .alias(f"p{q}_chars")
-        for q in quantiles
-    ]
-    prof = ranked.withColumn(
-        "cum", F.col("cum").cast("long")
-    ).groupBy("source").agg(
-        F.max("n_docs").cast("long").alias("n_docs"),
-        F.sum(F.col("n_chars") * F.col("cnt")).cast("long").alias("total_chars"),
-        *q_aggs,
-    )
-    langs = documents.groupBy("source").agg(
-        F.countDistinct("lang").cast("long").alias("n_langs")
-    )
-    return prof.join(langs, "source").select(
-        "source", "n_docs", "total_chars", "n_langs",
-        *[f"p{q}_chars" for q in quantiles],
-    )
-
-
-def contamination_overlap(
-    documents: DataFrame,
-    eval_docs: DataFrame,
-    n: int = 4,
-    dirty_threshold_micro: int = 100_000,
-) -> DataFrame:
-    """Graded benchmark-contamination score: for every training doc,
-    the FRACTION of its distinct word n-grams that appear anywhere in
-    the held-out eval set — the thresholded variant (PaLM/Llama-style
-    "dirty if > X% of n-grams overlap") of the boolean
-    :func:`decontaminate` gate. Returns (doc_id, n_grams, n_hit,
-    overlap_micro, bucket) with overlap in exact integer micro-units
-    (1e6·hits DIV grams — Spark DIV = DuckDB //) and bucket ∈
-    {clean, partial, dirty}: dirty at ≥ ``dirty_threshold_micro``,
-    clean at 0.
-
-    Scale shape (100 TB): identical to decontaminate — distinct
-    n-grams exploded on both sides, one hash semi-join on the gram
-    (AQE broadcasts the tiny eval side), one groupBy(doc_id). The
-    denominator (per-doc distinct gram count) is computed WITHOUT a
-    second explode pass: size(array_distinct(...)) is a per-row column
-    expression. Never doc×doc; a doc shorter than ``n`` words scores 0
-    over 0 grams and buckets clean.
-    """
-    toks = tokenize(F.col("text"))
-    grams = F.array_distinct(_word_ngrams(toks, n))
-    base = documents.select(
-        "doc_id", F.size(grams).cast("long").alias("n_grams"), grams.alias("grams")
-    )
-    eval_grams = (
-        eval_docs.select(
-            F.explode(
-                F.array_distinct(_word_ngrams(tokenize(F.col("text")), n))
-            ).alias("gram")
-        )
-        .dropDuplicates()
-    )
-    hits = (
-        base.select("doc_id", F.explode("grams").alias("gram"))
-        .join(eval_grams, "gram", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_hit"))
-    )
-    scored = (
-        base.select("doc_id", F.greatest("n_grams", F.lit(0)).alias("n_grams"))
-        .join(hits, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_grams",
-            F.coalesce("n_hit", F.lit(0)).cast("long").alias("n_hit"),
-        )
-        .withColumn(
-            "overlap_micro",
-            F.when(F.col("n_grams") > 0, F.expr("1000000 * n_hit DIV n_grams"))
-            .otherwise(F.lit(0))
-            .cast("long"),
-        )
-    )
-    return scored.withColumn(
-        "bucket",
-        F.when(F.col("overlap_micro") >= dirty_threshold_micro, F.lit("dirty"))
-        .when(F.col("overlap_micro") > 0, F.lit("partial"))
-        .otherwise(F.lit("clean")),
-    )
-
-
-def dsir_weights(
-    documents: DataFrame,
-    target_docs: DataFrame,
-    n_buckets: int = 1024,
-    alpha: float = 1.0,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """DSIR importance weights (Data Selection via Importance
-    Resampling, Xie et al. 2023, arXiv:2302.03169): score every raw
-    document by log(p_target(doc) / p_raw(doc)) under bag-of-hashed-
-    token unigram models — the standard "select crawl data that looks
-    like the curated target" signal. Returns (doc_id, n_tokens,
-    dsir_micro); resampling/selection composes downstream (rank by
-    dsir_micro, or feed mixture_sample).
-
-    Engine-parity discipline (the lm_perplexity convention): tokens
-    hash into ``n_buckets`` md5 feature buckets; the ONLY
-    transcendental is one ln() per DISTINCT bucket (≤ n_buckets rows,
-    driver-bounded), computed as ln(x/y) of add-alpha-smoothed count
-    products and immediately floored to integer micro-nats; per-doc
-    scores are then pure BIGINT sums of cnt·ratio — order-independent,
-    so DuckDB reproduces them bit-for-bit. Zero-token docs surface
-    with NULL dsir_micro, never silently drop.
-
-    Scale shape (100 TB): both model passes are explode → partial-agg
-    counts (map-side combinable); the per-bucket log-ratio table is
-    ≤ n_buckets rows and BROADCAST into the scoring join, so scoring
-    is one corpus pass with no shuffle beyond the per-doc groupBy.
-    The target corpus is curated-sized by construction.
-    """
-    B = int(n_buckets)
-
-    def _bucketed(df: DataFrame) -> DataFrame:
-        toks = tokenize(F.col(text_col))
-        return df.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode_outer(toks).alias("tok"),
-        ).select(
-            "doc_id",
-            F.when(
-                F.col("tok").isNotNull(),
-                _md5_u32(F.concat(F.lit("dsir|"), F.col("tok"))) % B,
-            ).alias("bucket"),
-        )
-
-    raw = _bucketed(documents)
-    raw_counts = (
-        raw.where(F.col("bucket").isNotNull())
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).cast("long").alias("cr"))
-    )
-    tgt_counts = (
-        _bucketed(target_docs)
-        .where(F.col("bucket").isNotNull())
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).cast("long").alias("ct"))
-    )
-    raw_tot = raw_counts.agg(F.sum("cr").cast("long").alias("tr"))
-    tgt_tot = tgt_counts.agg(F.sum("ct").cast("long").alias("tt"))
-
-    # one ln per DISTINCT bucket, floored to micro-nats immediately:
-    # lr = ln( ((ct+a)·(tr+a·B)) / ((cr+a)·(tt+a·B)) )
-    buckets = (
-        documents.sparkSession.range(B)
-        .select(F.col("id").cast("long").alias("bucket"))
-        .join(raw_counts, "bucket", "left")
-        .join(tgt_counts, "bucket", "left")
-        .crossJoin(F.broadcast(raw_tot))
-        .crossJoin(F.broadcast(tgt_tot))
-        .select(
-            "bucket",
-            F.floor(
-                F.log(
-                    (
-                        (F.coalesce(F.col("ct"), F.lit(0)) + F.lit(alpha))
-                        * (F.coalesce(F.col("tr"), F.lit(0)) + F.lit(alpha) * B)
-                    )
-                    / (
-                        (F.coalesce(F.col("cr"), F.lit(0)) + F.lit(alpha))
-                        * (F.coalesce(F.col("tt"), F.lit(0)) + F.lit(alpha) * B)
-                    )
-                )
-                * 1000000
-                + 0.5
-            )
-            .cast("long")
-            .alias("lr_micro"),
-        )
-    )
-
-    per_doc_bucket = (
-        raw.where(F.col("bucket").isNotNull())
-        .groupBy("doc_id", "bucket")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .join(F.broadcast(buckets), "bucket")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("cnt").cast("long").alias("n_tokens"),
-            F.sum(F.col("cnt") * F.col("lr_micro")).cast("long").alias("dsir_micro"),
-        )
-    )
-    empties = (
-        raw.groupBy("doc_id")
-        .agg(F.max("bucket").alias("any_b"))
-        .where(F.col("any_b").isNull())
-        .select(
-            "doc_id",
-            F.lit(0).cast("long").alias("n_tokens"),
-            F.lit(None).cast("long").alias("dsir_micro"),
-        )
-    )
-    return per_doc_bucket.unionByName(empties)
 
 
 def kmv_distinct(
@@ -2177,8 +942,6 @@ def token_cardinality(documents: DataFrame, k: int = 128) -> DataFrame:
     """(source, n_kept, kth_hash, est_distinct) — per-source distinct
     vocabulary estimate: :func:`kmv_distinct` over the tokenized
     corpus. The driver-facing instantiation of the KMV sketch."""
-    from .search import tokenize
-
     toks = documents.select(
         "source", F.explode(tokenize(F.col("text"))).alias("token")
     )
@@ -2314,385 +1077,6 @@ def containment_pairs(
     )
 
 
-def pq_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    m: int = 4,
-    k_codes: int = 8,
-    iters: int = 2,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
-    """(query_id, id, score, rank) — product-quantization cosine top-k
-    via ADC lookup tables (Jégou et al. 2011, "Product Quantization
-    for Nearest Neighbor Search"): the int8-quantized corpus is split
-    into ``m`` subspaces, each fitted with its own ``k_codes``-centroid
-    codebook (the SAME deterministic integer k-means as
-    :func:`kmeans_clusters`, via :func:`_fit_kmeans`), every vector is
-    stored as m code bytes, and each query scores the corpus through
-    per-subspace dot-product lookup tables against the RECONSTRUCTED
-    vectors — cosine(q, recon(x)) with recon(x) = concat of x's
-    codewords. The third compression point on this engine's
-    size/recall curve: int8 (4×, exact) → PQ (m bytes/vector, ~32× at
-    these shapes, approximate) → and LSH/IVF for candidate pruning.
-
-    Exactness contract: codebook fitting, code assignment, and every
-    ADC numerator/denominator-squared are INTEGER; the only floats are
-    the final sqrt/division, computed identically from identical
-    integers in any engine and rounded to 6 places — so the DuckDB
-    oracle reproduces the full trajectory bit-for-bit (same discipline
-    as kmeans_clusters/quantized_topk). Recall vs the exact quantized
-    ranking is pinned by pytest, not claimed exact.
-
-    Scale shape: fitting is per-subspace bounded passes (driver holds
-    m × k_codes × (dim/m) ints); code assignment is ONE corpus pass
-    against a broadcast (m·k_codes)-row codeword table with a
-    map-side partial min per (vector, subspace); scoring joins the
-    corpus CODES (m small ints per vector — the vectors themselves
-    never ride this join) against a broadcast per-query lookup table
-    and partial-aggregates before the one shuffle. At 100 TB the ADC
-    join moves ~m bytes per vector instead of the full embedding.
-    """
-    if m < 1:
-        raise ValueError(f"m must be >= 1, got {m}")
-    spark = embeddings.sparkSession
-    dim_row = embeddings.select(F.size(vec_col).alias("d")).limit(1).collect()
-    if not dim_row:
-        return spark.createDataFrame(
-            [], "query_id long, id long, score double, rank int"
-        )
-    dim = dim_row[0].d
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub = dim // m
-
-    qe = _quantized_long(embeddings, id_col=id_col, vec_col=vec_col)
-
-    # one codebook per subspace, fitted on the sliced sub-vectors
-    books = {}
-    for j in range(m):
-        sub_qe = qe.select(
-            "vec_id", F.slice("qvec", j * sub + 1, sub).alias("qvec")
-        ).localCheckpoint(eager=False)
-        books[j] = _fit_kmeans(spark, sub_qe, k_codes, iters)
-
-    cent_rows = [
-        (j, cid, vec)
-        for j in range(m)
-        for cid, vec in sorted(books[j].items())
-    ]
-    cdf = F.broadcast(
-        spark.createDataFrame(cent_rows, "sub int, cid int, cvec array<long>")
-    )
-
-    # code assignment: explode each vector ONCE into its m sub-vectors
-    # (total bytes = one copy of the corpus), then broadcast-join the
-    # codeword table on `sub` — each sub-vector fans out k_codes times
-    # instead of the full vector riding an m·k_codes nested loop
-    sub_rows = qe.select(
-        "vec_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda j: F.slice("qvec", j * sub + 1, sub),
-            )
-        ).alias("sub", "subvec"),
-    )
-    sub_dist = F.aggregate(
-        F.zip_with("subvec", "cvec", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    codes = (
-        sub_rows.join(cdf, "sub")
-        .select("vec_id", "sub", "cid", sub_dist.alias("dist"))
-        .groupBy("vec_id", "sub")
-        .agg(F.min(F.struct("dist", "cid")).alias("mn"))
-        .select("vec_id", "sub", F.col("mn.cid").alias("cid"))
-    )
-
-    # per-query ADC tables: dot(query sub-vector, codeword) and the
-    # codeword's squared norm — (#queries · m · k_codes) rows, broadcast
-    qq = quantize_embeddings(
-        queries, id_col=query_id_col, vec_col=query_vec_col
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.transform("qvec", lambda x: x.cast("long")).alias("q_qvec"),
-    )
-    qdot = F.aggregate(
-        F.zip_with(
-            F.slice("q_qvec", F.col("sub") * sub + 1, sub),
-            F.col("cvec"),
-            lambda a, b: a * b,
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    cnorm2 = F.aggregate(
-        F.col("cvec"), F.lit(0).cast("long"), lambda acc, x: acc + x * x
-    )
-    qnorm2 = F.aggregate(
-        F.col("q_qvec"), F.lit(0).cast("long"), lambda acc, x: acc + x * x
-    )
-    tables = F.broadcast(
-        qq.crossJoin(cdf).select(
-            "query_id",
-            "sub",
-            "cid",
-            qdot.alias("dotv"),
-            cnorm2.alias("cn2"),
-            qnorm2.alias("qn2"),
-        )
-    )
-
-    scored = (
-        codes.join(tables, ["sub", "cid"])
-        .groupBy("query_id", "vec_id")
-        .agg(
-            F.sum("dotv").alias("num"),
-            F.sum("cn2").alias("rn2"),
-            F.max("qn2").alias("qn2"),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("id"),
-            # both norms floor at 1: an all-zero query/reconstruction
-            # scores 0 everywhere instead of ANSI-crashing on /0 (and
-            # the oracle computes the identical guarded expression)
-            F.round(
-                F.col("num")
-                / (
-                    F.sqrt(F.greatest(F.col("qn2"), F.lit(1)))
-                    * F.sqrt(F.greatest(F.col("rn2"), F.lit(1)))
-                ),
-                6,
-            ).alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), "id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "id", "score", "rank")
-    )
-
-
-# 2^0 .. 2^31 as a literal array: bit b of a 32-bit word is set by
-# ADDING pow2[b] (no shiftleft-by-column in either engine's safe
-# range; 32 bits per BIGINT word keeps every value positive and
-# two's-complement-free cross-engine)
-_POW2_32 = [1 << b for b in range(32)]
-_BITS_PER_WORD = 32
-
-
-def binary_quantize(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(vec_id, bvec array<long>, n_dims) — 1-bit sign quantization:
-    bit i of the packed words is set iff dimension i > 0. 32 bits per
-    BIGINT word (dim 64 → 2 words) — a 32× compression of float32
-    vectors, the coarsest tier of the compression family
-    (quantize_embeddings int8 4×, pq_topk m-byte codes).
-
-    Sign bits of mean-centered embeddings preserve angular
-    neighborhoods (Charikar 2002 SimHash random-hyperplane bound with
-    the identity basis); the recall pytest pins the quality floor on
-    the fixture embeddings. Pure column algebra — packs inside the
-    scan, no shuffle, no Python.
-    """
-    emb = F.col(vec_col)
-    pow2 = F.array(*[F.lit(p).cast("long") for p in _POW2_32])
-    n = F.size(emb)
-    n_words = F.ceil(n / F.lit(_BITS_PER_WORD)).cast("int")
-    words = F.transform(
-        F.sequence(F.lit(0), n_words - 1),
-        lambda w: F.aggregate(
-            F.sequence(F.lit(0), F.lit(_BITS_PER_WORD - 1)),
-            F.lit(0).cast("long"),
-            lambda acc, b: acc
-            + F.when(
-                (w * _BITS_PER_WORD + b < n)
-                & (F.element_at(emb, (w * _BITS_PER_WORD + b + 1).cast("int")) > 0),
-                F.element_at(pow2, b + 1),
-            ).otherwise(F.lit(0).cast("long")),
-        ),
-    )
-    return embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        words.alias("bvec"),
-        n.cast("int").alias("n_dims"),
-    )
-
-
-def hamming_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(query_id, id, hamming, rank) — exact top-k by Hamming distance
-    over the 1-bit quantized corpus: xor + popcount per 32-bit word,
-    integer arithmetic end to end, so the DuckDB oracle hash-matches
-    bit-for-bit (no float scores anywhere). Ties break on id.
-
-    Scale shape: corpus packs once (map-only), the broadcast query
-    set joins every row (the brute-force baseline, same contract as
-    cosine_topk — the ANN paths are the scale answer; at 32× smaller
-    vectors this baseline's shuffle/broadcast bytes are 32× cheaper
-    than the float version's). One TakeOrdered-style window per query.
-    """
-    corpus_q = binary_quantize(embeddings, id_col, vec_col)
-    qs = F.broadcast(
-        binary_quantize(queries, id_col, vec_col).select(
-            F.col("vec_id").alias("query_id"), F.col("bvec").alias("qvec")
-        )
-    )
-    dist = F.aggregate(
-        F.zip_with(
-            F.col("bvec"), F.col("qvec"),
-            lambda a, b: F.bit_count(a.bitwiseXOR(b)).cast("long"),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    scored = corpus_q.crossJoin(qs).select(
-        "query_id", F.col("vec_id").alias("id"), dist.alias("hamming")
-    )
-    w = Window.partitionBy("query_id").orderBy("hamming", "id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "id", "hamming", F.col("rank").cast("int").alias("rank"))
-    )
-
-
-def hamming_prefilter_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    candidates: int = 100,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(query_id, id, score, rank) — the production binary-ANN shape:
-    Hamming top-``candidates`` over the 32×-compressed sign bits
-    prefilters the corpus, then exact double-precision cosine rescores
-    ONLY those candidates (final top-k ⊆ candidates, so end-to-end
-    recall equals candidate recall). Measured on the 64-dim fixture
-    embeddings vs exact cosine top-10: candidate recall 0.53 / 0.71 /
-    0.88 at candidates = 25 / 50 / 100 (pinned in
-    tests/test_properties.py) — sign bits are a coarse 64-bit code, so
-    this tier is for CANDIDATE GENERATION; int8 (quantized_topk) and
-    PQ (pq_topk) are the precision tiers.
-
-    Scale shape: the Hamming stage moves 8 bytes/vector/word through
-    the broadcast-join + per-query window; the rescore joins the
-    candidate ids (k × candidates rows) back to the float vectors by
-    id — the full-precision vectors never fan out past the candidate
-    set.
-    """
-    cand = hamming_topk(embeddings, queries, k=candidates, id_col=id_col,
-                        vec_col=vec_col)
-    qv = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        )
-    )
-    vecs = embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("cv"))
-    scored = (
-        cand.select("query_id", "id")
-        .join(vecs, "id")
-        .join(qv, "query_id")
-        .select(
-            "query_id",
-            "id",
-            F.round(
-                dot(F.col("cv"), F.col("qv"))
-                / (l2_norm(F.col("cv")) * l2_norm(F.col("qv"))),
-                6,
-            ).alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), "id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "id", "score", F.col("rank").cast("int").alias("rank"))
-    )
-
-
-# C4's doc-level policy substrings (Raffel et al. 2020, §2.2 "Colossal
-# Clean Crawled Corpus" heuristics) — the default banned list
-C4_BANNED = ["lorem ipsum", "javascript"]
-
-
-def c4_filters(
-    documents: DataFrame,
-    line_words: int = 8,
-    min_words_per_line: int = 5,
-    min_lines: int = 2,
-    require_terminal_punct: bool = False,
-    banned: list[str] | None = None,
-) -> DataFrame:
-    """(doc_id, n_lines, n_kept_lines, has_brace, has_banned, keep,
-    reason) — the C4 heuristic filter set (Raffel et al. 2020) as pure
-    column algebra: per-line retention (≥ ``min_words_per_line`` words,
-    optionally a terminal-punctuation requirement) plus doc-level
-    drops (curly brace = code artifact; policy substrings like "lorem
-    ipsum"; fewer than ``min_lines`` retained lines). ``reason`` is
-    the FIRST failing rule (brace → banned → too_few_lines → kept),
-    the same reason-code discipline as ``curate``.
-
-    The synthetic corpus has no newlines, so a "line" is the same
-    fixed ``line_words``-token window ``line_dedup`` uses (real
-    corpora split on newline; the rule machinery is identical — C4's
-    "≥ 3 sentences" maps to ``min_lines``).
-
-    Scale shape: ZERO shuffle — line windows, per-line predicates, and
-    the counts are array algebra inside the scan Project (no explode);
-    the filter runs at read bandwidth at any corpus size.
-    """
-    banned = C4_BANNED if banned is None else banned
-    toks = tokenize(F.col("text"))
-    n_lines = F.ceil(F.size(toks) / F.lit(line_words)).cast("int")
-    lines = _token_lines(toks, line_words)
-
-    def line_ok(line):
-        ok = F.size(F.split(line, " ")) >= min_words_per_line
-        if require_terminal_punct:
-            ok = ok & line.rlike('[.!?"]$')
-        return ok
-
-    kept = F.size(F.filter(lines, line_ok))
-    low = F.lower(F.col("text"))
-    has_banned = F.lit(False)
-    for b in banned:
-        has_banned = has_banned | low.contains(b.lower())
-    has_brace = low.contains("{")
-    keep = ~has_brace & ~has_banned & (kept >= min_lines)
-    reason = (
-        F.when(has_brace, F.lit("brace"))
-        .when(has_banned, F.lit("banned"))
-        .when(kept < min_lines, F.lit("too_few_lines"))
-        .otherwise(F.lit("kept"))
-    )
-    return documents.select(
-        "doc_id",
-        F.when(F.size(toks) > 0, n_lines).otherwise(F.lit(0)).cast("long").alias("n_lines"),
-        kept.cast("long").alias("n_kept_lines"),
-        has_brace.alias("has_brace"),
-        has_banned.alias("has_banned"),
-        keep.alias("keep"),
-        reason.alias("reason"),
-    )
-
-
 def stratified_sample(
     documents: DataFrame,
     n_per_stratum: int,
@@ -2724,125 +1108,3 @@ def stratified_sample(
         .select(*cols, id_col, (F.col("_rk")).cast("long").alias("draw_rank"))
     )
 
-
-def gopher_rules(
-    documents: DataFrame,
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len_micro: int = 3_000_000,
-    max_mean_word_len_micro: int = 10_000_000,
-    max_symbol_ratio_micro: int = 100_000,
-    max_bullet_frac_micro: int = 900_000,
-    max_ellipsis_frac_micro: int = 300_000,
-    min_alpha_frac_micro: int = 800_000,
-    min_required_stops: int = 2,
-) -> DataFrame:
-    """(doc_id, n_words, mean_word_len_micro, symbol_ratio_micro,
-    bullet_frac_micro, ellipsis_frac_micro, alpha_frac_micro,
-    n_required_stops, keep) — the Gopher document-quality rule set
-    (Rae et al. 2021, arXiv:2112.11446 Appendix A), the standard
-    heuristic gate Gopher/MassiveText-style pipelines apply before
-    dedup: word-count band, mean-word-length band, symbol-to-word
-    ratio (# and ellipsis), bullet-started and ellipsis-ended line
-    fractions, fraction of words with an alphabetic character, and
-    the ≥2-of-8 required-stop-word test. Complements
-    :func:`c4_filters` (the other canonical rule set) — both are
-    whole-document verdicts with per-rule evidence columns.
-
-    Every metric is an integer micro-unit via ``DIV`` (never a
-    float), so a DuckDB re-implementation is bit-exact. Whitespace words, like the paper (not the fulltext
-    tokenizer — '#' and '...' must stay attached for the symbol
-    counts).
-
-    Scale shape: pure column algebra in the scan — zero shuffles,
-    zero Python; the whole rule set is one whole-stage-codegen
-    projection over the corpus.
-    """
-    # explicit whitespace class, NOT \s: Java regex \s includes
-    # vertical tab where RE2 (the DuckDB oracle's engine) does not —
-    # the explicit class is identical in both
-    words = F.filter(
-        F.split(F.col("text"), "[ \t\n\x0b\f\r]+"), lambda w: w != ""
-    )
-    words_l = F.transform(words, F.lower)
-    lines = F.filter(
-        F.split(F.col("text"), r"\n"), lambda x: F.trim(x) != ""
-    )
-    txt = F.col("text")
-    n_hash = F.length(txt) - F.length(F.replace(txt, F.lit("#"), F.lit("")))
-    n_ell = (
-        (F.length(txt) - F.length(F.replace(txt, F.lit("..."), F.lit("")))) / 3
-        + (F.length(txt) - F.length(F.replace(txt, F.lit("…"), F.lit(""))))
-    ).cast("long")
-    req = ["and", "be", "have", "of", "that", "the", "to", "with"]
-    counts = documents.select(
-        "doc_id",
-        F.size(words).cast("long").alias("n_words"),
-        F.aggregate(
-            F.transform(words, F.length), F.lit(0), lambda a, x: a + x
-        ).cast("long").alias("_sum_len"),
-        (n_hash.cast("long") + n_ell).alias("_n_sym"),
-        F.size(lines).cast("long").alias("_n_lines"),
-        F.size(
-            F.filter(
-                lines,
-                lambda x: F.ltrim(x).startswith("-")
-                | F.ltrim(x).startswith("*")
-                | F.ltrim(x).startswith("•"),
-            )
-        ).cast("long").alias("_n_bullet"),
-        F.size(
-            F.filter(
-                lines,
-                lambda x: F.rtrim(x).endswith("...")
-                | F.rtrim(x).endswith("…"),
-            )
-        ).cast("long").alias("_n_ell_line"),
-        F.size(
-            F.filter(words, lambda w: w.rlike("[A-Za-z]"))
-        ).cast("long").alias("_n_alpha"),
-        sum(
-            [
-                F.when(F.array_contains(words_l, w), 1).otherwise(0)
-                for w in req
-            ],
-            F.lit(0),
-        ).cast("long").alias("n_required_stops"),
-    )
-    micro = counts.select(
-        "doc_id",
-        "n_words",
-        F.expr(
-            "CASE WHEN n_words > 0 THEN 1000000 * _sum_len DIV n_words "
-            "ELSE 0 END"
-        ).cast("long").alias("mean_word_len_micro"),
-        F.expr(
-            "CASE WHEN n_words > 0 THEN 1000000 * _n_sym DIV n_words "
-            "ELSE 0 END"
-        ).cast("long").alias("symbol_ratio_micro"),
-        F.expr(
-            "CASE WHEN _n_lines > 0 THEN 1000000 * _n_bullet DIV _n_lines "
-            "ELSE 0 END"
-        ).cast("long").alias("bullet_frac_micro"),
-        F.expr(
-            "CASE WHEN _n_lines > 0 THEN 1000000 * _n_ell_line DIV _n_lines "
-            "ELSE 0 END"
-        ).cast("long").alias("ellipsis_frac_micro"),
-        F.expr(
-            "CASE WHEN n_words > 0 THEN 1000000 * _n_alpha DIV n_words "
-            "ELSE 0 END"
-        ).cast("long").alias("alpha_frac_micro"),
-        "n_required_stops",
-    )
-    return micro.withColumn(
-        "keep",
-        (F.col("n_words") >= min_words)
-        & (F.col("n_words") <= max_words)
-        & (F.col("mean_word_len_micro") >= min_mean_word_len_micro)
-        & (F.col("mean_word_len_micro") <= max_mean_word_len_micro)
-        & (F.col("symbol_ratio_micro") <= max_symbol_ratio_micro)
-        & (F.col("bullet_frac_micro") <= max_bullet_frac_micro)
-        & (F.col("ellipsis_frac_micro") <= max_ellipsis_frac_micro)
-        & (F.col("alpha_frac_micro") >= min_alpha_frac_micro)
-        & (F.col("n_required_stops") >= min_required_stops),
-    )

@@ -1,9 +1,7 @@
-"""Maintenance / CRUD operators (reference §2.1 S6-S8, §2.6 T6).
+"""Maintenance / CRUD operators (reference §2.1 S6, S8, §2.6 T6).
 
-- S6 point/batch lookups + keyset pagination
-  (graphiti_core/nodes.py:172-288, uuid-desc cursor at :232-253).
-- S7 reverse lookups through MENTIONS
-  (nodes.py:265-288; search_utils.py:84-152).
+- S6 keyset pagination (graphiti_core/nodes.py:232-253, uuid-desc
+  cursor).
 - S8 delete/cascade: remove_episode deletes edges created by the
   episode and entities mentioned ONLY by it (count==1 orphan check,
   graphiti_core/graphiti.py:851-886).
@@ -27,10 +25,6 @@ EPISODE_WINDOW_LEN = 3       # graph_data_operations.py:27
 RELEVANT_SCHEMA_LIMIT = 10   # search_utils.py:57
 
 
-def get_by_uuids(df: DataFrame, uuids: list[str], uuid_col: str = "uuid") -> DataFrame:
-    return df.where(F.col(uuid_col).isin(uuids))
-
-
 def get_by_group_ids(
     df: DataFrame,
     group_ids: list[str],
@@ -47,21 +41,6 @@ def get_by_group_ids(
     if limit is not None:
         out = out.limit(limit)
     return out
-
-
-def episodes_by_entity(mentions: DataFrame, episodes: DataFrame, entity_uuid: str) -> DataFrame:
-    """S7: episodes mentioning an entity (nodes.py:265-288)."""
-    eps = mentions.where(F.col("entity_uuid") == entity_uuid).select("doc_id")
-    return episodes.join(eps.dropDuplicates(), "doc_id")
-
-
-def mentioned_nodes(mentions: DataFrame, nodes: DataFrame, doc_ids: list[str]) -> DataFrame:
-    """S7: entities mentioned by the given episodes
-    (search_utils.py:99-125)."""
-    m = mentions.where(F.col("doc_id").isin(doc_ids)).select(
-        F.col("entity_uuid").alias("uuid")
-    )
-    return nodes.join(m.dropDuplicates(), "uuid")
 
 
 def retrieve_episodes(

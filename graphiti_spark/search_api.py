@@ -268,16 +268,6 @@ class UdfCrossEncoder(CrossEncoder):
         return df.withColumn("score", udf(F.col(text_col)))
 
 
-def _token_overlap_scorer(query: str):
-    """Back-compat shim over TokenOverlapCrossEncoder."""
-    enc = TokenOverlapCrossEncoder()
-
-    def score(df: DataFrame, text_col: str) -> DataFrame:
-        return enc.score(df, text_col, query)
-
-    return score
-
-
 def _run_lane(
     df: DataFrame,
     id_col: str,

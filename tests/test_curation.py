@@ -1,9 +1,9 @@
-"""Corpus-curation operators: decontamination, deterministic splits,
-sequence packing, PII scrubbing (operators/docops.py tail section).
+"""Corpus-curation operators: deterministic splits, sequence packing,
+PII scrubbing, sampling and the dedup family (operators/docops.py).
 
 These tests pin the *semantic invariants* on hand-crafted inputs — the
 properties a 100 TB pipeline relies on (determinism under repartitioning,
-prefix-sum packing with no gaps, exact-overlap detection, redaction
+prefix-sum packing with no gaps, first-occurrence dedup, redaction
 completeness)."""
 
 from __future__ import annotations
@@ -11,7 +11,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from graphiti_spark.operators.docops import (
-    decontaminate,
     mixture_sample,
     hash_split,
     pack_documents,
@@ -21,32 +20,6 @@ from graphiti_spark.operators.docops import (
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_decontaminate_flags_exact_ngram_overlap(spark):
-    train = _docs(
-        spark,
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "completely unrelated corpus text about parquet files"),
-            # shares "quick brown fox jumps" only case/punct-normalized
-            (3, "A Quick, Brown Fox Jumps today"),
-        ],
-    )
-    eval_ = _docs(spark, [(100, "the quick brown fox jumps high")])
-    out = {r.doc_id: r for r in decontaminate(train, eval_, n=4).collect()}
-    assert set(out) == {1, 2, 3}
-    assert out[1].contaminated and out[1].n_shared_ngrams >= 2
-    assert not out[2].contaminated and out[2].n_shared_ngrams == 0
-    # tokenizer lowercases/strips punctuation, so 3 matches too
-    assert out[3].contaminated
-
-
-def test_decontaminate_short_docs_have_no_ngrams(spark):
-    train = _docs(spark, [(1, "too short"), (2, "")])
-    eval_ = _docs(spark, [(9, "too short")])
-    out = {r.doc_id: r.contaminated for r in decontaminate(train, eval_, n=4).collect()}
-    assert out == {1: False, 2: False}
 
 
 def test_hash_split_total_deterministic_and_partition_invariant(spark):
@@ -337,40 +310,6 @@ def test_leakage_safe_split_keeps_clusters_together(spark):
     assert any(raw[a] != raw[b] for a, b in pairs)
 
 
-def test_curate_reason_precedence_and_filter_then_dedup_order(spark):
-    """curate(): reasons report the FIRST failing stage, and dedup
-    keepers are chosen AMONG filter survivors — a cluster whose best
-    member fails the language filter keeps the best SURVIVING member."""
-    from graphiti_spark.operators.docops import curate
-
-    en_pad = "the a and of to " * 4  # strong en signal + quality stopwords
-    body = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    docs = _docs(
-        spark,
-        [
-            (1, f"{en_pad}{body} one"),
-            # exact copy of 1 → exact_dup (keeper = '1')
-            (2, f"{en_pad}{body} one"),
-            # near-twin of 1 → near_dup
-            (3, f"{en_pad}{body} two"),
-            # German near-twin: fails language FIRST even though it is
-            # also a near-dup of 1
-            (4, f"der die das und ist {body} one"),
-            # low quality: repeated token (distinct ratio ~0); one 'the'
-            # keeps the language English so quality is the first failure
-            (5, "the " + "spam " * 40),
-            (6, f"{en_pad}completely different surviving content here"),
-        ],
-    )
-    out = {r.doc_id: r for r in curate(docs, min_quality_micro=400_000).collect()}
-    assert out["1"].kept and out["1"].reject_reason is None
-    assert out["2"].reject_reason == "exact_dup"
-    assert out["3"].reject_reason == "near_dup"
-    assert out["4"].reject_reason == "language"
-    assert out["5"].reject_reason == "quality"
-    assert out["6"].kept
-
-
 def test_chunk_and_line_dedup_conservation_invariants(spark):
     """Global invariants: with overlap=0 the chunks concatenate back to
     the exact token stream (no token lost or duplicated), and line
@@ -526,121 +465,6 @@ def test_source_cap_salt_count_invariance(spark):
         assert got == ref, f"n_salts={n_salts} diverged"
 
 
-def test_corpus_profile_exact_quantiles_vs_bruteforce(spark):
-    """corpus_profile's rank-select quantiles equal the brute-force
-    sorted-list lookup at rank floor((n-1)*q/100), per source, and the
-    sheet is partition-invariant."""
-    import random
-
-    from graphiti_spark.operators.docops import corpus_profile
-
-    rng = random.Random(7)
-    rows = [
-        (i, "x" * rng.randint(1, 50), rng.choice(["en", "fr", "de"]),
-         f"src{i % 3}", 0)
-        for i in range(200)
-    ]
-    rows = [(i, t, lang, src, len(t)) for (i, t, lang, src, _) in rows]
-    docs = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    out = {r.source: r for r in corpus_profile(docs).collect()}
-    by_src = {}
-    for _, _, lang, src, n in rows:
-        by_src.setdefault(src, {"lens": [], "langs": set()})
-        by_src[src]["lens"].append(n)
-        by_src[src]["langs"].add(lang)
-    for src, d in by_src.items():
-        lens = sorted(d["lens"])
-        n = len(lens)
-        r = out[src]
-        assert r.n_docs == n
-        assert r.total_chars == sum(lens)
-        assert r.n_langs == len(d["langs"])
-        for q in (25, 50, 75, 95):
-            assert getattr(r, f"p{q}_chars") == lens[(n - 1) * q // 100], (
-                src, q,
-            )
-
-    again = sorted(map(tuple, corpus_profile(docs.repartition(13)).collect()))
-    assert again == sorted(map(tuple, corpus_profile(docs).collect()))
-
-
-def test_contamination_overlap_fraction_and_buckets(spark):
-    """contamination_overlap: exact micro fractions on a hand-built
-    corpus — a fully-contaminated doc, a half-contaminated doc, a clean
-    doc, and a too-short doc (0 grams → clean, never a divide-by-zero)."""
-    from graphiti_spark.operators.docops import contamination_overlap
-
-    eval_docs = spark.createDataFrame(
-        [(100, "alpha beta gamma delta")], "doc_id long, text string"
-    )
-    train = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma delta"),            # 1 gram, hit → dirty
-            (2, "alpha beta gamma delta epsilon"),    # 2 grams, 1 hit → 500000
-            (3, "zeta eta theta iota kappa"),         # 2 grams, 0 hits → clean
-            (4, "one two"),                           # 0 grams → clean
-        ],
-        "doc_id long, text string",
-    )
-    out = {
-        r.doc_id: r
-        for r in contamination_overlap(train, eval_docs, n=4).collect()
-    }
-    assert (out[1].n_grams, out[1].n_hit, out[1].overlap_micro, out[1].bucket) == (
-        1, 1, 1000000, "dirty",
-    )
-    assert (out[2].n_grams, out[2].n_hit, out[2].overlap_micro, out[2].bucket) == (
-        2, 1, 500000, "dirty",
-    )
-    assert (out[3].overlap_micro, out[3].bucket) == (0, "clean")
-    assert (out[4].n_grams, out[4].overlap_micro, out[4].bucket) == (0, 0, "clean")
-    # partial bucket: below the dirty threshold but nonzero
-    out2 = {
-        r.doc_id: r
-        for r in contamination_overlap(
-            train, eval_docs, n=4, dirty_threshold_micro=600_000
-        ).collect()
-    }
-    assert out2[2].bucket == "partial"
-
-
-def test_dsir_weights_prefers_target_like_docs(spark):
-    """dsir_weights: a doc written in the target's vocabulary must
-    outscore an off-target doc; zero-token docs surface with NULL
-    score; scores are partition-invariant."""
-    from graphiti_spark.operators.docops import dsir_weights
-
-    target = spark.createDataFrame(
-        [(100 + i, "cat kitten purr whiskers feline nap") for i in range(5)],
-        "doc_id long, text string",
-    )
-    raw = spark.createDataFrame(
-        [
-            (1, "cat kitten purr nap feline"),          # on-target
-            (2, "tax invoice ledger quarterly audit"),  # off-target
-            (3, ""),                                    # empty
-        ],
-        "doc_id long, text string",
-    )
-    out = {r.doc_id: r for r in dsir_weights(raw, target, n_buckets=64).collect()}
-    assert set(out) == {1, 2, 3}
-    assert out[1].dsir_micro > out[2].dsir_micro
-    assert out[1].dsir_micro > 0 > out[2].dsir_micro
-    assert out[3].n_tokens == 0 and out[3].dsir_micro is None
-
-    again = {
-        r.doc_id: r
-        for r in dsir_weights(
-            raw.repartition(5), target.repartition(3), n_buckets=64
-        ).collect()
-    }
-    assert {k: (v.n_tokens, v.dsir_micro) for k, v in out.items()} == {
-        k: (v.n_tokens, v.dsir_micro) for k, v in again.items()
-    }
-
-
 def test_dedup_keep_best_prefers_longest(spark):
     """dedup_keep_best keeps the LONGEST doc per near-dup cluster
     (ties → min doc_id), flipping dedup_keep_list's min-id choice when
@@ -759,76 +583,6 @@ def test_containment_empty_text_degenerate(spark):
     assert all(0 < r.containment <= 1 for r in rows)
 
 
-def test_curate_longest_keep_rule(spark):
-    """curate(keep_rule='longest') keeps the longest member of each
-    near-dup cluster; 'min_id' keeps the smallest id; any other value
-    raises."""
-    import pytest
-
-    from graphiti_spark.operators.docops import curate
-
-    base = (
-        "the comprehensive archive of common english words and sentences "
-        "for tests that need realistic looking text with some variety"
-    )
-    docs = spark.createDataFrame(
-        [(1, base), (2, base + " plus an extra informative closing clause")],
-        "doc_id long, text string",
-    )
-    longest = {r.doc_id: r.kept for r in curate(docs, keep_rule="longest").collect()}
-    minid = {r.doc_id: r.kept for r in curate(docs).collect()}
-    assert longest == {"1": False, "2": True}
-    assert minid == {"1": True, "2": False}
-    with pytest.raises(ValueError):
-        curate(docs, keep_rule="best")
-
-
-def test_c4_filters_rules(spark):
-    from graphiti_spark.operators.docops import c4_filters
-
-    docs = spark.createDataFrame(
-        [
-            # 8 good words x2 windows → kept (no brace/banned)
-            (1, "alpha beta gamma delta epsilon zeta eta theta "
-                "iota kappa lam mu nu xi omicron pi"),
-            # code artifact
-            (2, "function foo() { return 1 }"),
-            # policy substring (case-insensitive)
-            (3, "some Lorem Ipsum filler text words here padding more"),
-            # only one full window + 3-word tail → tail line dropped at
-            # min_words_per_line=5, 1 kept < min_lines=2
-            (4, "one two three four five six seven eight nine ten eleven"),
-            (5, ""),  # empty
-        ],
-        "doc_id long, text string",
-    )
-    out = {r.doc_id: r for r in c4_filters(docs).collect()}
-    assert out[1].keep and out[1].reason == "kept"
-    assert out[1].n_lines == 2 and out[1].n_kept_lines == 2
-    assert not out[2].keep and out[2].reason == "brace" and out[2].has_brace
-    assert not out[3].keep and out[3].reason == "banned" and out[3].has_banned
-    assert not out[4].keep and out[4].reason == "too_few_lines"
-    assert out[4].n_lines == 2 and out[4].n_kept_lines == 1
-    assert out[5].n_lines == 0 and not out[5].keep
-
-
-def test_c4_filters_terminal_punct_rule(spark):
-    from graphiti_spark.operators.docops import c4_filters
-
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon.")],
-        "doc_id long, text string",
-    )
-    # tokenize strips punctuation, so with the punct requirement ON the
-    # reconstructed window can never end with '.', and the doc drops —
-    # pins that the flag actually gates (real corpora keep raw lines)
-    strict = c4_filters(
-        docs, min_words_per_line=3, min_lines=1, require_terminal_punct=True
-    ).collect()[0]
-    loose = c4_filters(docs, min_words_per_line=3, min_lines=1).collect()[0]
-    assert not strict.keep and loose.keep
-
-
 def test_stratified_sample_exact_counts_and_determinism(spark):
     from graphiti_spark.operators.docops import stratified_sample
 
@@ -861,35 +615,3 @@ def test_stratified_sample_plan_window_group_limit(spark):
         stratified_sample(docs, 5)._jdf.queryExecution().executedPlan().toString()
     )
     assert "WindowGroupLimit" in plan  # map-side top-n per stratum
-
-
-def test_gopher_rules_each_rule_fires(spark):
-    from graphiti_spark.operators.docops import gopher_rules
-
-    good = "the quick brown fox jumps over " * 10 + "lazy dogs sleep today"
-    rows = [
-        (0, good),                                   # passes everything
-        (1, "the cat sat"),                          # too few words
-        (2, ("the " + "a " * 60).strip()),           # mean word len < 3
-        (3, good.replace("fox", "fox###########")),  # symbol ratio (#)
-        (4, good.replace("fox", "fox... now...")),   # symbol ratio (...)
-        (5, "\n".join(["- the point here now"] * 20)),  # bullet lines
-        (6, "\n".join(["the line trails off..."] * 20)),  # ellipsis lines
-        (7, ("the " + "123 456 789 " * 20).strip()),  # alpha fraction
-        (8, good.replace("the", "ze").replace("over", "uber")),  # no stops
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r for r in gopher_rules(df, min_words=20,
-                                             min_required_stops=1).collect()}
-    assert out[0].keep is True
-    assert out[1].keep is False and out[1].n_words < 20
-    assert out[2].keep is False and out[2].mean_word_len_micro < 3_000_000
-    assert out[3].keep is False and out[3].symbol_ratio_micro > 100_000
-    assert out[4].keep is False and out[4].symbol_ratio_micro > 100_000
-    assert out[5].keep is False and out[5].bullet_frac_micro == 1_000_000
-    assert out[6].keep is False and out[6].ellipsis_frac_micro == 1_000_000
-    assert out[7].keep is False and out[7].alpha_frac_micro < 800_000
-    assert out[8].keep is False and out[8].n_required_stops == 0
-    # empty corpus edge: typed empty frame, no crash
-    empty = spark.createDataFrame([], "doc_id long, text string")
-    assert gopher_rules(empty).count() == 0

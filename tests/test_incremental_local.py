@@ -220,13 +220,36 @@ def test_materialize_incremental_uses_driver_path_and_stays_equivalent(
 
 def test_pair_cap_falls_back(spark, prior_root, monkeypatch):
     """Exceeding a driver cap mid-path must fall back to the
-    distributed strategy, not fail."""
+    distributed strategy, not fail: the neighborhood cap (hit before
+    ``resolve_local``) and the pair cap (hit inside it). Spies prove
+    the fallback ran, since both paths give equal rows."""
+    from graphiti_spark.operators import incremental as I
     from graphiti_spark.operators import incremental_local as L
     from graphiti_spark.io.tables import TableIO
     from graphiti_spark.operators.extract import extract_mentions, extract_triples
     from graphiti_spark.operators.incremental import incremental_resolve
     from graphiti_spark.synth import synthesize_episodes
     from tests.conftest import SF_SMOKE
+
+    spark_runs = []
+    real_spark_path = I._incremental_resolve_spark
+
+    def spark_path(*args):
+        spark_runs.append(1)
+        return real_spark_path(*args)
+
+    raised = []
+    real_resolve_local = L.resolve_local
+
+    def resolve_local(*args):
+        try:
+            return real_resolve_local(*args)
+        except L.FallbackToSpark:
+            raised.append(1)
+            raise
+
+    monkeypatch.setattr(I, "_incremental_resolve_spark", spark_path)
+    monkeypatch.setattr(L, "resolve_local", resolve_local)
 
     eps = synthesize_episodes(spark, SF_SMOKE)
     bucket = F.pmod(F.xxhash64("doc_id"), F.lit(10)).cast("int")
@@ -239,9 +262,21 @@ def test_pair_cap_falls_back(spark, prior_root, monkeypatch):
         out = incremental_resolve(io, mentions_raw)
     finally:
         L.DRIVER_NEIGHBORHOOD_CAP = orig
+    assert len(spark_runs) == 1, "neighborhood cap did not fall back"
+
+    with monkeypatch.context() as m:
+        m.setattr(L, "DRIVER_PAIR_CAP", 0)  # any candidate pair is over
+        out_pairs = incremental_resolve(io, mentions_raw)
+    assert len(raised) == 1, "resolve_local did not hit the pair cap"
+    assert len(spark_runs) == 2, "pair cap did not fall back"
+
     monkeypatch.setattr(L, "DRIVER_RESOLVE_NAMES_CAP", 0)
     ref = incremental_resolve(io, mentions_raw)
     assert out["metrics"] == ref["metrics"]
     assert sorted(tuple(r) for r in out["uuid_map"].collect()) == sorted(
+        tuple(r) for r in ref["uuid_map"].collect()
+    )
+    assert out_pairs["metrics"] == ref["metrics"]
+    assert sorted(tuple(r) for r in out_pairs["uuid_map"].collect()) == sorted(
         tuple(r) for r in ref["uuid_map"].collect()
     )

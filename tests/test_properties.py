@@ -290,37 +290,6 @@ def test_lsh_md5_planes_recall_and_reproducibility(spark):
     assert hits >= 10  # ≥ 10/12 planted neighbors found at rank 1
 
 
-def test_ivf_topk_probes_find_planted_neighbors(spark):
-    """IVF ANN: a query probing its n_probe nearest centroid buckets
-    finds its true near neighbor (a noisy copy lands in the same or an
-    adjacent bucket); candidates are a fraction of the corpus."""
-    import numpy as np
-
-    from graphiti_spark.operators.docops import ivf_topk, train_ivf_centroids
-
-    rng = np.random.RandomState(3)
-    # 4 well-separated cluster centers, 30 points each
-    centers = rng.randn(4, 24) * 4
-    rows = []
-    i = 0
-    for c in range(4):
-        for _ in range(30):
-            rows.append((i, [float(x) for x in centers[c] + rng.randn(24)]))
-            i += 1
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    queries = spark.createDataFrame(
-        [
-            (f"q{vid}", [float(x) for x in np.asarray(v) + 0.05 * rng.randn(24)])
-            for vid, v in rows[::15]
-        ],
-        "query_id string, query_vec array<double>",
-    )
-    cents = train_ivf_centroids(emb, n_centroids=8, sample_cap=1000)
-    got = ivf_topk(emb, queries, k=1, n_probe=2, centroids=cents).collect()
-    hits = sum(1 for r in got if r.query_id == f"q{r.id}")
-    assert hits >= int(0.9 * queries.count())  # near-perfect top-1 recall
-
-
 @settings(max_examples=60, deadline=None)
 @given(
     st.lists(
@@ -526,73 +495,6 @@ def test_source_cap_partition_invariance_and_determinism(spark):
         assert got == ref, f"repartition({n_parts}) changed the kept set"
 
 
-def test_quantized_topk_recall_vs_fp32(spark):
-    """int8 symmetric scalar quantization (quantize_embeddings /
-    quantized_topk): top-k over quantized vectors must agree with the
-    fp32 brute-force baseline almost everywhere — the 4x byte saving
-    is only a win if ranking survives. On random gaussians int8 cosine
-    error is ~1e-3, so top-10 recall should be near-perfect."""
-    import numpy as np
-
-    from graphiti_spark.operators.docops import (
-        brute_force_topk,
-        quantized_topk,
-    )
-
-    rng = np.random.RandomState(11)
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in rng.randn(32)]) for i in range(200)],
-        "vec_id long, embedding array<double>",
-    )
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    exact = {
-        (r.query_id, r.id)
-        for r in brute_force_topk(emb, queries, k=10).collect()
-    }
-    quant = {
-        (r.query_id, r.id)
-        for r in quantized_topk(emb, queries, k=10).collect()
-    }
-    recall = len(exact & quant) / len(exact)
-    assert recall >= 0.9, f"int8 top-10 recall {recall:.2f}"
-
-
-def test_quantize_embeddings_properties(spark):
-    """Per-vector invariants of the int8 quantizer: (a) components lie
-    in [-127, 127] and the max-|x| component maps to ±127 exactly;
-    (b) dequantization error is bounded by half a quantization step
-    (scale/2); (c) the all-zero vector quantizes to zeros with scale 0
-    instead of dividing by zero."""
-    import numpy as np
-
-    from graphiti_spark.operators.docops import quantize_embeddings
-
-    rng = np.random.RandomState(5)
-    rows = [(i, [float(x) for x in rng.randn(16) * (i + 1)]) for i in range(30)]
-    rows.append((99, [0.0] * 16))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = {r.vec_id: r for r in quantize_embeddings(emb).collect()}
-    orig = dict(rows)
-
-    zero = got[99]
-    assert zero.qvec == [0] * 16 and zero.scale == 0.0
-
-    for vid, r in got.items():
-        if vid == 99:
-            continue
-        x = np.asarray(orig[vid])
-        q = np.asarray(r.qvec)
-        assert int(np.abs(q).max()) == 127
-        assert np.abs(q).max() <= 127
-        # scale is rounded to 9 decimals for oracle parity; allow that
-        # rounding plus the half-step bound
-        step = np.abs(x).max() / 127.0
-        assert np.abs(x - q * step).max() <= step / 2 + 1e-9
-
-
 def test_semantic_dedup_keep_list_wide_ids(spark):
     """vec_ids wider than 9 digits must survive the string zero-pad
     round-trip intact (Spark's lpad TRUNCATES over-width strings — the
@@ -680,111 +582,6 @@ def test_semantic_dedup_keep_list_matches_bruteforce(spark):
         assert sum(flags) == 1 and got[keep][0] == keep
 
 
-def test_lm_perplexity_terciles_and_oov(spark):
-    """lm_perplexity: (a) self-scored corpus buckets into balanced
-    head/middle/tail terciles with head = lowest cross-entropy; (b) a
-    repetitive doc made of the corpus's dominant bigram scores lower
-    cross-entropy than unseen-vocab gibberish; (c) docs with < 2 tokens
-    get NULL score/bucket; (d) scoring against a separate reference
-    corpus exercises the OOV smoothing path (every bigram unseen →
-    per-bigram logprob = ln(alpha/(c1+alpha*V)) bounded by ln(1/V))."""
-    import math
-
-    from graphiti_spark.operators.docops import lm_perplexity
-
-    common = "the cat sat on the mat " * 20
-    rows = [(i, common + f"extra token{i}") for i in range(12)]
-    rows.append((100, "the cat sat on the mat " * 40))  # dominant bigrams only
-    rows.append((101, "zq xv qqj kpw zzv mnb"))   # unseen-pair gibberish
-    rows.append((102, "single"))                  # < 2 tokens
-    rows.append((103, ""))                        # empty
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    out = {r.doc_id: r for r in lm_perplexity(docs).collect()}
-    assert len(out) == len(rows)
-    # (c) degenerate docs: no bigrams, NULL everything
-    for d in (102, 103):
-        r = out[d]
-        assert r.n_bigrams == 0 and r.nll_micro is None
-        assert r.ce_micro is None and r.ppl_bucket is None
-    # (a) terciles balanced over the 14 scored docs and ordered by ce
-    scored = [r for r in out.values() if r.n_bigrams > 0]
-    buckets = {}
-    for r in scored:
-        buckets.setdefault(r.ppl_bucket, []).append(r.ce_micro)
-    assert set(buckets) == {"head", "middle", "tail"}
-    assert max(buckets["head"]) <= min(buckets["middle"])
-    assert max(buckets["middle"]) <= min(buckets["tail"])
-    n = len(scored)
-    assert abs(len(buckets["head"]) - n / 3) <= 1
-    # (b) repetitive-common < gibberish cross-entropy
-    assert out[100].ce_micro < out[101].ce_micro
-    assert out[100].ppl_bucket == "head"
-    assert out[101].ppl_bucket == "tail"
-
-    # (d) train on a disjoint reference: all-OOV scoring stays finite
-    # and bounded by the uniform-smoothing worst case ln(V')
-    ref = spark.createDataFrame(
-        [(0, "alpha beta gamma delta " * 5)], "doc_id long, text string"
-    )
-    oov = {
-        r.doc_id: r
-        for r in lm_perplexity(docs, reference=ref).collect()
-        if r.n_bigrams > 0
-    }
-    v_ref = 4
-    bound = math.log(1 + v_ref) * 1e6 + 1  # ln(alpha*V/alpha)=ln(V), +slack
-    for r in oov.values():
-        assert r.ce_micro is not None
-        assert 0 < r.ce_micro <= bound
-
-
-def test_kmeans_recovers_planted_blobs(spark):
-    """kmeans_clusters on three well-separated planted blobs: (a) the
-    final assignment is exactly the planted partition (every blob maps
-    1:1 to one cluster id); (b) the result is invariant to input
-    partitioning (integer arithmetic has no float-order ambiguity);
-    (c) dist is the exact integer squared distance to the assigned
-    centroid (non-negative, and zero only for a vector equal to its
-    centroid)."""
-    import numpy as np
-
-    from graphiti_spark.operators.docops import kmeans_clusters
-
-    rng = np.random.RandomState(5)
-    centers = [np.full(16, 10.0), np.full(16, -10.0),
-               np.concatenate([np.full(8, 10.0), np.full(8, -10.0)])]
-    rows = []
-    for i in range(90):
-        c = i % 3
-        v = centers[c] + 0.5 * rng.randn(16)
-        rows.append((i, [float(x) for x in v]))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    out = {r.vec_id: r for r in kmeans_clusters(emb, k=3, iters=6).collect()}
-    assert len(out) == 90
-    # (a) cluster PURITY: Lloyd's may hit a local optimum that splits a
-    # blob (two md5 seeds in one blob), but with 20-sigma separation no
-    # converged cluster ever MIXES two blobs
-    cluster_to_blob = {}
-    for i in range(90):
-        b = i % 3
-        cl = out[i].cluster
-        cluster_to_blob.setdefault(cl, b)
-        assert cluster_to_blob[cl] == b, f"cluster {cl} mixes blobs"
-    assert len(cluster_to_blob) >= 2
-    # (c) dist sanity
-    for r in out.values():
-        assert r.dist >= 0
-        assert 0 <= r.cluster < 3
-    # (b) repartition invariance — byte-identical output
-    out2 = {
-        r.vec_id: (r.cluster, r.dist)
-        for r in kmeans_clusters(emb.repartition(7), k=3, iters=6).collect()
-    }
-    assert out2 == {i: (r.cluster, r.dist) for i, r in out.items()}
-
-
 def test_kmv_distinct_accuracy_and_exact_path(spark):
     """KMV sketch: groups with < k distinct values report the EXACT
     count; big groups estimate within the sketch's expected relative
@@ -859,87 +656,3 @@ def test_kmv_empty_input_degenerate(spark):
 
     df = spark.createDataFrame([], "g string, v string")
     assert kmv_distinct(df, "g", F.col("v"), k=8).count() == 0
-
-
-def test_pq_topk_finds_planted_twin_and_is_deterministic(spark):
-    """PQ-ADC scoring must rank a COLLINEAR twin at the top for its
-    query (identical direction survives any quantization — both map to
-    identical codes), and the whole trajectory must be deterministic
-    across physical layouts (the property the bit-exact oracle
-    relies on)."""
-    import numpy as np
-
-    from graphiti_spark.operators.docops import pq_topk
-
-    rng = np.random.RandomState(5)
-    rows = [(i, [float(x) for x in rng.randn(32)]) for i in range(60)]
-    rows.append((500, [2.0 * x for x in rows[0][1]]))  # collinear with 0
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    queries = emb.where(F.col("vec_id") == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    out = pq_topk(emb, queries, m=4, k_codes=8, iters=2, k=5).collect()
-    top = sorted(out, key=lambda r: r.rank)
-    # ids 0 and 500 share codes, so they tie at the query's own top
-    # score and fill ranks 1-2 (tie-break by id)
-    assert {top[0].id, top[1].id} == {0, 500}
-    assert top[0].score == top[1].score
-    again = pq_topk(
-        emb.repartition(7), queries, m=4, k_codes=8, iters=2, k=5
-    ).collect()
-    assert sorted(map(tuple, again)) == sorted(map(tuple, out))
-
-
-def test_pq_topk_validates_and_handles_empty(spark):
-    import pytest
-
-    from graphiti_spark.operators.docops import pq_topk
-
-    emb = spark.createDataFrame(
-        [(1, [1.0, 2.0, 3.0])], "vec_id long, embedding array<double>"
-    )
-    q = emb.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
-    with pytest.raises(ValueError, match="not divisible"):
-        pq_topk(emb, q, m=2)
-    empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    assert pq_topk(empty, q, m=2).count() == 0
-
-
-def test_binary_quantize_pack_exactness(spark):
-    from graphiti_spark.operators.docops import binary_quantize
-
-    df = spark.createDataFrame(
-        [(1, [0.5, -0.2, 0.0, 1.0] + [0.0] * 28 + [2.0])],  # 33 dims
-        "vec_id long, embedding array<double>",
-    )
-    r = binary_quantize(df).collect()[0]
-    # dims 0 and 3 positive → bits 0,3 of word 0; dim 32 → bit 0 of word 1
-    assert r.bvec == [1 + 8, 1]
-    assert r.n_dims == 33
-
-
-def test_hamming_prefilter_candidate_recall(spark):
-    """Binary sign bits are the candidate-generation tier: end-to-end
-    recall of the prefilter+rescore composition equals candidate
-    recall (rescore is exact on the candidate set). Deterministic
-    fixture → exact measured floor, not a statistical bound."""
-    from graphiti_spark.operators.docops import (
-        brute_force_topk,
-        hamming_prefilter_topk,
-    )
-    from pyspark.sql import functions as F
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    q = emb.where(F.col("vec_id") < 8)
-    exact = brute_force_topk(
-        emb, q.selectExpr("vec_id AS query_id", "embedding AS query_vec"), k=10
-    ).collect()
-    got = hamming_prefilter_topk(emb, q, k=10, candidates=100).collect()
-    es, gs = {}, {}
-    for r in exact:
-        es.setdefault(r.query_id, set()).add(r.id)
-    for r in got:
-        gs.setdefault(r.query_id, set()).add(r.id)
-    recalls = [len(gs[qid] & es[qid]) / 10 for qid in es]
-    assert sum(recalls) / len(recalls) >= 0.8
-    assert min(recalls) >= 0.5
