@@ -479,8 +479,7 @@ def materialize_graph(
     try:
         _merge_batch(io, eps, out, restricted, search_indexes)
     finally:
-        for df in (out.triples_raw, out.entities, out.uuid_map):
-            df.unpersist()
+        out.release()
     return io
 
 

@@ -85,12 +85,12 @@ class FallbackToSpark(Exception):
     distributed implementation instead."""
 
 
-def entity_uuid_py(group_id: str, name: str) -> str:
+def entity_uuid_py(group_id: str, name: str | None) -> str:
     """Python mirror of ``schemas.entity_uuid``:
-    sha2('entity|' group '|' lower(name))."""
-    return hashlib.sha256(
-        f"entity|{group_id}|{name.lower()}".encode("utf-8")
-    ).hexdigest()
+    sha2('entity|' group '|' lower(name)); a NULL name is skipped, as
+    ``concat_ws`` skips it."""
+    key = f"entity|{group_id}" if name is None else f"entity|{group_id}|{name.lower()}"
+    return hashlib.sha256(key.encode("utf-8")).hexdigest()
 
 
 def upart_py(uuids: list[str], n_parts: int = 64) -> np.ndarray:

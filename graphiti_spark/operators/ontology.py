@@ -127,13 +127,27 @@ def enrich_nodes_with_stats(
     reference's LLM entity summary (node_operations.py:341-425): the
     deterministic stat sentence is the context; UdfSummarizer rewrites
     it executor-side through any client callable."""
+    counted = nodes.join(
+        stats.withColumnRenamed("entity_uuid", "uuid"), "uuid", "left"
+    )
+    return type_nodes(counted, entity_types, summarizer)
+
+
+def type_nodes(
+    nodes: DataFrame,
+    entity_types: list[EntityType] | None = None,
+    summarizer=None,
+) -> DataFrame:
+    """The typing projection of ``enrich_nodes_with_stats`` over nodes
+    that already carry their ``n_episodes`` (NULL for none): entity
+    type, labels, typed attributes and summary; ``n_episodes`` is
+    dropped. The bulk build's driver path attaches the counts itself
+    and runs only this, over a local relation."""
     from ..functions.summarize import DeterministicSummarizer
 
     summarizer = summarizer or DeterministicSummarizer()
     types = DEFAULT_ENTITY_TYPES if entity_types is None else entity_types
-    typed = nodes.join(
-        stats.withColumnRenamed("entity_uuid", "uuid"), "uuid", "left"
-    ).withColumn("entity_type", classify(F.col("name"), types))
+    typed = nodes.withColumn("entity_type", classify(F.col("name"), types))
     return (
         typed.withColumn(
             "labels",

@@ -87,6 +87,13 @@ def pair_key(src: Column, dst: Column) -> Column:
     return F.concat_ws("~", F.least(src, dst), F.greatest(src, dst))
 
 
+def expiry(batch_time: str) -> Column:
+    """T3: an edge with an ``invalid_at`` expires at the batch time."""
+    return F.when(
+        F.col("invalid_at").isNotNull(), F.lit(batch_time).cast("timestamp")
+    )
+
+
 def resolve_bitemporal(edges: DataFrame, batch_time: str = corpus.BATCH_TIME) -> DataFrame:
     """Apply T1/T2/T3 to a deduplicated edges DataFrame.
 
@@ -116,14 +123,7 @@ def resolve_bitemporal(edges: DataFrame, batch_time: str = corpus.BATCH_TIME) ->
     out = (
         out.withColumn("invalid_at", F.least(F.col("invalid_at"), F.col("next_valid_at")))
         .withColumn(
-            "expired_at",
-            F.coalesce(
-                F.col("expired_at"),
-                F.when(
-                    F.col("invalid_at").isNotNull(),
-                    F.lit(batch_time).cast("timestamp"),
-                ),
-            ),
+            "expired_at", F.coalesce(F.col("expired_at"), expiry(batch_time))
         )
         .drop("pair", "pred_class", "next_valid_at")
     )

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from graphiti_spark.io.tables import TableIO
 from graphiti_spark.materialize import materialize_graph, with_part
 from graphiti_spark.synth import synthesize_episodes
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, n_cached_plans
 
 
 def _table_fingerprint(io: TableIO, name: str):
@@ -288,16 +288,6 @@ def test_two_default_calls_equal_one_global_build(spark, tmp_path_factory):
         assert sorted(s for ss in seqs for s in ss) == list(range(n_calls))
 
 
-def _n_cached_plans(spark) -> int:
-    """Entry count of the session's CacheManager (every
-    DataFrame.cache/persist registers one). The JVM keeps the list
-    private, so it is read by reflection."""
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    field = cm.getClass().getDeclaredField("cachedData")
-    field.setAccessible(True)
-    return field.get(cm).size()
-
-
 def test_materialize_releases_cached_frames(spark, episodes, tmp_path_factory):
     """A bootstrap materialize_graph plus a restricted add_episodes
     leave the session's cache as they found it: the frames
@@ -306,13 +296,13 @@ def test_materialize_releases_cached_frames(spark, episodes, tmp_path_factory):
 
     d = str(tmp_path_factory.mktemp("uncache"))
     eps_p = with_part(episodes)
-    before = _n_cached_plans(spark)
+    before = n_cached_plans(spark)
     materialize_graph(spark, eps_p.where(F.col("part") < 16).drop("part"), d)
-    assert _n_cached_plans(spark) == before
+    assert n_cached_plans(spark) == before
     g = GraphitiSpark(spark, d)
     assert g.io.exists("entity_bands")  # the next call takes the restricted path
     g.add_episodes(eps_p.where(F.col("part") >= 16).drop("part"))
-    assert _n_cached_plans(spark) == before
+    assert n_cached_plans(spark) == before
 
 
 def test_partition_scoped_merge_upsert(spark, tmp_path_factory):

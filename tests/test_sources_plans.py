@@ -70,14 +70,18 @@ def test_temporal_plan_has_no_python(spark):
     scan_summary(resolve_bitemporal(e)).assert_no_python()
 
 
-def test_mentions_dedup_hash_aggregates(spark):
+def test_mentions_dedup_hash_aggregates(spark, monkeypatch):
     """The MENTIONS dedup is a 4-column distinct so it compiles to a
     HashAggregate with a map-side partial; dropDuplicates([doc_id,
     entity_uuid]) would carry first(name) string payloads whose agg
     buffer is not hash-aggregable, forcing SortAggregate = two full
-    sorts of the pre-dedup mention set (~3 rows per triple)."""
+    sorts of the pre-dedup mention set (~3 rows per triple). The
+    triples cap is set to 0 so that the graph stages run in Spark, as
+    they do above it; under it the mentions are a local relation."""
+    from graphiti_spark.operators import local_graph
     from graphiti_spark.pipeline import run_on_sf
 
+    monkeypatch.setattr(local_graph, "DRIVER_GRAPH_TRIPLES_CAP", 0)
     out = run_on_sf(spark, SF_SMOKE)
     plan = out.mentions._jdf.queryExecution().executedPlan().toString()
     assert "SortAggregate" not in plan.split("SortMergeJoin")[0], (
