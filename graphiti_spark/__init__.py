@@ -24,15 +24,12 @@ Layout
                  plus the invalidation stage bulk mode omits).
 - ``io``         TableIO: MERGE-INTO-semantics persistence on parquet
                  (partition-scoped merges, dynamic partition overwrite,
-                 append — the Iceberg-commit stand-ins); SnapshotStore:
-                 versioned manifests with time travel, rollback,
-                 snapshot expiry, and compaction.
+                 append — the Iceberg-commit stand-ins).
 - ``materialize``  O(batch) incremental graph merges + lineage/metrics
                  + the episode_edges / node_stats derived tables.
 - ``search_api`` 4-lane hybrid search, the full recipe set, batched
                  multi-query variants, pluggable CrossEncoder.
-- ``streaming``  foreachBatch incremental ingest + the stateful
-                 context-window operator (applyInPandasWithState).
+- ``streaming``  foreachBatch incremental ingest.
 - ``graphiti``   GraphitiSpark: the reference's top-level class as a
                  facade over one graph root.
 """
@@ -53,7 +50,6 @@ def __getattr__(name):
         "synthesize_episodes": ("graphiti_spark.synth", "synthesize_episodes"),
         "read_episodes": ("graphiti_spark.sources.episodes", "read_episodes"),
         "TableIO": ("graphiti_spark.io.tables", "TableIO"),
-        "SnapshotStore": ("graphiti_spark.io.snapshots", "SnapshotStore"),
         "SearchIndex": ("graphiti_spark.operators.search", "SearchIndex"),
         "RECIPES": ("graphiti_spark.search_api", "RECIPES"),
         "GraphitiSpark": ("graphiti_spark.graphiti", "GraphitiSpark"),

@@ -310,11 +310,9 @@ def merge_near_duplicate_facts(
     earliest edge by (created_at, uuid) (the reference's 'existing edge
     wins'); its predicate/fact/uuid are kept and provenance is unioned.
 
-    Not wired into the default pipeline: the deterministic extractor
+    Not wired into the pipeline: the deterministic extractor
     regenerates fact text from canonical names, so exact triple dedup
-    already collapses surface variants there. Enable (run_pipeline
-    ``near_dup_fact_threshold``) when a pluggable extractor emits
-    varied predicate/fact surface forms for one semantic fact.
+    already collapses surface variants there.
 
     Scale shape: the pairwise comparison runs per (group, pair) Arrow
     batch; pair groups are small by construction (facts per entity

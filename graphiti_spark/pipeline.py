@@ -32,22 +32,21 @@ to the next; all three give the same schemas and rows
 1. Whole graph on the driver: at most
    ``local_graph.DRIVER_GRAPH_TRIPLES_CAP`` raw triples, at most
    ``incremental_local.DRIVER_RESOLVE_NAMES_CAP`` distinct surface
-   forms, LSH candidates within ``DRIVER_PAIR_CAP``, and no
-   near-duplicate fact merge. ``triples_raw`` and ``mentions_raw`` are
-   collected once each through Arrow; resolution runs in the kernel
-   micro-batches use (LSH banding, Jaro-Winkler + trigram cosine,
-   union-find, canonical pick), and the pointer rewrite, edge dedup,
-   bi-temporal invalidation, mentions and episode counts run in
-   operators/local_graph.py. Every resolved frame is a local relation
-   that the Spark path's own column expressions (fact text, uuids,
-   timestamps, ontology typing) finish on the driver: after the
-   extraction no shuffle, aggregate, window or join runs, and a build
-   drained table by table is 8 Spark jobs.
-2. Driver resolution, graph stages in Spark: more raw triples (or a
-   near-duplicate fact merge), names still under the caps. One
-   distinct (group_id, name) probe feeds the same kernel; ``uuid_map``,
-   ``entities``, ``duplicates`` and the embedded canonical nodes are
-   local relations, and the DAG above runs in Spark from J1 on.
+   forms and LSH candidates within ``DRIVER_PAIR_CAP``. ``triples_raw``
+   and ``mentions_raw`` are collected once each through Arrow;
+   resolution runs in the kernel micro-batches use (LSH banding,
+   Jaro-Winkler + trigram cosine, union-find, canonical pick), and the
+   pointer rewrite, edge dedup, bi-temporal invalidation, mentions and
+   episode counts run in operators/local_graph.py. Every resolved frame
+   is a local relation that the Spark path's own column expressions
+   (fact text, uuids, timestamps, ontology typing) finish on the
+   driver: after the extraction no shuffle, aggregate, window or join
+   runs, and a build drained table by table is 8 Spark jobs.
+2. Driver resolution, graph stages in Spark: more raw triples, names
+   still under the caps. One distinct (group_id, name) probe feeds the
+   same kernel; ``uuid_map``, ``entities``, ``duplicates`` and the
+   embedded canonical nodes are local relations, and the DAG above
+   runs in Spark from J1 on.
 3. Distributed: the LSH self-join, scoring UDFs and components, with
    ``hash_embed_udf`` embedding the nodes.
 
@@ -186,12 +185,14 @@ def _mention_uuid() -> Column:
     )
 
 
-def dedupe_edges(resolved_triples: DataFrame) -> DataFrame:
+def dedupe_edges(
+    resolved_triples: DataFrame, batch_time: str = corpus.BATCH_TIME
+) -> DataFrame:
     """D8: one edge per (group, src, predicate, dst, valid_at); episode
     provenance unioned (reference keeps the existing edge uuid and
     appends episodes, edge_operations.py:460-469). The fact text is
     regenerated from canonical names so a merged edge has ONE
-    deterministic surface form.
+    deterministic surface form; ``created_at`` is ``batch_time``.
 
     Provenance collection is SALTED two-phase (functions/skew.py): a
     hot entity's triples concentrate a large share of all docs onto a
@@ -209,7 +210,7 @@ def dedupe_edges(resolved_triples: DataFrame) -> DataFrame:
     ).withColumnRenamed("doc_ids", "episodes").drop("n_doc_ids")
     return (
         g.withColumn("fact", fact_col())
-        .withColumn("created_at", _batch_ts(corpus.BATCH_TIME))
+        .withColumn("created_at", _batch_ts(batch_time))
         .withColumn("attributes", edge_attributes_col("predicate"))
     )
 
@@ -381,7 +382,7 @@ def _graph_on_driver(
         "group_id", "valid_at", "source_node_uuid", "predicate",
         "target_node_uuid", "episodes", "subj_name", "obj_name",
         fact_col().alias("fact"),
-        _batch_ts(corpus.BATCH_TIME).alias("created_at"),
+        _batch_ts(batch_time).alias("created_at"),
         edge_attributes_col("predicate").alias("attributes"),
         "invalid_at",
         expiry(batch_time).alias("expired_at"),
@@ -424,7 +425,6 @@ def _graph_in_spark(
     nodes_base: DataFrame,
     batch_time: str,
     entity_types,
-    near_dup_fact_threshold: float | None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Paths 2 and 3's edges, mentions and nodes: pointer rewrite (J1),
     edge dedup (D8), bi-temporal invalidation (T1-T3), mentions and
@@ -445,17 +445,9 @@ def _graph_in_spark(
     # reference drops src==dst pairs, bulk_utils.py:469-471).
     resolved = resolved.where(F.col("source_node_uuid") != F.col("target_node_uuid"))
 
-    deduped = dedupe_edges(resolved)
-    if near_dup_fact_threshold is not None:
-        from .operators.resolve import merge_near_duplicate_facts
-
-        deduped = merge_near_duplicate_facts(
-            deduped.withColumn("uuid", _edge_uuid()),
-            threshold=near_dup_fact_threshold,
-        ).drop("uuid")
-    edges = resolve_bitemporal(deduped, batch_time=batch_time).withColumn(
-        "uuid", _edge_uuid()
-    )
+    edges = resolve_bitemporal(
+        dedupe_edges(resolved, batch_time), batch_time=batch_time
+    ).withColumn("uuid", _edge_uuid())
 
     # MENTIONS episodic edges: episode × canonical entity, distinct
     # (reference build_episodic_edges, edge_operations.py:46-63).
@@ -497,7 +489,6 @@ def run_pipeline(
     extra_entity_names: DataFrame | None = None,
     entity_types=None,
     excluded_entity_types: list[str] | None = None,
-    near_dup_fact_threshold: float | None = None,
     resolver=None,
 ) -> GraphOutput:
     """Episodes → graph. A global build (no ``resolver``) takes the
@@ -507,11 +498,10 @@ def run_pipeline(
        ``local_graph.DRIVER_GRAPH_TRIPLES_CAP`` raw triples (one Arrow
        collect of ``triples_raw`` and one of ``mentions_raw``), its
        surface forms fit ``DRIVER_RESOLVE_NAMES_CAP`` and their LSH
-       candidates ``DRIVER_PAIR_CAP``, and ``near_dup_fact_threshold``
-       is None. Every resolved frame is a local relation;
-    2. driver resolution, graph stages in Spark: more raw triples, or a
-       near-duplicate fact merge, with the names under the caps (one
-       distinct (group_id, name) probe);
+       candidates ``DRIVER_PAIR_CAP``. Every resolved frame is a local
+       relation;
+    2. driver resolution, graph stages in Spark: more raw triples, with
+       the names under the caps (one distinct (group_id, name) probe);
     3. distributed resolution and graph stages.
 
     All three give the same schemas and rows
@@ -529,13 +519,6 @@ def run_pipeline(
     (operators/ontology.py) — excluded types are dropped post-
     classification, before resolution (P6), in Spark, before any
     collect.
-
-    ``near_dup_fact_threshold``: enable fact-embedding near-duplicate
-    edge merging within endpoint-pair groups (D6/D8 LLM judgment,
-    reference search_utils.py:781-848 / edge_operations.py:460-469 —
-    see operators/resolve.merge_near_duplicate_facts). Off by default:
-    the deterministic extractor regenerates fact text, so exact triple
-    dedup already collapses surface variants.
 
     ``resolver``: optional callable ``mentions_raw -> (uuid_map,
     entities)`` replacing the global resolution front-end (distinct →
@@ -587,20 +570,19 @@ def run_pipeline(
             mention_names = mention_names.unionByName(
                 extra_entity_names.select("group_id", "name")
             )
-        triples = mention_rows = None
-        if near_dup_fact_threshold is None:
-            cap = G.DRIVER_GRAPH_TRIPLES_CAP
-            triples = _collect(
-                triples_raw,
-                ["doc_id", "group_id", "subj_name", "predicate", "obj_name", "valid_at"],
-                cap,
+        cap = G.DRIVER_GRAPH_TRIPLES_CAP
+        triples = _collect(
+            triples_raw,
+            ["doc_id", "group_id", "subj_name", "predicate", "obj_name", "valid_at"],
+            cap,
+        )
+        mention_rows = None
+        if triples is not None:
+            # three mentions per triple at most, and fewer once the
+            # trim (or an exclusion) filter has run
+            mention_rows = _collect(
+                mentions_raw, ["doc_id", "group_id", "name"], 3 * cap
             )
-            if triples is not None:
-                # three mentions per triple at most, and fewer once the
-                # trim (or an exclusion) filter has run
-                mention_rows = _collect(
-                    mentions_raw, ["doc_id", "group_id", "name"], 3 * cap
-                )
         if mention_rows is not None and extra_entity_names is None:
             forms = {(g, n) for _d, g, n in mention_rows}
         else:
@@ -649,7 +631,7 @@ def run_pipeline(
     if graph is None:
         graph = _graph_in_spark(
             triples_raw, mentions_raw, uuid_map, nodes_base, batch_time,
-            entity_types, near_dup_fact_threshold,
+            entity_types,
         )
     edges, mentions, nodes = graph
     return GraphOutput(

@@ -150,6 +150,35 @@ def _iso(v) -> str | None:
     return str(v)
 
 
+# (check, wording) per request field. The endpoints check field types
+# only, before the graph is touched, so a malformed body is a 400.
+_STRING = (lambda v: isinstance(v, str), "a string")
+_STRING_OR_NULL = (lambda v: v is None or isinstance(v, str), "a string or null")
+_INT = (lambda v: isinstance(v, int) and not isinstance(v, bool), "an integer")
+_LIST = (lambda v: isinstance(v, list), "a list")
+_STRINGS_OR_NULL = (
+    lambda v: v is None or (isinstance(v, list) and all(isinstance(x, str) for x in v)),
+    "a list of strings or null",
+)
+_MESSAGES = (
+    lambda v: isinstance(v, list)
+    and all(isinstance(m, dict) and isinstance(m.get("content"), str) for m in v),
+    "a list of objects with a string content",
+)
+
+
+def _body_error(body, required: dict, optional: dict | None = None) -> str | None:
+    """Why ``body`` is not a JSON object whose ``required`` fields, and
+    whichever ``optional`` fields it has, pass their (check, wording)
+    pairs; None when it is."""
+    if not isinstance(body, dict):
+        return "the body must be a JSON object"
+    for name, (ok, what) in {**required, **(optional or {})}.items():
+        if (name in required or name in body) and not ok(body.get(name)):
+            return f"{name} must be {what}"
+    return None
+
+
 def _fact_result(row) -> dict:
     """dto/retrieve.py:16-27 FactResult from an edges-table row."""
     return {
@@ -250,6 +279,9 @@ def create_app(graph, worker: IngestWorker | None = None):
     worker.start()
     app.extensions["ingest_worker"] = worker
 
+    def bad_request(message: str):
+        return jsonify({"message": message, "success": False}), 400
+
     @app.get("/healthcheck")
     def healthcheck():
         return jsonify({"status": "healthy"})
@@ -259,14 +291,10 @@ def create_app(graph, worker: IngestWorker | None = None):
     @app.post("/messages")
     def add_messages():
         body = request.get_json(force=True)
-        if not isinstance(body, dict) or not isinstance(body.get("group_id"), str):
-            return jsonify({"message": "group_id must be a string",
-                            "success": False}), 400
-        group_id = body["group_id"]
-        messages = body.get("messages")
-        if not isinstance(messages, list):
-            return jsonify({"message": "messages must be a list",
-                            "success": False}), 400
+        error = _body_error(body, {"group_id": _STRING, "messages": _LIST})
+        if error:
+            return bad_request(error)
+        group_id, messages = body["group_id"], body["messages"]
 
         def job(msgs=messages):
             eps = episodes_frame_from_messages(graph.spark, group_id, msgs)
@@ -285,6 +313,12 @@ def create_app(graph, worker: IngestWorker | None = None):
     @app.post("/entity-node")
     def add_entity_node():
         body = request.get_json(force=True)
+        error = _body_error(
+            body, {"group_id": _STRING, "name": _STRING},
+            {"summary": _STRING_OR_NULL},
+        )
+        if error:
+            return bad_request(error)
         # synchronous write endpoints take the same lock the queue
         # drain holds per job — one graph writer at a time
         with worker.write_lock:
@@ -330,14 +364,26 @@ def create_app(graph, worker: IngestWorker | None = None):
     @app.post("/search")
     def search():
         body = request.get_json(force=True)
+        error = _body_error(
+            body, {"query": _STRING},
+            {"group_ids": _STRINGS_OR_NULL, "max_facts": _INT},
+        )
+        if error:
+            return bad_request(error)
         facts = _run_search(
-            body["query"], body.get("group_ids"), int(body.get("max_facts", 10))
+            body["query"], body.get("group_ids"), body.get("max_facts", 10)
         )
         return jsonify({"facts": facts})
 
     @app.post("/get-memory")
     def get_memory():
         body = request.get_json(force=True)
+        error = _body_error(
+            body, {"group_id": _STRING, "messages": _MESSAGES},
+            {"max_facts": _INT, "center_node_uuid": _STRING_OR_NULL},
+        )
+        if error:
+            return bad_request(error)
         combined = "".join(
             f"{m.get('role_type') or ''}({m.get('role') or ''}): {m['content']}\n"
             for m in body["messages"]
@@ -345,7 +391,7 @@ def create_app(graph, worker: IngestWorker | None = None):
         facts = _run_search(
             combined,
             [body["group_id"]],
-            int(body.get("max_facts", 10)),
+            body.get("max_facts", 10),
             center_uuid=body.get("center_node_uuid"),
         )
         return jsonify({"facts": facts})

@@ -283,6 +283,26 @@ def test_paths_identical_with_excluded_entity_types(spark, monkeypatch):
     assert "Alice" not in names and "Acme Corp" in names
 
 
+def test_paths_stamp_the_build_batch_time(spark, monkeypatch):
+    """Every frame a build stamps carries the build's ``batch_time``:
+    edges, nodes, mentions and duplicates are created at it, and an
+    invalidated edge expires at it, on all three paths."""
+    batch_time = "2026-03-04 05:06:07"
+    stamp = dt.datetime(2026, 3, 4, 5, 6, 7)
+    got = _all_paths(
+        spark, monkeypatch, _episodes(spark, NEAR_DUPS + CONTRADICTIONS),
+        batch_time=batch_time,
+    )
+    _assert_identical(got)
+    for name in ("edges", "nodes", "mentions", "duplicates"):
+        for path, (schema, rows) in zip(PATHS, got[name]):
+            i = schema.fieldNames().index("created_at")
+            assert rows and {r[i] for r in rows} == {stamp}, f"{name}, {path}"
+    schema, rows = got["edges"][0]
+    inv, exp = (schema.fieldNames().index(f) for f in ("invalid_at", "expired_at"))
+    assert {r[exp] for r in rows if r[inv] is not None} == {stamp}
+
+
 def test_local_frame_keeps_schema_when_empty(spark):
     from graphiti_spark.session import local_frame
 

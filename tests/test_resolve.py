@@ -303,27 +303,6 @@ def test_merge_near_duplicate_facts(spark):
     assert out["e3"].episodes == ["d4"]
 
 
-def test_pipeline_near_dup_wiring_preserves_edges(spark):
-    """run_pipeline(near_dup_fact_threshold=...) routes edges through the
-    near-dup merge; with a near-1 threshold (and the deterministic
-    extractor emitting one surface form per fact) the output is
-    byte-identical to the default path — the Arrow round-trip through
-    applyInPandas loses nothing."""
-    from graphiti_spark.pipeline import run_pipeline
-    from graphiti_spark.synth import synthesize_episodes
-    from tests.conftest import SF_SMOKE
-
-    eps = synthesize_episodes(spark, SF_SMOKE)
-    base = run_pipeline(spark, eps)
-    routed = run_pipeline(spark, eps, near_dup_fact_threshold=0.999999)
-    cols = sorted(base.edges.columns)
-
-    def fp(df):
-        return sorted(tuple(str(v) for v in r) for r in df.select(*cols).collect())
-
-    assert fp(base.edges) == fp(routed.edges)
-
-
 def test_get_relevant_nodes_hybrid_semantics(spark):
     """J2 full parity (search_utils.py:686-746): vector lane = cosine
     > min_score top-limit; fulltext lane = BM25 matches; group-scoped;

@@ -217,21 +217,35 @@ def test_ingest_job_error_is_recorded_not_raised(served):
     assert client.get("/healthcheck").status_code == 200
 
 
-def test_malformed_messages_body_is_400_and_queues_nothing():
+def test_malformed_bodies_are_400_and_queue_nothing():
     # the rejected bodies never reach the graph, so none is needed
     app = create_app(graph=None)
     app.config.update(TESTING=True)
     client = app.test_client()
     worker = app.extensions["ingest_worker"]
-    for body in (
-        {"messages": _messages(0, 1)},           # no group_id
-        {"group_id": 7, "messages": []},         # group_id not a string
-        {"group_id": "g0"},                      # no messages
-        {"group_id": "g0", "messages": "hi"},    # messages not a list
-        ["g0"],                                  # not an object
+    for path, body in (
+        ("/messages", {"messages": _messages(0, 1)}),         # no group_id
+        ("/messages", {"group_id": 7, "messages": []}),       # group_id not a string
+        ("/messages", {"group_id": "g0"}),                    # no messages
+        ("/messages", {"group_id": "g0", "messages": "hi"}),  # messages not a list
+        ("/messages", ["g0"]),                                # not an object
+        ("/search", {}),                                      # no query
+        ("/search", {"query": "x", "max_facts": "ten"}),      # max_facts not an int
+        ("/search", {"query": "x", "max_facts": True}),       # a bool is no count
+        ("/search", {"query": "x", "group_ids": "g0"}),       # group_ids not a list
+        ("/search", {"query": "x", "group_ids": [7]}),        # group id not a string
+        ("/search", ["q"]),                                   # not an object
+        ("/get-memory", {"group_id": "g0"}),                  # no messages
+        ("/get-memory", {"group_id": "g0", "messages": [{"role": "u"}]}),  # no content
+        ("/get-memory", {"messages": []}),                    # no group_id
+        ("/get-memory", {"group_id": "g0", "messages": [], "max_facts": "5"}),
+        ("/get-memory", {"group_id": "g0", "messages": [], "center_node_uuid": 5}),
+        ("/entity-node", {"name": "A"}),                      # no group_id
+        ("/entity-node", {"group_id": "g0", "name": 7}),      # name not a string
+        ("/entity-node", {"group_id": "g0", "name": "A", "summary": 3}),
     ):
-        r = client.post("/messages", json=body)
-        assert r.status_code == 400, body
+        r = client.post(path, json=body)
+        assert r.status_code == 400, (path, body)
         assert r.get_json()["success"] is False
     assert worker.queue.unfinished_tasks == 0 and worker.processed == 0
     worker.stop()

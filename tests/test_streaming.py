@@ -44,56 +44,3 @@ def test_stream_matches_batch(spark, tmp_path_factory):
     for t in TABLES:
         assert _fingerprint(spark, batch_dir, t) == _fingerprint(spark, out_dir, t), t
 
-
-def test_stateful_context_window_matches_batch(spark, tmp_path_factory):
-    """applyInPandasWithState context windows: per-group state carries
-    the trailing episode window across micro-batches; with arrival
-    order == event order the result equals the batch window op
-    (J10, operators/maintenance.with_previous_episode_context)."""
-    from graphiti_spark.operators.maintenance import with_previous_episode_context
-    from graphiti_spark.streaming.stateful import stream_context_windows
-    from graphiti_spark.synth import synthesize_episodes
-    from tests.conftest import SF_SMOKE
-
-    eps = synthesize_episodes(spark, SF_SMOKE).select(
-        "doc_id", "group_id", "valid_at", "spans"
-    )
-    # two files in global valid_at order → arrival order == event order
-    ordered = eps.orderBy("valid_at", "doc_id").collect()
-    half = len(ordered) // 2
-    in_dir = str(tmp_path_factory.mktemp("ctx_in"))
-    import os
-
-    schema = eps.schema
-    for i, chunk in enumerate((ordered[:half], ordered[half:])):
-        spark.createDataFrame(chunk, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(in_dir, f"batch{i}"))
-    # the file source reads a flat dir; move part files up
-    flat = str(tmp_path_factory.mktemp("ctx_flat"))
-    n = 0
-    for i in range(2):
-        d = os.path.join(in_dir, f"batch{i}")
-        for f in sorted(os.listdir(d)):
-            if f.endswith(".parquet"):
-                os.rename(
-                    os.path.join(d, f), os.path.join(flat, f"{i:02d}-{n}.parquet")
-                )
-                n += 1
-
-    out_dir = str(tmp_path_factory.mktemp("ctx_out"))
-    ck = str(tmp_path_factory.mktemp("ctx_ck"))
-    q = stream_context_windows(
-        spark, flat, out_dir, ck, max_files_per_trigger=1
-    )
-    q.awaitTermination(120)
-
-    got = {
-        r.doc_id: list(r.previous_episode_ids)
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    expect = {
-        r.doc_id: list(r.previous_episode_ids)
-        for r in with_previous_episode_context(eps).collect()
-    }
-    assert got == expect
